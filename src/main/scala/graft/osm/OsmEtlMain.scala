@@ -8,8 +8,16 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.osm.OsmEtlMain <input.osm> <outDir>
   */
 object OsmEtlMain {
-  def main(args: Array[String]): Unit = {
-    val Array(osmPath, outDir) = args
+  val Usage = "Usage: graft.osm.OsmEtlMain <input.osm> <outDir>"
+
+  def main(args: Array[String]): Unit = args match {
+    case Array(osmPath, outDir) => run(osmPath, outDir)
+    case _ =>
+      System.err.println(Usage)
+      sys.exit(2)
+  }
+
+  private def run(osmPath: String, outDir: String): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -41,21 +41,22 @@ object EventStreams {
         col("session_window.end").as("session_end"),
         col("n_events"))
 
-  /** File-source stream over any parquet table (schema probed batch-side).
-    * `maxFilesPerTrigger` bounds per-micro-batch work at scale. */
+  /** File-source stream over any parquet table (schema from the batch-side
+    * relation cache, `Tables.parquet`: no inference job once the path has
+    * been resolved in this session). `maxFilesPerTrigger` bounds
+    * per-micro-batch work at scale. */
   def readParquetStream(spark: SparkSession, dir: String): DataFrame = {
     // events fixtures carry TIMESTAMP(NANOS) — see Tables.t
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // FileStreamSource requires a directory or glob; a single-file fixture
     // path is wrapped in a {name} glob so its parent becomes the basePath.
     // Glob metacharacters in the file name are escaped, otherwise a name
-    // like part-[0].parquet silently matches nothing (or the wrong files)
-    // — and the batch schema probe below globs the path the same way.
+    // like part-[0].parquet silently matches nothing (or the wrong files).
     val f = new java.io.File(dir)
     val path =
-      if (f.isFile) s"${f.getParent}/{${f.getName.replaceAll("([{}\\[\\]*?,\\\\])", "\\\\$1")}}"
+      if (f.isFile) s"${f.getParent}/{${graft.Tables.escapeGlob(f.getName)}}"
       else dir
-    val schema = spark.read.parquet(path).schema
+    val schema = graft.Tables.parquet(spark, dir).schema
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(path)

@@ -141,4 +141,14 @@ class OsmIngestSpec extends SparkTestBase {
     val nodeTags = OsmCsv.read(spark, s"$out/node_tags", OsmModel.tagsSchema)
     assert(nodeTags.count() === 5)
   }
+
+  test("OsmEtlMain with the wrong number of arguments prints its usage " +
+    "and exits non-zero") {
+    for (args <- Seq(Seq(), Seq("only.osm"), Seq("a.osm", "out", "extra"))) {
+      val r = ChildJvm.run("graft.osm.OsmEtlMain", args: _*)
+      assert(r.exitCode !== 0, args)
+      assert(r.err.contains(graft.osm.OsmEtlMain.Usage), r.err)
+      assert(!r.err.contains("MatchError"), r.err)
+    }
+  }
 }

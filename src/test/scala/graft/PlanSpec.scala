@@ -32,6 +32,41 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("SortMergeJoin"), p)
   }
 
+  test("q01/q07/q09/q04: reads through the Tables relation cache plan " +
+    "the same scans and joins as fresh reads") {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val scanOrJoin = "FileScan parquet|BroadcastHashJoin|SortMergeJoin|" +
+      "ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct"
+    // the executed plan's scans (DataFilters, PushedFilters, ReadSchema)
+    // and join nodes (strategy, join type, build side), expression and
+    // plan ids stripped — they differ between any two builds
+    def facts(df: DataFrame): Seq[String] =
+      planOf(df).linesIterator
+        .filter(l => scanOrJoin.r.findFirstIn(l).isDefined)
+        .map(_.replaceAll("#\\d+L?|\\[plan_id=\\d+\\]|\\*\\(\\d+\\)", "").trim)
+        .toSeq
+    def relations(df: DataFrame) =
+      df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+    for (name <- Seq("q01_scan_filter_project", "q07_join_star",
+        "q09_join_anti", "q04_distinct_union")) {
+      // a new session has resolved nothing: its first build reads every
+      // table fresh, its second is served from the cache
+      val s = spark.newSession()
+      val fresh = SparkEntry.queries(name)(s, Sf)
+      val cached = SparkEntry.queries(name)(s, Sf)
+      // the second build was served from the cache, not re-read
+      val (rf, rc) = (relations(fresh), relations(cached))
+      assert(rf.nonEmpty && rc.size == rf.size, name)
+      assert(rc.zip(rf).forall { case (a, b) => a eq b }, name)
+      val (f, c) = (facts(fresh), facts(cached))
+      assert(f.exists(_.contains("PushedFilters: [")), s"$name\n$f")
+      assert(c === f, name)
+    }
+    val q07 = facts(q("q07_join_star"))
+    assert(q07.count(_.contains("BroadcastHashJoin")) >= 2, q07)
+    assert(facts(q("q09_join_anti")).exists(_.contains("LeftAnti")))
+  }
+
   test("q05: top-k plans as TakeOrderedAndProject, not a full sort") {
     val p = planOf(q("q05_group_topk"))
     assert(p.contains("TakeOrderedAndProject"), p)
