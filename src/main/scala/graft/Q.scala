@@ -32,28 +32,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Q(
     name: String,
     oracle: Option[String])(
-    val run: (SparkSession, String) => DataFrame,
-    val benchRun: Option[(SparkSession, String) => DataFrame] = None) {
-
-  /** Body Bench times: identical semantics to [[run]], but allowed to read
-    * expensive fixture inputs from a pre-materialized cache so the timed
-    * number reflects the OPERATOR (scan + decode + agg), not per-run
-    * fixture synthesis. Verify always gates [[run]], and MultimodalSpec
-    * asserts the two bodies return identical rows. */
-  def bench: (SparkSession, String) => DataFrame = benchRun.getOrElse(run)
-}
+    val run: (SparkSession, String) => DataFrame)
 
 object Q {
   def apply(name: String, oracle: String)(
       run: (SparkSession, String) => DataFrame): Q =
     Q(name, Some(materializeSharedCtes(oracle)))(run)
-
-  /** A query whose bench body differs from its gated body (fixture
-    * pre-materialization); semantics MUST be identical. */
-  def withBench(name: String, oracle: String)(
-      run: (SparkSession, String) => DataFrame)(
-      benchRun: (SparkSession, String) => DataFrame): Q =
-    Q(name, Some(materializeSharedCtes(oracle)))(run, Some(benchRun))
 
   // group 1 = a `WINDOW ` prefix when the match is a named-window
   // definition (`WINDOW w AS (...)`) rather than a CTE — those must

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path}
 
 /** Session-scoped temp directories with RELIABLE cleanup: `deleteOnExit`
   * only removes a directory inode if it is empty, so a dir that receives
-  * parquet/ORC output is never reclaimed — repeated bench/verify cycles
+  * parquet/ORC output is never reclaimed — repeated runs
   * would steadily fill /tmp. Directories created here are recursively
   * deleted by one JVM shutdown hook. */
 object TempDirs {

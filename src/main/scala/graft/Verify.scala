@@ -2,17 +2,31 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. The optional
+  * third argument restricts the dump (and oracle_sql.json) to the named
+  * queries; an unknown name is refused, since an empty dump would
+  * compare as a silent 0 pass, 0 fail. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
-    // optional third arg (dev only): comma-separated query-name filter,
-    // or --sql-only to refresh oracle_sql.json without recomputing the
-    // (unchanged) Spark parquet dump
-    val sqlOnly = args.length > 2 && args(2) == "--sql-only"
-    val only: Option[Set[String]] =
-      if (args.length > 2 && !sqlOnly) Some(args(2).split(",").toSet)
-      else None
+  val Usage = "Usage: graft.Verify <sfDir> <outDir> [name,name,...]"
+
+  def main(args: Array[String]): Unit = args match {
+    case Array(sfDir, outDir) => run(sfDir, outDir, None)
+    case Array(sfDir, outDir, names) =>
+      val only = names.split(",").toSet
+      val unknown = only -- SparkEntry.allQueries.map(_.name)
+      if (unknown.nonEmpty) {
+        System.err.println("[verify] unknown query names: " +
+          unknown.toSeq.sorted.map(n => s"'$n'").mkString(", "))
+        sys.exit(2)
+      }
+      run(sfDir, outDir, Some(only))
+    case _ =>
+      System.err.println(Usage)
+      sys.exit(2)
+  }
+
+  private def run(sfDir: String, outDir: String,
+      only: Option[Set[String]]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -22,7 +36,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    if (!sqlOnly) SparkEntry.queries
+    SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -199,8 +199,8 @@ final class IvfAdcIndex private (
     // Graph.snapshot, NOT persist + rebase: a persist chain leaves the
     // physical RDD dependency graph growing per append, and ~45-60
     // chained appends overflow the stack during task serialization —
-    // the exact failure BpeDeepProbe measured for the BPE trainers
-    // (BASELINE.md round 8; AnnIndexSpec's 60-append gate pins it here).
+    // the exact failure measured for the BPE trainers (BASELINE.md's
+    // round-8 deep-BPE record; AnnIndexSpec's 60-append gate pins it here).
     // Snapshotting truncates the chain at every append, so a year of
     // nightly deltas serializes the same as day one; with a checkpoint
     // dir configured the snapshot is RELIABLE (survives executor loss),
@@ -382,7 +382,7 @@ object IvfAdcIndex {
       corpus, idCol, vecCol, sub)
   }
 
-  // cacheKey -> built index handle (the q141/q173 bench-memoization
+  // cacheKey -> built index handle (the Bpe.trainedMerges memoization
   // pattern applied to a RESIDENT artifact: each entry holds a persisted
   // m+12-bytes-per-vector frame, so the bound matters more than for the
   // merge lists). Bounded at MaxCacheEntries; when full, ONE arbitrary

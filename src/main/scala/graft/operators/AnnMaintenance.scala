@@ -55,48 +55,14 @@ object AnnMaintenance {
       trainRounds, m, ksub, dim, pqTrainRounds)
     val appended = baseIdx.append(delta)
     baseIdx.release()
-    canaryServe(appended, union, queries, idCol, vecCol, k, candidates,
-      nprobe, nlist, trainRounds, m, ksub, dim, pqTrainRounds, minRecallPct)
-  }
-
-  /** The canary + decision + serve tail of the loop, factored so the
-    * batch (q190) and streaming (q217) front doors share one body.
-    * CONSUMES `appended` (releases it after the canary query); `union`
-    * must be the frame `appended` indexes. */
-  def canaryServe(appended: IvfAdcIndex, union: DataFrame,
-      queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      candidates: Int, nprobe: Int, nlist: Int, trainRounds: Int,
-      m: Int, ksub: Int, dim: Int, pqTrainRounds: Int,
-      minRecallPct: Int): DataFrame =
-    canaryServeWith(appended, union, queries, idCol, vecCol, k,
-      candidates, nprobe, minRecallPct,
-      rebuilt = () => IvfAdcIndex.build(union, idCol, vecCol, nlist,
-        trainRounds, m, ksub, dim, pqTrainRounds),
-      releaseRebuilt = true)
-
-  /** [[canaryServe]] with a caller-supplied retrain factory — the Bench
-    * body's form (round-9 advice item 7): with memoized builds the timed
-    * number reflects the LOOP (append + canary + decision + serve), not
-    * per-run fixture training. Semantics identical — the builds are
-    * deterministic — and Verify always gates the uncached run body.
-    * `releaseRebuilt = false` when the factory returns a shared cached
-    * handle that must outlive this call. */
-  def canaryServeWith(appended: IvfAdcIndex, union: DataFrame,
-      queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      candidates: Int, nprobe: Int, minRecallPct: Int,
-      rebuilt: () => IvfAdcIndex, releaseRebuilt: Boolean): DataFrame = {
-    require(minRecallPct >= 0 && minRecallPct <= 100,
-      s"minRecallPct=$minRecallPct out of 0..100")
 
     // canary: frozen-quantizer top-k vs exact gold on the sample
-    val apprRows = appended.query(queries, k, candidates, nprobe).collect()
-    val gold = Similarity.exactL2Knn(queries, union, idCol, vecCol, k)
-      .select(col("qid"), col("nid")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val hits = apprRows.count(r => gold.contains((r.getLong(0), r.getLong(1))))
+    val (apprRows, hits, total) = canaryHitsRows(appended, union, queries,
+      idCol, vecCol, k, candidates, nprobe)
     canaryServeDecided(appended, queries, k, candidates, nprobe,
-      apprRows, hits.toLong, gold.size.toLong, minRecallPct, rebuilt,
-      releaseRebuilt)
+      apprRows, hits, total, minRecallPct,
+      rebuilt = () => IvfAdcIndex.build(union, idCol, vecCol, nlist,
+        trainRounds, m, ksub, dim, pqTrainRounds))
   }
 
   /** The decision + serve TAIL of the canary loop, over an
@@ -108,16 +74,15 @@ object AnnMaintenance {
     * re-golding in the nightly window would recompute identical rows —
     * one full exact-kNN pass and one index query saved per run (guide
     * §1.2: don't compute things you throw away). CONSUMES `appended`
-    * (releases it). */
+    * (releases it) and releases the rebuilt index after serving. */
   def canaryServeDecided(appended: IvfAdcIndex, queries: DataFrame,
       k: Int, candidates: Int, nprobe: Int,
       apprRows: Array[org.apache.spark.sql.Row], hits: Long, total: Long,
-      minRecallPct: Int, rebuilt: () => IvfAdcIndex,
-      releaseRebuilt: Boolean, releaseAppended: Boolean = true): DataFrame = {
+      minRecallPct: Int, rebuilt: () => IvfAdcIndex): DataFrame = {
     require(minRecallPct >= 0 && minRecallPct <= 100,
       s"minRecallPct=$minRecallPct out of 0..100")
     val spark = queries.sparkSession
-    if (releaseAppended) appended.release()
+    appended.release()
     val retrained = hits * 100L < minRecallPct.toLong * total
 
     // serve: the appended index's answers stand unless the canary
@@ -127,7 +92,7 @@ object AnnMaintenance {
       else {
         val idx = rebuilt()
         val out = idx.query(queries, k, candidates, nprobe).collect()
-        if (releaseRebuilt) idx.release()
+        idx.release()
         out
       }
 
@@ -139,22 +104,12 @@ object AnnMaintenance {
       .toDF("qid", "nid", "d2", "rank", "mean_recall", "retrained")
   }
 
-  /** Per-state canary reading: (hits, |gold|) of the index's served
-    * top-k against exact gold over `corpus` on the bounded sample —
-    * the number the q188 monitor tracks, exposed so the streaming
-    * front door can record one verdict per micro-batch. */
-  def canaryHits(idx: IvfAdcIndex, corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, candidates: Int,
-      nprobe: Int): (Long, Long) = {
-    val (_, h, t) = canaryHitsRows(idx, corpus, queries, idCol, vecCol,
-      k, candidates, nprobe)
-    (h, t)
-  }
-
-  /** [[canaryHits]] plus the served rows the verdict was measured on —
-    * so a caller whose LAST canary already covers the final state (the
-    * q217 stream drain) can hand them to [[canaryServeDecided]] instead
-    * of re-measuring. */
+  /** Per-state canary reading: the index's served top-k on the bounded
+    * `queries` sample, with (hits, |gold|) against exact gold over
+    * `corpus` — the number the q188 monitor tracks. The streaming front
+    * door records one verdict per micro-batch, and a caller whose LAST
+    * canary already covers the final state (the q217 stream drain)
+    * hands the rows to [[canaryServeDecided]] instead of re-measuring. */
   def canaryHitsRows(idx: IvfAdcIndex, corpus: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       candidates: Int, nprobe: Int):
@@ -183,6 +138,15 @@ object AnnMaintenance {
     * is base-trained quantizers over base ∪ all deltas, regardless of
     * arrival order or batch count).
     *
+    * The nightly decision reuses the LAST micro-batch's canary verdict:
+    * after the drain the arrived corpus IS base ∪ delta (every group's
+    * rows have been appended; an all-groups filter selects the whole
+    * delta) and `cur` is the final appended state — measuring again
+    * would re-run one index query and one exact-kNN gold pass to
+    * produce byte-identical inputs to the same integer decision. Only
+    * an all-empty delta (no batch carried rows, so no canary ran)
+    * falls back to measuring in the nightly window.
+    *
     * Returns (served frame — the q190-oracle-gated rows, per-batch
     * canary recalls in arrival order — the monitoring trail a spec
     * asserts). */
@@ -196,57 +160,14 @@ object AnnMaintenance {
     require(minRecallPct >= 0 && minRecallPct <= 100,
       s"minRecallPct=$minRecallPct out of 0..100")
     stageDeltaGroups(delta, stageDir, groups, idCol)
-    val baseIdx = IvfAdcIndex.build(base, idCol, vecCol, nlist,
+    val union = base.select(col(idCol), col(vecCol))
+      .union(delta.select(col(idCol), col(vecCol)))
+    val rebuilt = () => IvfAdcIndex.build(union, idCol, vecCol, nlist,
       trainRounds, m, ksub, dim, pqTrainRounds)
-    streamMaintainOn(baseIdx, releaseBase = true, base, delta,
-      stageDir, groups, queries, idCol, vecCol, k, candidates, nprobe,
-      minRecallPct,
-      rebuilt = () => IvfAdcIndex.build(
-        base.select(col(idCol), col(vecCol))
-          .union(delta.select(col(idCol), col(vecCol))),
-        idCol, vecCol, nlist, trainRounds, m, ksub, dim, pqTrainRounds),
-      releaseRebuilt = true)
-  }
-
-  /** Stage the delta as one parquet file per `pmod(id, groups)` group —
-    * the arrival fixture [[streamMaintainOn]] drains. Deterministic per
-    * (delta, groups), so a bench body may stage once per data dir and
-    * re-drain the same files each pass (the q253 stagedDeltaBatches
-    * rule). */
-  def stageDeltaGroups(delta: DataFrame, stageDir: String, groups: Int,
-      idCol: String): Unit =
-    (0 until groups).foreach { g =>
-      delta.filter(pmod(col(idCol), lit(groups)) === g).coalesce(1)
-        .write.mode("overwrite").parquet(s"$stageDir/b$g")
-    }
-
-  /** The drain + per-batch canary + nightly decision over a
-    * CALLER-SUPPLIED base index and ALREADY-STAGED arrival files — the
-    * [[canaryServeWith]] factoring applied to the streaming front door,
-    * so the q217 bench body can pass the memoized staging and the
-    * buildCached base (timed work = the stream run itself; Verify gates
-    * the fresh-build [[streamMaintain]]). `releaseBase = false` when
-    * `baseIdx` is a shared cached handle that must outlive this call.
-    *
-    * The nightly decision reuses the LAST micro-batch's canary verdict:
-    * after the drain the arrived corpus IS base ∪ delta (every group's
-    * rows have been appended; an all-groups filter selects the whole
-    * delta) and `cur` is the final appended state — measuring again
-    * would re-run one index query and one exact-kNN gold pass to
-    * produce byte-identical inputs to the same integer decision. Only
-    * an all-empty delta (no batch carried rows, so no canary ran)
-    * falls back to measuring in the nightly window. */
-  def streamMaintainOn(baseIdx: IvfAdcIndex, releaseBase: Boolean,
-      base: DataFrame, delta: DataFrame, stageDir: String, groups: Int,
-      queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      candidates: Int, nprobe: Int, minRecallPct: Int,
-      rebuilt: () => IvfAdcIndex,
-      releaseRebuilt: Boolean): (DataFrame, Seq[Double]) = {
-    require(minRecallPct >= 0 && minRecallPct <= 100,
-      s"minRecallPct=$minRecallPct out of 0..100")
     val spark = base.sparkSession
     // foreachBatch runs sequentially on the driver: plain vars are safe
-    var cur = baseIdx
+    var cur = IvfAdcIndex.build(base, idCol, vecCol, nlist, trainRounds,
+      m, ksub, dim, pqTrainRounds)
     var arrived = List.empty[Long]
     var recalls = List.empty[Double]
     var lastCanary:
@@ -263,8 +184,7 @@ object AnnMaintenance {
         if (!gRow.isNullAt(0)) {
           val g = gRow.getLong(0)
           val next = cur.append(batch)
-          if (cur ne baseIdx) cur.release()
-          else if (releaseBase) cur.release()
+          cur.release()
           cur = next
           arrived = g :: arrived
           val soFar = base.select(col(idCol), col(vecCol)).union(
@@ -276,24 +196,21 @@ object AnnMaintenance {
           recalls = (h.toDouble / t) :: recalls
         }
       }
-    val served = lastCanary match {
-      case Some((rows, h, t)) =>
-        // the final state's canary is the last batch's (arrived corpus
-        // ≡ base ∪ delta, same index handle, same query sample); `cur`
-        // is always a post-append handle here, never the caller's base
-        canaryServeDecided(cur, queries, k, candidates, nprobe, rows,
-          h, t, minRecallPct, rebuilt, releaseRebuilt)
-      case None =>
-        // nothing arrived: measure in the nightly window. `cur` is
-        // still the CALLER's base index — release only if asked to.
-        val union = base.select(col(idCol), col(vecCol))
-          .union(delta.select(col(idCol), col(vecCol)))
-        val (rows, h, t) = canaryHitsRows(cur, union, queries, idCol,
-          vecCol, k, candidates, nprobe)
-        canaryServeDecided(cur, queries, k, candidates, nprobe, rows,
-          h, t, minRecallPct, rebuilt, releaseRebuilt,
-          releaseAppended = releaseBase)
-    }
-    (served, recalls.reverse)
+    // the final state's canary is the last batch's (arrived corpus ≡
+    // base ∪ delta, same index handle, same query sample); with nothing
+    // arrived, measure the base index in the nightly window
+    val (rows, h, t) = lastCanary.getOrElse(canaryHitsRows(cur, union,
+      queries, idCol, vecCol, k, candidates, nprobe))
+    (canaryServeDecided(cur, queries, k, candidates, nprobe, rows, h, t,
+      minRecallPct, rebuilt), recalls.reverse)
   }
+
+  /** Stage the delta as one parquet file per `pmod(id, groups)` group —
+    * the arrival fixture [[streamMaintain]] drains. */
+  def stageDeltaGroups(delta: DataFrame, stageDir: String, groups: Int,
+      idCol: String): Unit =
+    (0 until groups).foreach { g =>
+      delta.filter(pmod(col(idCol), lit(groups)) === g).coalesce(1)
+        .write.mode("overwrite").parquet(s"$stageDir/b$g")
+    }
 }

@@ -44,7 +44,7 @@ object Bpe {
   //    leaves the RDD DEPENDENCY chain growing one link per round, and
   //    task serialization walks it recursively — measured: a 64-pass
   //    batched run died with StackOverflowError at ~pass 45
-  //    (BpeDeepProbe, round 8). Real tokenizer depth is 100s-1000s of
+  //    (BASELINE.md, round-8 deep-BPE record). Real tokenizer depth is 100s-1000s of
   //    passes, so the chain must be truncated, not just cached.
   //
   // Graph.snapshot cuts both (checkpoint-style truncation; reliable
@@ -217,9 +217,9 @@ object Bpe {
   def mergesBatched(docs: DataFrame, textCol: String, passes: Int,
       batchSize: Int): DataFrame = {
     // caps sized for real tokenizer training (~30k merges = 256 passes
-    // × 128, or any equivalent split) — BpeDeepProbe records the
-    // measured wall/jobs-per-merge curve that makes the 30k cost
-    // arithmetic; the per-pass cost model is in BASELINE.md
+    // × 128, or any equivalent split) — BASELINE.md's round-8 deep-BPE
+    // record has the measured wall/jobs-per-merge curve that makes the
+    // 30k cost arithmetic, and the per-pass cost model
     require(passes > 0 && passes <= 1024, s"passes=$passes out of range")
     require(batchSize > 0 && batchSize <= 256, s"batchSize=$batchSize out of range")
     val spark = docs.sparkSession
@@ -289,19 +289,8 @@ object Bpe {
     * iff they're equal. Full outer join so a lost OR invented word both
     * surface as a non-matching row. */
   def decodeRoundTrip(docs: DataFrame, textCol: String,
-      rounds: Int): DataFrame =
-    decodeBody(docs, textCol, encoded(docs, textCol, rounds))
-
-  /** [[decodeRoundTrip]] over [[encodedCached]]'s memoized training (the
-    * q173 bench body — the decode operator a corpus pays per run is the
-    * fold + joins, not re-training; semantics identical). */
-  def decodeRoundTripCached(docs: DataFrame, textCol: String, rounds: Int,
-      cacheKey: String): DataFrame =
-    decodeBody(docs, textCol, encodedCached(docs, textCol, rounds, cacheKey))
-
-  private def decodeBody(docs: DataFrame, textCol: String,
-      enc: DataFrame): DataFrame = {
-    val rec = enc
+      rounds: Int): DataFrame = {
+    val rec = encoded(docs, textCol, rounds)
       .groupBy(concat_ws("", col("syms")).as("w"))
       .agg(sum("freq").as("f_rec"))
     val orig = wordTypes(docs, textCol)
@@ -324,22 +313,13 @@ object Bpe {
   private val mergeCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
 
-  /** [[encoded]] with the TRAINING memoized per `cacheKey` (the bench
-    * body of q141): training cost is q134's operator — the encode
-    * operator a corpus pays per run is the one-pass fold this still
-    * executes in full. Semantics identical to [[encoded]] (the merge
-    * list is deterministic per dataset); MultimodalSpec asserts it. */
-  def encodedCached(docs: DataFrame, textCol: String, rounds: Int,
-      cacheKey: String): DataFrame =
-    applyMerges(docs, textCol, trainedMerges(docs, textCol, rounds, cacheKey))
-
   /** The trained merge list itself, memoized per `cacheKey` — the
     * driver-side artifact [[saveMerges]] persists and every encode
     * applies. Deterministic per dataset (the [[merges]] contract). */
   def trainedMerges(docs: DataFrame, textCol: String, rounds: Int,
       cacheKey: String): Seq[(String, String)] = {
     // cacheKey is a data dir in practice — canonicalize so '/x' and '/x/'
-    // share one entry (the mediaCache rule)
+    // share one entry
     val k = s"${new java.io.File(cacheKey).getCanonicalPath}|$textCol|$rounds"
     if (mergeCache.size >= MaxCacheEntries && !mergeCache.containsKey(k))
       mergeCache.remove(mergeCache.keys().nextElement())

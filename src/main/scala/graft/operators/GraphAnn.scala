@@ -620,31 +620,10 @@ object GraphAnn {
     // fail fast (the round-10 advice lesson): validate before any build
     require(minRecallPct >= 0 && minRecallPct <= 100,
       s"minRecallPct=$minRecallPct out of 0..100")
+    val spark = base.sparkSession
     val planesB = Similarity.adaptivePlanes(base.count(), targetBucket)
     val g = nswGraphResult(base, idCol, vecCol, m, planesB, dim,
       refineRounds = 1)
-    val out = appendServeWithCanaryOn(g, base, delta, queries, idCol,
-      vecCol, k, m, dim, beamWidth, searchRounds, minRecallPct, hubs,
-      targetBucket)
-    g.release()
-    out
-  }
-
-  /** [[appendServeWithCanary]] over a CALLER-OWNED base graph — the
-    * [[AnnMaintenance.canaryServeWith]] form for the graph family: the
-    * q234 bench body passes the [[nswGraphCached]] handle so the timed
-    * number reflects the LOOP (append + canary + decision + serve),
-    * not per-pass construction. Does NOT release `g`; semantics are
-    * identical to the building form (the builds are deterministic and
-    * the appended graph depends only on `g`'s edge set). */
-  def appendServeWithCanaryOn(g: NswGraph, base: DataFrame,
-      delta: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, m: Int, dim: Int, beamWidth: Int, searchRounds: Int,
-      minRecallPct: Int, hubs: Int = 16,
-      targetBucket: Int = 64): DataFrame = {
-    require(minRecallPct >= 0 && minRecallPct <= 100,
-      s"minRecallPct=$minRecallPct out of 0..100")
-    val spark = base.sparkSession
     val appended = nswAppend(g, base, delta, idCol, vecCol, m, dim,
       beamWidth, searchRounds, hubs, targetBucket)
     val union = base.select(col(idCol), col(vecCol))
@@ -654,6 +633,7 @@ object GraphAnn {
     val apprRows = servedH.rows.collect()
     servedH.release()
     appended.release()
+    g.release()
     val gold = Similarity.exactL2Knn(queries, union, idCol, vecCol, k)
       .select(col("qid"), col("nid")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import graft.{Q, Tables}
 import graft.multimodal.Multimodal
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -11,44 +9,14 @@ import org.apache.spark.sql.functions._
   * derivation is pure SQL (byte length, md5 checksum, first-byte probe),
   * so DuckDB can verify it; the mapPartitions decode path is covered by
   * ScalaTest (MultimodalSpec) since a stubbed codec isn't SQL.
-  *
-  * Bench-vs-gate split for the decode family (q98–q104): the gated `run`
-  * synthesizes the media payloads inline (no media fixtures ship with the
-  * testdata), which is correct for the hash gate but means the bench would
-  * time fixture GENERATION + encode as much as the decode operator itself.
-  * Each decode query therefore carries a `benchRun` that reads the same
-  * records from a once-per-(dir,family) materialized parquet (the shape a
-  * real corpus has: payloads already on disk) and runs the identical decode
-  * body. MultimodalSpec asserts run ≡ benchRun row-for-row; Verify always
-  * gates `run`.
   */
 object MultimodalOps {
-
-  // dir|family -> temp parquet path of the materialized MediaRecord table
-  private val mediaCache = new ConcurrentHashMap[String, String]()
 
   private def genMedia(s: SparkSession, d: String,
       f: Long => Multimodal.MediaRecord): Dataset[Multimodal.MediaRecord] = {
     import s.implicits._
     Tables.t(s, d, "documents").select(col("doc_id")).as[Long]
       .mapPartitions(_.map(f))
-  }
-
-  private def cachedMedia(s: SparkSession, d: String, family: String,
-      f: Long => Multimodal.MediaRecord): Dataset[Multimodal.MediaRecord] = {
-    import s.implicits._
-    // canonical path, not the raw string: '/x/sf0.1' and '/x/sf0.1/' must
-    // hit the SAME cache entry, or each variant materializes its own
-    // full-table parquet copy in /tmp
-    val dKey = new java.io.File(d).getCanonicalPath
-    val path = mediaCache.computeIfAbsent(s"$dKey|$family", _ => {
-      // TempDirs, not deleteOnExit: a dir holding parquet is never empty,
-      // so deleteOnExit would leak it past JVM exit
-      val tmp = graft.TempDirs.create(s"graft-media-$family")
-      genMedia(s, d, f).write.mode("overwrite").parquet(tmp.toString)
-      tmp.toString
-    })
-    s.read.parquet(path).as[Multimodal.MediaRecord]
   }
 
   private def featureCols(fields: Seq[(String, String)]): Seq[Column] =
@@ -111,7 +79,7 @@ object MultimodalOps {
     //      oracle can't decode PNGs — it replays the generator arithmetic,
     //      so any decoder deviation (wrong dims, channel order, lossy
     //      round-trip) breaks the hash. ----
-    Q.withBench("q98_image_decode",
+    Q("q98_image_decode",
       """SELECT doc_id AS media_id,
         |  CAST(8 + doc_id % 8 AS INTEGER) AS width,
         |  CAST(8 + doc_id % 5 AS INTEGER) AS height,
@@ -125,8 +93,6 @@ object MultimodalOps {
         |    AS INTEGER) AS max_lum
         |FROM documents ORDER BY media_id""".stripMargin) { (s, d) =>
       rasterStats(genMedia(s, d, Multimodal.syntheticImageRecord))
-    } { (s, d) =>
-      rasterStats(cachedMedia(s, d, "png", Multimodal.syntheticImageRecord))
     },
 
     // ---- REAL audio decode (javax.sound.sampled, in the JDK): synthesize
@@ -135,7 +101,7 @@ object MultimodalOps {
     //      sample stats. The oracle replays the generator's sample formula
     //      with list arithmetic — header misreads, byte-order or
     //      sign-extension bugs in the decode path break the hash. ----
-    Q.withBench("q99_audio_decode",
+    Q("q99_audio_decode",
       """WITH f AS (
         |  SELECT doc_id, 64 + 2 * (doc_id % 32) AS frames FROM documents),
         |s AS (
@@ -153,8 +119,6 @@ object MultimodalOps {
         |  CAST(xs[1] AS INTEGER) AS first_s
         |FROM s ORDER BY media_id""".stripMargin) { (s, d) =>
       audioStats8(genMedia(s, d, Multimodal.syntheticWavRecord))
-    } { (s, d) =>
-      audioStats8(cachedMedia(s, d, "wav", Multimodal.syntheticWavRecord))
     },
 
     // ---- REAL JPEG decode: same ImageIO arm as q98, lossy format — dims
@@ -162,22 +126,20 @@ object MultimodalOps {
     //      replays the generator's dim formulas); pixel stats are
     //      codec-dependent and deliberately NOT projected. A decode
     //      failure would fall back to the byte stub and break the hash. ----
-    Q.withBench("q100_jpeg_decode",
+    Q("q100_jpeg_decode",
       """SELECT doc_id AS media_id,
         |  CAST(16 + doc_id % 9 AS INTEGER) AS width,
         |  CAST(16 + doc_id % 7 AS INTEGER) AS height,
         |  CAST(3 AS INTEGER) AS n_bands
         |FROM documents ORDER BY media_id""".stripMargin) { (s, d) =>
       jpegDims(genMedia(s, d, Multimodal.syntheticJpegRecord))
-    } { (s, d) =>
-      jpegDims(cachedMedia(s, d, "jpeg", Multimodal.syntheticJpegRecord))
     },
 
     // ---- REAL GIF decode: palette-indexed raster (n_bands = 1), but a
     //      solid color round-trips losslessly through the palette, so the
     //      pixel stats stay exact — gating both the GIF probe arm and the
     //      palette-to-RGB color resolution. ----
-    Q.withBench("q104_gif_decode",
+    Q("q104_gif_decode",
       """SELECT doc_id AS media_id,
         |  CAST(12 + doc_id % 6 AS INTEGER) AS width,
         |  CAST(12 + doc_id % 4 AS INTEGER) AS height,
@@ -191,8 +153,6 @@ object MultimodalOps {
         |    AS INTEGER) AS max_lum
         |FROM documents ORDER BY media_id""".stripMargin) { (s, d) =>
       rasterStats(genMedia(s, d, Multimodal.syntheticGifRecord))
-    } { (s, d) =>
-      rasterStats(cachedMedia(s, d, "gif", Multimodal.syntheticGifRecord))
     },
 
     // ---- REAL multi-shape audio decode: even ids are 16-bit STEREO, odd
@@ -201,7 +161,7 @@ object MultimodalOps {
     //      pseudo-sequence per doc makes per-channel sums the stride
     //      slices, all replayable with list arithmetic. Sign-extension,
     //      channel-interleave, or 8-bit-unsigned bugs break the hash. ----
-    Q.withBench("q101_audio_formats",
+    Q("q101_audio_formats",
       """WITH f AS (
         |  SELECT doc_id, 64 + 2 * (doc_id % 32) AS frames FROM documents),
         |s AS (
@@ -228,8 +188,6 @@ object MultimodalOps {
         |    range(len(xs) // 2), i -> xs[i * 2 + 2])) ELSE 0 END AS BIGINT) AS sum_ch1
         |FROM s ORDER BY media_id""".stripMargin) { (s, d) =>
       audioStats10(genMedia(s, d, Multimodal.syntheticWavExRecord))
-    } { (s, d) =>
-      audioStats10(cachedMedia(s, d, "wavex", Multimodal.syntheticWavExRecord))
     },
 
     // ---- REAL video decode (MJPEG-in-AVI, pure JDK): a RIFF demux walks
@@ -238,7 +196,7 @@ object MultimodalOps {
     //      oracle replays the generator's frame-count and dim formulas —
     //      a chunk-walk bug (padding, nested LIST, frame order) or a
     //      frame-decode failure (-1 dims) breaks the hash. ----
-    Q.withBench("q102_video_frames",
+    Q("q102_video_frames",
       """WITH fr AS (
         |  SELECT doc_id, unnest(range(2 + doc_id % 4)) AS f FROM documents)
         |SELECT doc_id AS media_id,
@@ -248,8 +206,6 @@ object MultimodalOps {
         |  CAST(3 AS INTEGER) AS n_bands
         |FROM fr ORDER BY media_id, frame_idx""".stripMargin) { (s, d) =>
       videoFrames(genMedia(s, d, Multimodal.syntheticAviRecord))
-    } { (s, d) =>
-      videoFrames(cachedMedia(s, d, "avi", Multimodal.syntheticAviRecord))
     },
 
     // ---- REAL image resize: decode -> integer nearest-neighbor -> PNG
@@ -258,7 +214,7 @@ object MultimodalOps {
     //      mapping itself (the boundary column position), not just dims:
     //      a half-pixel offset, rounding-mode change, or bilinear kernel
     //      breaks the hash. ----
-    Q.withBench("q103_image_resize",
+    Q("q103_image_resize",
       """WITH p AS (
         |  SELECT doc_id, 8 + doc_id % 8 AS w,
         |    doc_id % 256 AS rl, (doc_id * 7) % 256 AS gl, (doc_id * 13) % 256 AS bl,
@@ -279,8 +235,6 @@ object MultimodalOps {
         |  CAST(greatest((rl + gl + bl) // 3, (rr + gr + br) // 3) AS INTEGER) AS max_lum
         |FROM n ORDER BY media_id""".stripMargin) { (s, d) =>
       resizeStats(genMedia(s, d, Multimodal.syntheticSplitPngRecord))
-    } { (s, d) =>
-      resizeStats(cachedMedia(s, d, "splitpng", Multimodal.syntheticSplitPngRecord))
     },
 
     // ---- frame sampling (video-modality shape): payload as 256-byte
@@ -324,7 +278,7 @@ object MultimodalOps {
     //      arithmetic through block means, threshold, packing, banding
     //      and hamming, so ANY decoder deviation (channel order, dims,
     //      gamma, resample) breaks the hash. ----
-    Q.withBench("q307_image_ahash_neardup",
+    Q("q307_image_ahash_neardup",
       """WITH px AS (
         |  SELECT doc_id, tx.x AS x, ty.y AS y,
         |    ((doc_id // 2) * 31 + tx.x * (3 + (doc_id // 2) % 97)
@@ -358,9 +312,6 @@ object MultimodalOps {
         |FROM hm WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin) {
       (s, d) =>
         imageNearDup(s, genMedia(s, d, Multimodal.syntheticGradientRecord))
-    } { (s, d) =>
-      imageNearDup(s,
-        cachedMedia(s, d, "gradpng", Multimodal.syntheticGradientRecord))
     }
   )
 

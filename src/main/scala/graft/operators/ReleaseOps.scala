@@ -366,7 +366,7 @@ object ReleaseOps {
 
   /** PERSIST a full release as an on-disk artifact (round-12 verdict
     * item 1 — the single highest-leverage gap: the release pipeline is
-    * the bench's most expensive family, and without persistence every
+    * the suite's most expensive family, and without persistence every
     * downstream consumer — q137/q222 mixing, q86 packing — re-runs all
     * eight stages). Layout:
     *
@@ -1047,7 +1047,7 @@ object ReleaseOps {
   // (data dir, query family) -> the ONE release-artifact dir this JVM
   // round-trips through (the SimilarityOps idxDirs rule: each
   // invocation overwrite-saves — the save IS the operator — but
-  // repeated bench/verify passes must not accumulate artifact copies).
+  // repeated passes in one JVM must not accumulate artifact copies).
   // ONE dir per (data dir, consuming query family) — round-13 advice:
   // q240/q243/q245 previously shared one dir and each overwrite-wrote
   // it, so a deferred file-backed reader from one query could see
@@ -1069,7 +1069,7 @@ object ReleaseOps {
   // data dir -> the ONE q253 delta-arrival staging dir: the delta split
   // into three single-file parquet batches, written INSIDE the
   // computeIfAbsent lambda (same-key callers block), so repeated
-  // bench/verify passes re-read one staging rather than re-writing
+  // passes in one JVM re-read one staging rather than re-writing
   private val streamStageDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedDeltaBatches(docs: DataFrame, d: String): String =
@@ -1126,16 +1126,10 @@ object ReleaseOps {
     * save after the first pays write-IO only. Without this each artifact
     * gate re-ran the eight stages TWICE per invocation (the kept write
     * and the card write are independent actions over lazy lineage) —
-    * measured 20 s for q240 vs 6 s for q215 itself. Verify and Bench
-    * share the memo; the outputs are deterministic, so cached ≡ fresh
-    * (the buildCached contract). Entries live for the JVM (≤ 3 dirs ×
-    * 3 variants; snapshots are Spark-managed blocks). */
-  // data dir -> the ONE q275 bench-fixture dir (parquet-backed card memo;
-  // see the q275 withBench comment for why this is NOT a pipelineCache
-  // snapshot)
-  private val semBenchDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * measured 20 s for q240 vs 6 s for q215 itself. Every caller in
+    * the JVM shares the memo; the outputs are deterministic, so cached ≡
+    * fresh (the buildCached contract). Entries live for the JVM (≤ 3
+    * dirs × 3 variants; snapshots are Spark-managed blocks). */
   private val pipelineCache = new java.util.concurrent.ConcurrentHashMap[
     (String, String), (DataFrame, DataFrame)]()
   private def cachedPipeline(d: String, variant: String)(
@@ -1234,32 +1228,14 @@ object ReleaseOps {
     //      column is the q215 owner's text, character for character
     //      (the oracle splices semanticLosersSubquerySql as an inner
     //      WITH whose bindings shadow the body's e/n/p CTEs). ----
-    // The bench body reads the release CARD from a parquet-backed memo
-    // (round-14 verdict item 3, carried to r16): the eight-stage
-    // semantic pipeline is the gate FIXTURE here, materialized once per
-    // JVM, so the three timed passes measure the card serve, not 3× the
-    // stage re-run that made q275 the suite's #1 cost (31.3 s ≈ 8% of
-    // r15 wall). Parquet, NOT the cachedPipeline snapshot: q275 consumes
-    // only the |sources|-row card, and a resident kept-corpus snapshot
-    // (text for every final doc) measurably taxed the whole suite — the
-    // A/B subset bench read q01–q99 at 44.9 s with the snapshot resident
-    // vs 34.6 s without (the r15 level). The MultimodalOps decode-family
-    // withBench stance: fixture on disk, zero executor storage. Verify
-    // still gates the full composition; MultimodalSpec pins run ≡ bench.
-    Q.withBench("q275_release_semantic",
+    // Not a cachedPipeline memo: q275 consumes only the |sources|-row
+    // card, and a resident kept-corpus snapshot (text for every final
+    // doc) measurably taxed the whole suite — an A/B subset run read
+    // q01–q99 at 44.9 s with the snapshot resident vs 34.6 s without.
+    Q("q275_release_semantic",
       releaseSql("", "documents", "text", semantic = true)) { (s, d) =>
       prepareCorpusSemantic(Tables.t(s, d, "documents"),
         Tables.t(s, d, "embeddings")).orderBy("source")
-    } { (s, d) =>
-      val dir = semBenchDirs.computeIfAbsent(
-        new java.io.File(d).getCanonicalPath, _ => {
-          val t = graft.TempDirs.create("graft-relsem-bench").toString
-          prepareCorpusSemantic(Tables.t(s, d, "documents"),
-            Tables.t(s, d, "embeddings"))
-            .coalesce(1).write.parquet(s"$t/card")
-          t
-        })
-      s.read.parquet(s"$dir/card").orderBy("source")
     },
 
     // ---- release artifact PERSISTENCE (round-12 verdict item 1): save

@@ -41,7 +41,7 @@ object SimilarityOps {
 
   // data dir -> the ONE index-artifact dir this JVM round-trips through
   // (each q189 invocation overwrite-saves the same dir — the save is the
-  // operator under test — but repeated bench/verify passes must not
+  // operator under test — but repeated passes in one JVM must not
   // accumulate a fresh index copy per call; the FormatOps.rtDirs rule)
   private def dirFor(map: java.util.concurrent.ConcurrentHashMap[String, String],
       prefix: String, d: String): String =
@@ -83,20 +83,6 @@ object SimilarityOps {
   private val maintDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def maintDir(d: String): String = dirFor(maintDirs, "graft-annmaint", d)
-
-  // data dir -> the ONE q217 BENCH staging (files written inside the
-  // computeIfAbsent lambda, the q253 stagedDeltaBatches rule): repeated
-  // bench passes re-drain one deterministic staging instead of
-  // re-writing it; the gated run body always stages fresh
-  private val maintStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stagedMaintGroups(delta: org.apache.spark.sql.DataFrame,
-      d: String, groups: Int): String =
-    maintStaged.computeIfAbsent(new java.io.File(d).getCanonicalPath, _ => {
-      val dir = graft.TempDirs.create("graft-annmaint-bench").toString
-      AnnMaintenance.stageDeltaGroups(delta, dir, groups, "vec_id")
-      dir
-    })
 
   // data dir -> the ONE q193 query-arrival staging dir (same reuse rule)
   private val streamDirs =
@@ -1690,14 +1676,10 @@ object SimilarityOps {
     //      restricts ONLY the bounds-training scan (the shared
     //      sq8Oracle body); encode/candidates/rerank see the union —
     //      exactly the semantic contract under test. ----
-    // gated body builds the base FRESH (Verify exercises real bounds
-    // training); bench body appends onto the cached base — the q187
-    // withBench stance, ONE shared body so the two cannot drift
-    Q.withBench("q254_sq8_append",
+    // the base is built FRESH (Verify exercises real bounds training)
+    Q("q254_sq8_append",
       sq8Oracle(trainFilter = s" WHERE vec_id < $AppendBase")) { (s, d) =>
-      sq8AppendServe(s, d, cachedBuild = false)
-    } { (s, d) =>
-      sq8AppendServe(s, d, cachedBuild = true)
+      sq8AppendServe(s, d)
     },
 
     // ---- MATRYOSHKA incremental append: slicing has NO trained state,
@@ -1705,10 +1687,8 @@ object SimilarityOps {
     //      serves — gated against the SAME oracle instance as q206/q252
     //      (the strongest possible append contract: appended ≡ inline,
     //      not merely appended ≡ train-on-base). ----
-    Q.withBench("q255_matryoshka_append", MatryoshkaOracleSql) { (s, d) =>
-      mryAppendServe(s, d, cachedBuild = false)
-    } { (s, d) =>
-      mryAppendServe(s, d, cachedBuild = true)
+    Q("q255_matryoshka_append", MatryoshkaOracleSql) { (s, d) =>
+      mryAppendServe(s, d)
     },
 
     // ---- SQ8 delete (the q219 stance: FAISS remove_ids for the SQ8
@@ -1718,11 +1698,9 @@ object SimilarityOps {
     //      oracle keeps bounds trained on EVERYTHING and filters only
     //      the corpus side of the candidate join — exactly the
     //      train-on-everything-serve-remaining contract. ----
-    Q.withBench("q256_sq8_delete",
+    Q("q256_sq8_delete",
       sq8Oracle(adFilter = " AND b.vec_id % 10 <> 3")) { (s, d) =>
-      sq8DeleteServe(s, d, cachedBuild = false)
-    } { (s, d) =>
-      sq8DeleteServe(s, d, cachedBuild = true)
+      sq8DeleteServe(s, d)
     },
 
     // ---- SQ8 metadata-FILTERED serving (the q220 stance): the
@@ -1746,11 +1724,9 @@ object SimilarityOps {
     // ---- matryoshka delete + filtered serving (the same two cells for
     //      the prefix family — nothing trained, so delete needs no
     //      validity argument at all). ----
-    Q.withBench("q258_matryoshka_delete",
+    Q("q258_matryoshka_delete",
       mryOracle(adFilter = " AND b.vec_id % 10 <> 3")) { (s, d) =>
-      mryDeleteServe(s, d, cachedBuild = false)
-    } { (s, d) =>
-      mryDeleteServe(s, d, cachedBuild = true)
+      mryDeleteServe(s, d)
     },
 
     // ---- SQ8 / matryoshka STREAMING serve (the q193 cell for both new
@@ -2099,10 +2075,10 @@ object SimilarityOps {
     //      quantizers, encode the corpus, persist the inverted lists)
     //      and answers every query batch against the materialized
     //      artifact — [[IvfAdcIndex]]. Gated against the SAME oracle as
-    //      q184, so the hash proves handle-served ≡ inline rebuild; in
-    //      Bench the memoized build amortizes across the timed passes,
-    //      so q185's number is what serving actually costs (route + ADC
-    //      + rerank, zero training/encode). ----
+    //      q184, so the hash proves handle-served ≡ inline rebuild; the
+    //      memoized build amortizes across repeated calls, so q185's
+    //      cost is what serving actually costs (route + ADC + rerank,
+    //      zero training/encode). ----
     Q("q185_ann_index_serve", IvfAdcOracleSql) { (s, d) =>
       val emb = Tables.t(s, d, "embeddings")
       val idx = IvfAdcIndex.buildCached(emb, d, "vec_id", "embedding",
@@ -2127,14 +2103,10 @@ object SimilarityOps {
     //      both handles: an appended index is snapshot-backed, so
     //      nothing may stay lazy past release() — q185 owns the
     //      resident-serving story. ----
-    // Bench body: cached BASE build (the q190 withBench stance) — the
-    // timed work is the APPEND (one narrow delta encode) + serve;
-    // Verify gates the fresh-build run body.
-    Q.withBench("q187_ann_index_append", ivfAdcOracle(
+    Q("q187_ann_index_append", ivfAdcOracle(
         trainLloyd = s"\n  WHERE n.vec_id < $AppendBase",
         trainPq = s"\n    AND s.vec_id < $AppendBase"))(
-      (s, d) => ivfAppendServe(s, d, cachedBuild = false))(
-      (s, d) => ivfAppendServe(s, d, cachedBuild = true)),
+      (s, d) => ivfAppendServe(s, d)),
 
     // ---- index COMPACTION after append — the LSM merge completing the
     //      q187 lifecycle: the appended index's inverted lists live in
@@ -2147,14 +2119,10 @@ object SimilarityOps {
     //      AnnIndexSpec pins row-for-row equality, storage
     //      independence (source released, compacted still serves) and
     //      release accounting. ----
-    // Bench body: cached BASE build (the q190 withBench stance) — the
-    // timed work is append + COMPACT + serve; Verify gates the
-    // fresh-build run body.
-    Q.withBench("q205_ann_index_compact", ivfAdcOracle(
+    Q("q205_ann_index_compact", ivfAdcOracle(
         trainLloyd = s"\n  WHERE n.vec_id < $AppendBase",
         trainPq = s"\n    AND s.vec_id < $AppendBase"))(
-      (s, d) => ivfCompactServe(s, d, cachedBuild = false))(
-      (s, d) => ivfCompactServe(s, d, cachedBuild = true)),
+      (s, d) => ivfCompactServe(s, d)),
 
     // ---- ANN recall CANARY: per-query recall@5 of the SERVED index
     //      against the exact squared-L2 top-5 on a sampled query set —
@@ -2333,13 +2301,9 @@ object SimilarityOps {
     //      side (`ad`), so the hash proves delete ≡ train-on-all-serve-
     //      remaining, and that a deleted vector can never resurface as
     //      a candidate OR a rerank row. ----
-    // Bench body: cached pre-delete build (the q190 withBench stance)
-    // — the timed work is the DELETE (one anti-join over the codes) +
-    // serve; Verify gates the fresh-build run body.
-    Q.withBench("q219_ann_index_delete", ivfAdcOracle(
+    Q("q219_ann_index_delete", ivfAdcOracle(
         adFilter = "\n    AND a.vec_id % 10 <> 3"))(
-      (s, d) => ivfDeleteServe(s, d, cachedBuild = false))(
-      (s, d) => ivfDeleteServe(s, d, cachedBuild = true)),
+      (s, d) => ivfDeleteServe(s, d)),
 
     // ---- PERSISTED lifecycle chain (round-9 advice item 3): q189 gates
     //      save/load on a freshly BUILT index; the nightly production
@@ -2355,15 +2319,10 @@ object SimilarityOps {
     //      compaction, or a version skew anywhere breaks it. Each handle
     //      is released as soon as its successor is materialized (the
     //      q187 decommission rule). ----
-    // Bench body: cached night-0 build (the q190 withBench stance) —
-    // the timed work is the CHAIN (save → load → append → compact →
-    // save → load → serve, both artifact round-trips); Verify gates
-    // the fresh-build run body.
-    Q.withBench("q216_ann_lifecycle_chain", ivfAdcOracle(
+    Q("q216_ann_lifecycle_chain", ivfAdcOracle(
         trainLloyd = s"\n  WHERE n.vec_id < $AppendBase",
         trainPq = s"\n    AND s.vec_id < $AppendBase"))(
-      (s, d) => ivfChainServe(s, d, cachedBuild = false))(
-      (s, d) => ivfChainServe(s, d, cachedBuild = true)),
+      (s, d) => ivfChainServe(s, d)),
 
     // ---- ONLINE serving (the q82/q151 batch≡stream precedent applied
     //      to the vector store): query vectors ARRIVE as a real file
@@ -2383,7 +2342,7 @@ object SimilarityOps {
         nlist = 8, trainRounds = 2, m = 16, ksub = 8, dim = Dim,
         pqTrainRounds = 2)
       // stage the 10 query vectors as three single-file arrivals; the
-      // dir is cached per data dir (the idxDirs/rtDirs rule) so bench
+      // dir is cached per data dir (the idxDirs/rtDirs rule) so repeated
       // passes overwrite rather than accumulate
       val dir = streamDir(d)
       Seq((0L, 3L), (3L, 6L), (6L, 10L)).zipWithIndex.foreach {
@@ -2455,7 +2414,7 @@ object SimilarityOps {
     //      integer decision, retrained route — so the hash proves both
     //      the decision and the served rows. Decision audit columns
     //      ride on every row. ----
-    Q.withBench("q190_ann_drift_retrain", DriftMaintOracleSql) { (s, d) =>
+    Q("q190_ann_drift_retrain", DriftMaintOracleSql) { (s, d) =>
       val emb = Tables.t(s, d, "embeddings")
       val base = emb.filter(col("vec_id") < AppendBase)
         .select(col("vec_id"), col("embedding"))
@@ -2469,33 +2428,6 @@ object SimilarityOps {
         "vec_id", "embedding", k = 5, candidates = 50, nprobe = 2,
         nlist = 8, trainRounds = 2, m = 16, ksub = 8, dim = Dim,
         pqTrainRounds = 2, minRecallPct = DriftMinRecallPct)
-        .orderBy("qid", "rank")
-    } { (s, d) =>
-      // bench body (round-9 advice item 7): both fixture builds ride the
-      // memoized handle cache, so the timed work is the LOOP — append +
-      // canary + decision + serve. Semantics identical (builds are
-      // deterministic; MultimodalSpec-class equality is pinned by the
-      // shared oracle); Verify gates the uncached body above.
-      val emb = Tables.t(s, d, "embeddings")
-      val base = emb.filter(col("vec_id") < AppendBase)
-        .select(col("vec_id"), col("embedding"))
-      val delta = emb.filter(col("vec_id") >= AppendBase)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x * lit(0.0625f)).as("embedding"))
-      val union = base.union(delta)
-      val queries = union.filter(col("vec_id") < 5 ||
-        (col("vec_id") >= AppendBase && col("vec_id") < AppendBase + 5))
-      val baseIdx = IvfAdcIndex.buildCached(base, d, "vec_id", "embedding",
-        nlist = 8, trainRounds = 2, m = 16, ksub = 8, dim = Dim,
-        pqTrainRounds = 2)
-      val appended = baseIdx.append(delta)
-      AnnMaintenance.canaryServeWith(appended, union, queries,
-        "vec_id", "embedding", k = 5, candidates = 50, nprobe = 2,
-        minRecallPct = DriftMinRecallPct,
-        rebuilt = () => IvfAdcIndex.buildCached(union, d, "vec_id",
-          "embedding", nlist = 8, trainRounds = 2, m = 16, ksub = 8,
-          dim = Dim, pqTrainRounds = 2),
-        releaseRebuilt = false)
         .orderBy("qid", "rank")
     },
 
@@ -2511,13 +2443,7 @@ object SimilarityOps {
     //      so the SAME q190 oracle replays the whole run — the hash
     //      proves stream-maintained ≡ one-shot maintained. AnnIndexSpec
     //      asserts the monitoring trail (≥3 per-batch verdicts). ----
-    // Bench body (round-16 verdict item 6): staging memoized per data
-    // dir (the q253 stagedDeltaBatches rule — the arrival files are the
-    // FIXTURE) and the base index through buildCached (the q190
-    // withBench stance), so the timed number is the stream run itself —
-    // drain + per-batch appends + canaries + nightly decision + serve.
-    // Verify gates the fresh-build, fresh-staging run body.
-    Q.withBench("q217_ann_stream_maintain", DriftMaintOracleSql)({ (s, d) =>
+    Q("q217_ann_stream_maintain", DriftMaintOracleSql) { (s, d) =>
       val emb = Tables.t(s, d, "embeddings")
       val base = emb.filter(col("vec_id") < AppendBase)
         .select(col("vec_id"), col("embedding"))
@@ -2532,30 +2458,7 @@ object SimilarityOps {
         nlist = 8, trainRounds = 2, m = 16, ksub = 8, dim = Dim,
         pqTrainRounds = 2, minRecallPct = DriftMinRecallPct)
         ._1.orderBy("qid", "rank")
-    })({ (s, d) =>
-      val emb = Tables.t(s, d, "embeddings")
-      val base = emb.filter(col("vec_id") < AppendBase)
-        .select(col("vec_id"), col("embedding"))
-      val delta = emb.filter(col("vec_id") >= AppendBase)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x * lit(0.0625f)).as("embedding"))
-      val union = base.union(delta)
-      val queries = union.filter(col("vec_id") < 5 ||
-        (col("vec_id") >= AppendBase && col("vec_id") < AppendBase + 5))
-      val stage = stagedMaintGroups(delta, d, groups = 3)
-      val baseIdx = IvfAdcIndex.buildCached(base, d, "vec_id", "embedding",
-        nlist = 8, trainRounds = 2, m = 16, ksub = 8, dim = Dim,
-        pqTrainRounds = 2)
-      AnnMaintenance.streamMaintainOn(baseIdx, releaseBase = false,
-        base, delta, stage, groups = 3, queries, "vec_id", "embedding",
-        k = 5, candidates = 50, nprobe = 2,
-        minRecallPct = DriftMinRecallPct,
-        rebuilt = () => IvfAdcIndex.buildCached(union, d, "vec_id",
-          "embedding", nlist = 8, trainRounds = 2, m = 16, ksub = 8,
-          dim = Dim, pqTrainRounds = 2),
-        releaseRebuilt = false)
-        ._1.orderBy("qid", "rank")
-    }),
+    },
 
     // ---- ADAPTIVE-nlist IVF-ADC (the q83 occupancy-scaling precedent
     //      applied to the coarse quantizer): the cell count comes from
@@ -2856,17 +2759,11 @@ object SimilarityOps {
     //      (edges + the hub list), so the hash proves delete ≡
     //      build-on-all-serve-survivors, and that deleted ids never
     //      appear as results OR as route hops. ----
-    // The bench body builds the pre-delete graph through the cached
-    // handle (the q190 withBench stance): the timed work is the DELETE
-    // (two anti-joins) + serve, not per-pass seed/NN-descent; Verify
-    // always gates the fresh-build run body, and the builds are
-    // deterministic so the two bodies serve identical rows.
-    Q.withBench("q232_nsw_delete",
+    Q("q232_nsw_delete",
       nswOracleSql(m = 16, targetBucket = 64, refineRounds = 1,
         beamWidth = 8, searchRounds = 3, k = 5,
         delPred = Some("(%ID% >= 20 AND %ID% % 7 = 3)")))(
-      (s, d) => nswDeleteServe(s, d, cachedBuild = false))(
-      (s, d) => nswDeleteServe(s, d, cachedBuild = true)),
+      (s, d) => nswDeleteServe(s, d)),
 
     // ---- NSW incremental append (the q187 nightly-delta stance for
     //      the graph family, HNSW insert batched): the base graph is
@@ -2879,12 +2776,8 @@ object SimilarityOps {
     //      pooled re-rank and the final serve over the appended graph
     //      with full-corpus hubs; one flipped edge anywhere in the
     //      insert path breaks the hash. ----
-    // Bench body: cached BASE build (the q190 withBench stance) — the
-    // timed work is the APPEND (insert search + delta seed + pooled
-    // re-rank) + serve; Verify gates the fresh-build run body.
-    Q.withBench("q233_nsw_append", NswAppendOracleSqlStd)(
-      (s, d) => nswAppendServe(s, d, cachedBuild = false))(
-      (s, d) => nswAppendServe(s, d, cachedBuild = true)),
+    Q("q233_nsw_append", NswAppendOracleSqlStd)(
+      (s, d) => nswAppendServe(s, d)),
 
     // ---- NSW maintenance loop (the q190 stance for the graph family):
     //      append under the existing graph, recall canary vs exact gold
@@ -2896,14 +2789,10 @@ object SimilarityOps {
     //      rows are the appended route's on both engines. VectorSpec
     //      gates the OTHER branch: minRecallPct = 100 trips and the
     //      served rows become the full rebuild's. ----
-    // Bench body: cached BASE build through appendServeWithCanaryOn
-    // (the q190 canaryServeWith stance) — the timed work is the LOOP
-    // (append + canary + decision + serve); Verify gates the
-    // fresh-build run body.
-    Q.withBench("q234_nsw_maintain",
+    Q("q234_nsw_maintain",
       nswAppendOracleSql(m = 16, targetBucket = 64, refineRounds = 1,
         beamWidth = 8, searchRounds = 3, k = 5,
-        canaryMinPct = Some(60)))({ (s, d) =>
+        canaryMinPct = Some(60))) { (s, d) =>
       val emb = Tables.t(s, d, "embeddings")
       GraphAnn.appendServeWithCanary(
           emb.filter(col("vec_id") < 400), emb.filter(col("vec_id") >= 400),
@@ -2911,18 +2800,7 @@ object SimilarityOps {
           k = 5, m = 16, dim = Dim, beamWidth = 8, searchRounds = 3,
           minRecallPct = 60)
         .orderBy("qid", "rank")
-    })({ (s, d) =>
-      val emb = Tables.t(s, d, "embeddings")
-      val base = emb.filter(col("vec_id") < 400)
-      val planesB = Similarity.adaptivePlanes(base.count(), targetBucket = 64)
-      val g = GraphAnn.nswGraphCached(base, d, "vec_id", "embedding",
-        m = 16, planes = planesB, dim = Dim, refineRounds = 1)
-      GraphAnn.appendServeWithCanaryOn(g, base,
-          emb.filter(col("vec_id") >= 400), emb.filter(col("vec_id") < 10),
-          "vec_id", "embedding", k = 5, m = 16, dim = Dim, beamWidth = 8,
-          searchRounds = 3, minRecallPct = 60)
-        .orderBy("qid", "rank")
-    }),
+    },
 
     // ---- NSW metadata-filtered search (round-11 verdict item 3 — the
     //      q220 allow-list stance for the graph family): only ids with
@@ -3016,12 +2894,8 @@ object SimilarityOps {
     //      pure storage reorganization, so the hash proves compacted ≡
     //      appended; VectorSpec pins edge-set equality, src colocation
     //      and storage independence. ----
-    // Bench body: cached BASE build (the q190 withBench stance) — the
-    // timed work is append + COMPACT + serve; Verify gates the
-    // fresh-build run body.
-    Q.withBench("q238_nsw_compact", NswAppendOracleSqlStd)(
-      (s, d) => nswCompactServe(s, d, cachedBuild = false))(
-      (s, d) => nswCompactServe(s, d, cachedBuild = true)),
+    Q("q238_nsw_compact", NswAppendOracleSqlStd)(
+      (s, d) => nswCompactServe(s, d)),
 
     // ---- HYBRID retrieval with the NSW dense leg (round-12 verdict
     //      item 4): q194's RRF front door was wired to the IVF route
@@ -3062,13 +2936,8 @@ object SimilarityOps {
     //      process-restart boundaries and with every superseded handle
     //      released before the next step (storage independence by
     //      contract at each hop). ----
-    // Bench body: cached night-0 build (the q190 withBench stance) —
-    // the timed work is the CHAIN (save → load → append → compact →
-    // save → load → serve, both artifact round-trips included); Verify
-    // gates the fresh-build run body.
-    Q.withBench("q247_nsw_lifecycle_chain", NswAppendOracleSqlStd)(
-      (s, d) => nswChainServe(s, d, cachedBuild = false))(
-      (s, d) => nswChainServe(s, d, cachedBuild = true)),
+    Q("q247_nsw_lifecycle_chain", NswAppendOracleSqlStd)(
+      (s, d) => nswChainServe(s, d)),
 
     // ---- beam-width/recall TUNING SWEEP (the q224 operating-curve
     //      stance for the graph family): recall@5 vs exact gold at
@@ -3332,21 +3201,17 @@ object SimilarityOps {
     //      rebuild serves, and the gate is the UNRESTRICTED full-corpus
     //      oracle (no frozen-base seam to pin: there is nothing to
     //      freeze, hence nothing to drift). ----
-    Q.withBench("q298_binary_append", BinaryHammingOracleSql) { (s, d) =>
-      binAppendServe(s, d, cachedBuild = false)
-    } { (s, d) =>
-      binAppendServe(s, d, cachedBuild = true)
+    Q("q298_binary_append", BinaryHammingOracleSql) { (s, d) =>
+      binAppendServe(s, d)
     },
 
     // ---- binary index DELETE (the q256 cell): one anti-join, no
     //      revalidation argument needed at all (nothing trained);
     //      deleted vectors can never resurface — candidates come from
     //      the filtered words, the rerank joins the filtered corpus. ----
-    Q.withBench("q299_binary_delete",
+    Q("q299_binary_delete",
       binaryOracle(adFilter = " AND c.vec_id % 10 <> 3")) { (s, d) =>
-      binDeleteServe(s, d, cachedBuild = false)
-    } { (s, d) =>
-      binDeleteServe(s, d, cachedBuild = true)
+      binDeleteServe(s, d)
     },
 
     // ---- binary metadata-FILTERED serving (the q220/q257 cell): the
@@ -3744,38 +3609,17 @@ object SimilarityOps {
          |  FROM sv$searchRounds WHERE nid <> qid) t WHERE rank <= 10),
          |${rrfFusionTailSql("dtop")}""".stripMargin
 
-  /** The q249 Spark-side corpus augmentation — the textbook MIPS→L2
-    * reduction (Bachrach et al. 2014, the order-preserving transform
-    * FAISS and ScaNN both ship): append sqrt(maxNorm² − ‖x‖²) to every
-    * corpus vector and 0 to every query, and the augmented L2 order
-    * equals the inner-product order (augmented ‖x‖² is ~constant, so
-    * −2·q·x decides). Computed in the QUANTIZED integer domain the
-    * whole vector family lives in: nsq is the exact integer norm, the
-    * appended component is floor(sqrt(mx − nsq)) re-expressed as the
-    * double (aug + 0.5)/1000 so [[graft.functions.VectorFunctions
-    * .quantize]]'s floor(x·1000) recovers exactly `aug` (a bare
-    * aug/1000 can round 1 ulp low and floor to aug−1) — every step is
-    * correctly-rounded IEEE on identical inputs, so DuckDB replays the
-    * augmentation bit-for-bit. The floor quantization makes the
-    * reduction approximate at d2 ties (an index, not a gold), which is
-    * why VectorSpec pins recall against [[Similarity.exactIpKnn]]. */
-  /** Base index for the q187 bodies: fresh (gated run — Verify always
-    * exercises the real build) or cached (bench — the q190 withBench
-    * stance; the cache owns the handle, so only the fresh branch
-    * releases). Builds are deterministic, so both branches serve
-    * identical rows — the shared oracle is the proof. */
+  /** Base index + APPEND + serve — the q187 body. The base is built
+    * fresh (Verify exercises the real build) and released once the
+    * appended handle exists. */
   private def ivfAppendServe(s: org.apache.spark.sql.SparkSession,
-      d: String, cachedBuild: Boolean): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.t(s, d, "embeddings")
     val base = emb.filter(col("vec_id") < AppendBase)
-    val baseIdx =
-      if (cachedBuild) IvfAdcIndex.buildCached(base, d, "vec_id",
-        "embedding", nlist = 8, trainRounds = 2, m = 16, ksub = 8,
-        dim = Dim, pqTrainRounds = 2)
-      else IvfAdcIndex.build(base, "vec_id", "embedding", nlist = 8,
-        trainRounds = 2, m = 16, ksub = 8, dim = Dim, pqTrainRounds = 2)
+    val baseIdx = IvfAdcIndex.build(base, "vec_id", "embedding", nlist = 8,
+      trainRounds = 2, m = 16, ksub = 8, dim = Dim, pqTrainRounds = 2)
     val idx = baseIdx.append(emb.filter(col("vec_id") >= AppendBase))
-    if (!cachedBuild) baseIdx.release()
+    baseIdx.release()
     val out = idx.query(emb.filter(col("vec_id") < 10), k = 5,
         candidates = 50, nprobe = 2)
       .orderBy("qid", "rank")
@@ -3784,20 +3628,15 @@ object SimilarityOps {
     s.createDataFrame(java.util.Arrays.asList(served: _*), out.schema)
   }
 
-  /** Base index + append + COMPACT + serve — the ONE q205 body (fresh
-    * vs cached base build, the [[ivfAppendServe]] rule). */
+  /** Base index + append + COMPACT + serve — the q205 body. */
   private def ivfCompactServe(s: org.apache.spark.sql.SparkSession,
-      d: String, cachedBuild: Boolean): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.t(s, d, "embeddings")
     val base = emb.filter(col("vec_id") < AppendBase)
-    val baseIdx =
-      if (cachedBuild) IvfAdcIndex.buildCached(base, d, "vec_id",
-        "embedding", nlist = 8, trainRounds = 2, m = 16, ksub = 8,
-        dim = Dim, pqTrainRounds = 2)
-      else IvfAdcIndex.build(base, "vec_id", "embedding", nlist = 8,
-        trainRounds = 2, m = 16, ksub = 8, dim = Dim, pqTrainRounds = 2)
+    val baseIdx = IvfAdcIndex.build(base, "vec_id", "embedding", nlist = 8,
+      trainRounds = 2, m = 16, ksub = 8, dim = Dim, pqTrainRounds = 2)
     val appended = baseIdx.append(emb.filter(col("vec_id") >= AppendBase))
-    if (!cachedBuild) baseIdx.release()
+    baseIdx.release()
     val idx = appended.compact()
     appended.release() // compacted storage is independent by contract
     val out = idx.query(emb.filter(col("vec_id") < 10), k = 5,
@@ -3808,20 +3647,15 @@ object SimilarityOps {
     s.createDataFrame(java.util.Arrays.asList(served: _*), out.schema)
   }
 
-  /** Pre-delete index + DELETE + serve — the ONE q219 body (fresh vs
-    * cached build, the [[ivfAppendServe]] rule). */
+  /** Pre-delete index + DELETE + serve — the q219 body. */
   private def ivfDeleteServe(s: org.apache.spark.sql.SparkSession,
-      d: String, cachedBuild: Boolean): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.t(s, d, "embeddings")
-    val idx =
-      if (cachedBuild) IvfAdcIndex.buildCached(emb, d, "vec_id",
-        "embedding", nlist = 8, trainRounds = 2, m = 16, ksub = 8,
-        dim = Dim, pqTrainRounds = 2)
-      else IvfAdcIndex.build(emb, "vec_id", "embedding", nlist = 8,
-        trainRounds = 2, m = 16, ksub = 8, dim = Dim, pqTrainRounds = 2)
+    val idx = IvfAdcIndex.build(emb, "vec_id", "embedding", nlist = 8,
+      trainRounds = 2, m = 16, ksub = 8, dim = Dim, pqTrainRounds = 2)
     val pruned = idx.delete(emb.filter(col("vec_id") % 10 === 3),
       "vec_id")
-    if (!cachedBuild) idx.release()
+    idx.release()
     val out = pruned.query(emb.filter(col("vec_id") < 10), k = 5,
         candidates = 50, nprobe = 2)
       .orderBy("qid", "rank")
@@ -3830,24 +3664,18 @@ object SimilarityOps {
     s.createDataFrame(java.util.Arrays.asList(served: _*), out.schema)
   }
 
-  /** The ONE q216 body: night-0 build (fresh vs cached — the
-    * [[ivfAppendServe]] rule) → save → load → append → compact → save
-    * → load → serve, every post-build step identical between the gated
-    * and bench variants. */
+  /** The q216 body: night-0 build → save → load → append → compact →
+    * save → load → serve. */
   private def ivfChainServe(s: org.apache.spark.sql.SparkSession,
-      d: String, cachedBuild: Boolean): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.t(s, d, "embeddings")
     val base = emb.filter(col("vec_id") < AppendBase)
     val night0 = chainDir(d) + "/night0"
     val night1 = chainDir(d) + "/night1"
-    val built =
-      if (cachedBuild) IvfAdcIndex.buildCached(base, d, "vec_id",
-        "embedding", nlist = 8, trainRounds = 2, m = 16, ksub = 8,
-        dim = Dim, pqTrainRounds = 2)
-      else IvfAdcIndex.build(base, "vec_id", "embedding", nlist = 8,
-        trainRounds = 2, m = 16, ksub = 8, dim = Dim, pqTrainRounds = 2)
+    val built = IvfAdcIndex.build(base, "vec_id", "embedding", nlist = 8,
+      trainRounds = 2, m = 16, ksub = 8, dim = Dim, pqTrainRounds = 2)
     built.save(night0)
-    if (!cachedBuild) built.release()
+    built.release()
     val loaded = IvfAdcIndex.load(s, night0, base)
     val appended = loaded.append(emb.filter(col("vec_id") >= AppendBase))
     loaded.release()
@@ -3864,24 +3692,19 @@ object SimilarityOps {
     s.createDataFrame(java.util.Arrays.asList(served: _*), out.schema)
   }
 
-  /** Pre-delete graph for the q232 bodies: fresh (gated run — Verify
-    * always exercises the real construction) or cached (bench — the
-    * q190 withBench stance; the cache owns the handle, so only the
-    * fresh branch releases). Builds are deterministic, so both
-    * branches serve identical rows — the shared oracle is the proof. */
+  /** Pre-delete graph + DELETE + serve — the q232 body. The graph is
+    * built fresh (Verify exercises the real construction) and released
+    * once the pruned handle exists. */
   private def nswDeleteServe(s: org.apache.spark.sql.SparkSession,
-      d: String, cachedBuild: Boolean): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.t(s, d, "embeddings")
     val planes = Similarity.adaptivePlanes(emb.count(), targetBucket = 64)
-    val g =
-      if (cachedBuild) GraphAnn.nswGraphCached(emb, d, "vec_id",
-        "embedding", m = 16, planes = planes, dim = Dim, refineRounds = 1)
-      else GraphAnn.nswGraphResult(emb, "vec_id", "embedding",
-        m = 16, planes = planes, dim = Dim, refineRounds = 1)
+    val g = GraphAnn.nswGraphResult(emb, "vec_id", "embedding",
+      m = 16, planes = planes, dim = Dim, refineRounds = 1)
     val isDel = col("vec_id") >= 20 && col("vec_id") % 7 === 3
     val g2 = GraphAnn.nswDelete(g, emb.filter(isDel).select("vec_id"),
       "vec_id")
-    if (!cachedBuild) g.release()
+    g.release()
     val out = GraphAnn.nswSearchOn(emb.filter(col("vec_id") < 10), g2,
       emb.filter(!isDel), "vec_id", "embedding", k = 5, beamWidth = 8,
       searchRounds = 3)
@@ -3889,22 +3712,18 @@ object SimilarityOps {
     out.rows.orderBy("qid", "rank")
   }
 
-  /** Base graph + append + serve — the ONE q233 body (fresh vs cached
-    * base build, the [[nswDeleteServe]] rule). */
+  /** Base graph + append + serve — the q233 body. */
   private def nswAppendServe(s: org.apache.spark.sql.SparkSession,
-      d: String, cachedBuild: Boolean): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.t(s, d, "embeddings")
     val base = emb.filter(col("vec_id") < 400)
     val delta = emb.filter(col("vec_id") >= 400)
     val planesB = Similarity.adaptivePlanes(base.count(), targetBucket = 64)
-    val g =
-      if (cachedBuild) GraphAnn.nswGraphCached(base, d, "vec_id",
-        "embedding", m = 16, planes = planesB, dim = Dim, refineRounds = 1)
-      else GraphAnn.nswGraphResult(base, "vec_id", "embedding",
-        m = 16, planes = planesB, dim = Dim, refineRounds = 1)
+    val g = GraphAnn.nswGraphResult(base, "vec_id", "embedding",
+      m = 16, planes = planesB, dim = Dim, refineRounds = 1)
     val appended = GraphAnn.nswAppend(g, base, delta, "vec_id",
       "embedding", m = 16, dim = Dim, beamWidth = 8, searchRounds = 3)
-    if (!cachedBuild) g.release()
+    g.release()
     val out = GraphAnn.nswSearchOn(emb.filter(col("vec_id") < 10),
       appended, emb, "vec_id", "embedding", k = 5, beamWidth = 8,
       searchRounds = 3)
@@ -3912,22 +3731,18 @@ object SimilarityOps {
     out.rows.orderBy("qid", "rank")
   }
 
-  /** Base graph + append + COMPACT + serve — the ONE q238 body (fresh
-    * vs cached base build, the [[nswDeleteServe]] rule). */
+  /** Base graph + append + COMPACT + serve — the q238 body. */
   private def nswCompactServe(s: org.apache.spark.sql.SparkSession,
-      d: String, cachedBuild: Boolean): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.t(s, d, "embeddings")
     val base = emb.filter(col("vec_id") < 400)
     val delta = emb.filter(col("vec_id") >= 400)
     val planesB = Similarity.adaptivePlanes(base.count(), targetBucket = 64)
-    val g =
-      if (cachedBuild) GraphAnn.nswGraphCached(base, d, "vec_id",
-        "embedding", m = 16, planes = planesB, dim = Dim, refineRounds = 1)
-      else GraphAnn.nswGraphResult(base, "vec_id", "embedding",
-        m = 16, planes = planesB, dim = Dim, refineRounds = 1)
+    val g = GraphAnn.nswGraphResult(base, "vec_id", "embedding",
+      m = 16, planes = planesB, dim = Dim, refineRounds = 1)
     val appended = GraphAnn.nswAppend(g, base, delta, "vec_id",
       "embedding", m = 16, dim = Dim, beamWidth = 8, searchRounds = 3)
-    if (!cachedBuild) g.release()
+    g.release()
     val compacted = appended.compact()
     appended.release() // compacted storage is independent by contract
     val out = GraphAnn.nswSearchOn(emb.filter(col("vec_id") < 10),
@@ -3937,25 +3752,20 @@ object SimilarityOps {
     out.rows.orderBy("qid", "rank")
   }
 
-  /** The ONE q247 body: night-0 build (fresh vs cached — the
-    * [[nswDeleteServe]] rule) → save → load → append → compact → save
-    * → load → serve, every post-build step identical between the gated
-    * and bench variants. */
+  /** The q247 body: night-0 build → save → load → append → compact →
+    * save → load → serve. */
   private def nswChainServe(s: org.apache.spark.sql.SparkSession,
-      d: String, cachedBuild: Boolean): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.t(s, d, "embeddings")
     val base = emb.filter(col("vec_id") < 400)
     val delta = emb.filter(col("vec_id") >= 400)
     val planesB = Similarity.adaptivePlanes(base.count(), targetBucket = 64)
     val night0 = nswChainDir(d) + "/n0"
     val night1 = nswChainDir(d) + "/n1"
-    val built =
-      if (cachedBuild) GraphAnn.nswGraphCached(base, d, "vec_id",
-        "embedding", m = 16, planes = planesB, dim = Dim, refineRounds = 1)
-      else GraphAnn.nswGraphResult(base, "vec_id", "embedding",
-        m = 16, planes = planesB, dim = Dim, refineRounds = 1)
+    val built = GraphAnn.nswGraphResult(base, "vec_id", "embedding",
+      m = 16, planes = planesB, dim = Dim, refineRounds = 1)
     built.save(night0)
-    if (!cachedBuild) built.release()
+    built.release()
     val loaded = NswGraph.load(s, night0)
     val appended = GraphAnn.nswAppend(loaded, base, delta, "vec_id",
       "embedding", m = 16, dim = Dim, beamWidth = 8, searchRounds = 3)
@@ -3972,18 +3782,14 @@ object SimilarityOps {
     out.rows.orderBy("qid", "rank")
   }
 
-  /** Base SQ8 index + APPEND + serve — the ONE q254 body (fresh vs
-    * cached base build, the [[ivfAppendServe]] rule). */
+  /** Base SQ8 index + APPEND + serve — the q254 body. */
   private def sq8AppendServe(s: org.apache.spark.sql.SparkSession,
-      d: String, cachedBuild: Boolean): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.t(s, d, "embeddings")
     val baseEmb = emb.filter(col("vec_id") < AppendBase)
-    val base =
-      if (cachedBuild) Sq8Index.buildCached(baseEmb, d, "vec_id",
-        "embedding", dim = Dim)
-      else Sq8Index.build(baseEmb, "vec_id", "embedding", dim = Dim)
+    val base = Sq8Index.build(baseEmb, "vec_id", "embedding", dim = Dim)
     val idx = base.append(emb.filter(col("vec_id") >= AppendBase))
-    if (!cachedBuild) base.release()
+    base.release()
     val out = idx.query(emb.filter(col("vec_id") < 10), k = 5,
         candidates = 100)
       .orderBy("qid", "rank")
@@ -3992,18 +3798,14 @@ object SimilarityOps {
     s.createDataFrame(java.util.Arrays.asList(served: _*), out.schema)
   }
 
-  /** Full SQ8 index + DELETE + serve — the ONE q256 body (the
-    * [[ivfDeleteServe]] rule). */
+  /** Full SQ8 index + DELETE + serve — the q256 body. */
   private def sq8DeleteServe(s: org.apache.spark.sql.SparkSession,
-      d: String, cachedBuild: Boolean): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.t(s, d, "embeddings")
-    val idx =
-      if (cachedBuild) Sq8Index.buildCached(emb, d, "vec_id", "embedding",
-        dim = Dim)
-      else Sq8Index.build(emb, "vec_id", "embedding", dim = Dim)
+    val idx = Sq8Index.build(emb, "vec_id", "embedding", dim = Dim)
     val pruned = idx.delete(emb.filter(col("vec_id") % 10 === 3),
       "vec_id")
-    if (!cachedBuild) idx.release()
+    idx.release()
     val out = pruned.query(emb.filter(col("vec_id") < 10), k = 5,
         candidates = 100)
       .orderBy("qid", "rank")
@@ -4012,18 +3814,15 @@ object SimilarityOps {
     s.createDataFrame(java.util.Arrays.asList(served: _*), out.schema)
   }
 
-  /** Base matryoshka index + APPEND + serve — the ONE q255 body. */
+  /** Base matryoshka index + APPEND + serve — the q255 body. */
   private def mryAppendServe(s: org.apache.spark.sql.SparkSession,
-      d: String, cachedBuild: Boolean): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.t(s, d, "embeddings")
     val baseEmb = emb.filter(col("vec_id") < AppendBase)
-    val base =
-      if (cachedBuild) MatryoshkaIndex.buildCached(baseEmb, d, "vec_id",
-        "embedding", prefixDim = 16)
-      else MatryoshkaIndex.build(baseEmb, "vec_id", "embedding",
-        prefixDim = 16)
+    val base = MatryoshkaIndex.build(baseEmb, "vec_id", "embedding",
+      prefixDim = 16)
     val idx = base.append(emb.filter(col("vec_id") >= AppendBase))
-    if (!cachedBuild) base.release()
+    base.release()
     val out = idx.query(emb.filter(col("vec_id") < 10), k = 5,
         candidates = 100)
       .orderBy("qid", "rank")
@@ -4032,18 +3831,15 @@ object SimilarityOps {
     s.createDataFrame(java.util.Arrays.asList(served: _*), out.schema)
   }
 
-  /** Full matryoshka index + DELETE + serve — the ONE q258 body. */
+  /** Full matryoshka index + DELETE + serve — the q258 body. */
   private def mryDeleteServe(s: org.apache.spark.sql.SparkSession,
-      d: String, cachedBuild: Boolean): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.t(s, d, "embeddings")
-    val idx =
-      if (cachedBuild) MatryoshkaIndex.buildCached(emb, d, "vec_id",
-        "embedding", prefixDim = 16)
-      else MatryoshkaIndex.build(emb, "vec_id", "embedding",
-        prefixDim = 16)
+    val idx = MatryoshkaIndex.build(emb, "vec_id", "embedding",
+      prefixDim = 16)
     val pruned = idx.delete(emb.filter(col("vec_id") % 10 === 3),
       "vec_id")
-    if (!cachedBuild) idx.release()
+    idx.release()
     val out = pruned.query(emb.filter(col("vec_id") < 10), k = 5,
         candidates = 100)
       .orderBy("qid", "rank")
@@ -4052,17 +3848,14 @@ object SimilarityOps {
     s.createDataFrame(java.util.Arrays.asList(served: _*), out.schema)
   }
 
-  /** Base binary index + APPEND + serve — the ONE q298 body. */
+  /** Base binary index + APPEND + serve — the q298 body. */
   private def binAppendServe(s: org.apache.spark.sql.SparkSession,
-      d: String, cachedBuild: Boolean): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.t(s, d, "embeddings")
     val baseEmb = emb.filter(col("vec_id") < AppendBase)
-    val base =
-      if (cachedBuild) BinaryIndex.buildCached(baseEmb, d, "vec_id",
-        "embedding")
-      else BinaryIndex.build(baseEmb, "vec_id", "embedding")
+    val base = BinaryIndex.build(baseEmb, "vec_id", "embedding")
     val idx = base.append(emb.filter(col("vec_id") >= AppendBase))
-    if (!cachedBuild) base.release()
+    base.release()
     val out = idx.query(emb.filter(col("vec_id") < 10), k = 5,
         candidates = 100)
       .orderBy("qid", "rank")
@@ -4071,17 +3864,14 @@ object SimilarityOps {
     s.createDataFrame(java.util.Arrays.asList(served: _*), out.schema)
   }
 
-  /** Full binary index + DELETE + serve — the ONE q299 body. */
+  /** Full binary index + DELETE + serve — the q299 body. */
   private def binDeleteServe(s: org.apache.spark.sql.SparkSession,
-      d: String, cachedBuild: Boolean): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.t(s, d, "embeddings")
-    val idx =
-      if (cachedBuild) BinaryIndex.buildCached(emb, d, "vec_id",
-        "embedding")
-      else BinaryIndex.build(emb, "vec_id", "embedding")
+    val idx = BinaryIndex.build(emb, "vec_id", "embedding")
     val pruned = idx.delete(emb.filter(col("vec_id") % 10 === 3),
       "vec_id")
-    if (!cachedBuild) idx.release()
+    idx.release()
     val out = pruned.query(emb.filter(col("vec_id") < 10), k = 5,
         candidates = 100)
       .orderBy("qid", "rank")
@@ -4090,6 +3880,21 @@ object SimilarityOps {
     s.createDataFrame(java.util.Arrays.asList(served: _*), out.schema)
   }
 
+  /** The q249 Spark-side corpus augmentation — the textbook MIPS→L2
+    * reduction (Bachrach et al. 2014, the order-preserving transform
+    * FAISS and ScaNN both ship): append sqrt(maxNorm² − ‖x‖²) to every
+    * corpus vector and 0 to every query, and the augmented L2 order
+    * equals the inner-product order (augmented ‖x‖² is ~constant, so
+    * −2·q·x decides). Computed in the QUANTIZED integer domain the
+    * whole vector family lives in: nsq is the exact integer norm, the
+    * appended component is floor(sqrt(mx − nsq)) re-expressed as the
+    * double (aug + 0.5)/1000 so [[graft.functions.VectorFunctions
+    * .quantize]]'s floor(x·1000) recovers exactly `aug` (a bare
+    * aug/1000 can round 1 ulp low and floor to aug−1) — every step is
+    * correctly-rounded IEEE on identical inputs, so DuckDB replays the
+    * augmentation bit-for-bit. The floor quantization makes the
+    * reduction approximate at d2 ties (an index, not a gold), which is
+    * why VectorSpec pins recall against [[Similarity.exactIpKnn]]. */
   private def mipsAugmented(emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import graft.functions.VectorFunctions.{normSq, quantize}
     // nsq is recomputed INLINE (one codegen'd expression per row), never

@@ -173,14 +173,9 @@ object TextOps {
     //      to match. Scale: train cost is q134; the apply itself is
     //      `rounds` folds over the vocab-sized type table in ONE pass,
     //      then a two-phase subword agg + top-k. ----
-    Q.withBench("q141_bpe_encode", BpeEncodeTop50Sql) { (s, d) =>
+    Q("q141_bpe_encode", BpeEncodeTop50Sql) { (s, d) =>
       subwordTop50(Bpe.encoded(Tables.t(s, d, "documents"), "text",
         rounds = 10))
-    } { (s, d) =>
-      // bench body: training memoized per data dir (training cost is
-      // q134's operator); the timed work is the one-pass encode fold
-      subwordTop50(Bpe.encodedCached(Tables.t(s, d, "documents"), "text",
-        rounds = 10, cacheKey = d))
     },
 
     // ---- tokenizer-ARTIFACT round-trip (the tokenizer.json analog of
@@ -190,7 +185,7 @@ object TextOps {
     //      a production pipeline runs against a tokenizer trained once.
     //      Gated against the SAME oracle as q141, so the hash proves the
     //      artifact round-trip loses nothing (order, symbols, count).
-    //      Training memoizes per dataset (q141's bench rule); the timed
+    //      Training memoizes per dataset (Bpe.trainedMerges); the timed
     //      work is save + load + the one-pass encode fold. ----
     Q("q191_bpe_artifact_roundtrip", BpeEncodeTop50Sql) { (s, d) =>
       val docs = Tables.t(s, d, "documents")
@@ -236,9 +231,9 @@ object TextOps {
     //      ~107-merge total pair supply (31 word types, 138 type-chars),
     //      so the late passes train against a substantially merged state
     //      q174's 20 merges never reach. Rank window K = 4·batchSize =
-    //      32, as in the engine. Depth beyond the fixture's supply is
-    //      BpeDeepProbe's job (timed ≥1k-merge runs on a derived corpus
-    //      with ~600k-merge supply — BASELINE.md). ----
+    //      32, as in the engine. Depth beyond the fixture's supply was
+    //      timed on a derived corpus with ~600k-merge supply (≥1k-merge
+    //      runs — BASELINE.md's round-8 deep-BPE record). ----
     Q("q186_bpe_batched_deep", {
       val B = 8; val M = 8; val K = 32
       val raw = s"""WITH RECURSIVE $bpeBaseCte,
@@ -265,7 +260,7 @@ object TextOps {
     //      join, so a lost AND an invented word both surface. The oracle
     //      replays the full 10-round train+apply chain before
     //      decoding. ----
-    Q.withBench("q173_bpe_decode", {
+    Q("q173_bpe_decode", {
       val R = 10
       s"""WITH $bpeBaseCte,
          |${(1 to R).map(bpeRoundCte).mkString(",\n")},
@@ -279,11 +274,6 @@ object TextOps {
          |FROM rec FULL JOIN orig USING (w)""".stripMargin
     }) { (s, d) =>
       Bpe.decodeRoundTrip(Tables.t(s, d, "documents"), "text", rounds = 10)
-    } { (s, d) =>
-      // bench body: training memoized per data dir (training cost is
-      // q134's operator); the timed work is the decode fold + joins
-      Bpe.decodeRoundTripCached(Tables.t(s, d, "documents"), "text",
-        rounds = 10, cacheKey = d)
     },
 
     // ---- Tokenizer FERTILITY by source: pieces-per-token and
@@ -296,53 +286,45 @@ object TextOps {
     //      broadcast type table — the token stream itself is never
     //      re-encoded or shuffled by word. Oracle replays the full
     //      10-round train + apply chain, then the same join + ratios. ----
-    {
-      import org.apache.spark.sql.DataFrame
-      def body(enc: DataFrame, docs: DataFrame): DataFrame = {
-        val typ = enc.select(array_join(col("syms"), "").as("w"),
-          size(col("syms")).cast("long").as("np"))
-        val tok = docs.select(col("source"),
-            explode(tokensRe(col("text"))).as("w"))
-          .filter(col("w").rlike("^[A-Za-z0-9]+$"))
-        tok.join(broadcast(typ), Seq("w"))
-          .groupBy("source")
-          .agg(count(lit(1)).as("ntok"),
-            sum(col("np")).cast("long").as("pieces"),
-            sum(length(col("w"))).cast("long").as("chars"),
-            (sum(col("np")).cast("double") / count(lit(1)).cast("double"))
-              .as("fertility"),
-            (sum(col("np")).cast("double")
-              / sum(length(col("w"))).cast("double")).as("pieces_per_char"))
-          .orderBy("source")
-      }
-      Q.withBench("q181_bpe_fertility", {
-        val R = 10
-        s"""WITH $bpeBaseCte,
-           |${(1 to R).map(bpeRoundCte).mkString(",\n")},
-           |typ AS (SELECT array_to_string(syms, '') AS w, len(syms) AS np
-           |        FROM s$R),
-           |tokf AS (
-           |  SELECT source, tok AS w FROM (
-           |    SELECT source,
-           |      unnest(regexp_extract_all(text, '[\\p{L}\\p{N}]+')) AS tok
-           |    FROM documents) u
-           |  WHERE regexp_matches(tok, '^[A-Za-z0-9]+${"$"}'))
-           |SELECT source, count(*) AS ntok,
-           |  CAST(sum(t.np) AS BIGINT) AS pieces,
-           |  CAST(sum(length(f.w)) AS BIGINT) AS chars,
-           |  CAST(sum(t.np) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-           |    AS fertility,
-           |  CAST(sum(t.np) AS DOUBLE) / CAST(sum(length(f.w)) AS DOUBLE)
-           |    AS pieces_per_char
-           |FROM tokf f JOIN typ t USING (w)
-           |GROUP BY source ORDER BY source""".stripMargin
-      }) { (s, d) =>
-        body(Bpe.encoded(Tables.t(s, d, "documents"), "text", rounds = 10),
-          Tables.t(s, d, "documents"))
-      } { (s, d) =>
-        body(Bpe.encodedCached(Tables.t(s, d, "documents"), "text",
-          rounds = 10, cacheKey = d), Tables.t(s, d, "documents"))
-      }
+    Q("q181_bpe_fertility", {
+      val R = 10
+      s"""WITH $bpeBaseCte,
+         |${(1 to R).map(bpeRoundCte).mkString(",\n")},
+         |typ AS (SELECT array_to_string(syms, '') AS w, len(syms) AS np
+         |        FROM s$R),
+         |tokf AS (
+         |  SELECT source, tok AS w FROM (
+         |    SELECT source,
+         |      unnest(regexp_extract_all(text, '[\\p{L}\\p{N}]+')) AS tok
+         |    FROM documents) u
+         |  WHERE regexp_matches(tok, '^[A-Za-z0-9]+${"$"}'))
+         |SELECT source, count(*) AS ntok,
+         |  CAST(sum(t.np) AS BIGINT) AS pieces,
+         |  CAST(sum(length(f.w)) AS BIGINT) AS chars,
+         |  CAST(sum(t.np) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+         |    AS fertility,
+         |  CAST(sum(t.np) AS DOUBLE) / CAST(sum(length(f.w)) AS DOUBLE)
+         |    AS pieces_per_char
+         |FROM tokf f JOIN typ t USING (w)
+         |GROUP BY source ORDER BY source""".stripMargin
+    }) { (s, d) =>
+      val enc = Bpe.encoded(Tables.t(s, d, "documents"), "text",
+        rounds = 10)
+      val typ = enc.select(array_join(col("syms"), "").as("w"),
+        size(col("syms")).cast("long").as("np"))
+      val tok = Tables.t(s, d, "documents").select(col("source"),
+          explode(tokensRe(col("text"))).as("w"))
+        .filter(col("w").rlike("^[A-Za-z0-9]+$"))
+      tok.join(broadcast(typ), Seq("w"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("ntok"),
+          sum(col("np")).cast("long").as("pieces"),
+          sum(length(col("w"))).cast("long").as("chars"),
+          (sum(col("np")).cast("double") / count(lit(1)).cast("double"))
+            .as("fertility"),
+          (sum(col("np")).cast("double")
+            / sum(length(col("w"))).cast("double")).as("pieces_per_char"))
+        .orderBy("source")
     },
 
     // ---- G1: explode + top-k over generated rows ----
@@ -1773,7 +1755,7 @@ object TextOps {
 
   // data dir -> the ONE q279 artifact dir this JVM round-trips through
   // (the SimilarityOps idxDirs rule: each invocation overwrite-saves —
-  // the save IS the operator — but repeated bench/verify passes must
+  // the save IS the operator — but repeated passes in one JVM must
   // not accumulate artifact copies).
   private val dsirDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -2097,7 +2079,7 @@ object TextOps {
 
   // data dir -> the ONE q286 artifact dir this JVM round-trips through
   // (the dsirDirs rule: each invocation overwrite-saves — the save IS
-  // the operator — but repeated bench/verify passes must not accumulate
+  // the operator — but repeated passes in one JVM must not accumulate
   // artifact copies).
   private val classifierDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()

@@ -32,7 +32,7 @@ object FormatOps {
 
   // dir|format -> the ONE temp dir this JVM writes that round-trip into
   // (each invocation overwrite-writes the same dir — the write is the
-  // operator under test — but repeated bench/verify passes must not
+  // operator under test — but repeated passes in one JVM must not
   // accumulate a fresh full-table copy per call)
   private val rtDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
 

@@ -18,13 +18,13 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamHarness {
 
-  /** Memory-sink names must be unique per invocation (bench warmup +
-    * timed passes + verify all execute the same query in one session). */
+  /** Memory-sink names must be unique per invocation (a warm-up, repeated
+    * runs and the specs may execute the same query in one session). */
   private val sinkId = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // prefix -> the previous invocation's sink view, dropped when the next
   // invocation starts: a memory sink retains its FULL result driver-side
-  // for as long as the view exists, so a 3-pass bench over the streaming
+  // for as long as the view exists, so repeated runs of the streaming
   // queries would otherwise pin every prior pass's rows in the heap
   private val lastSink =
     new java.util.concurrent.ConcurrentHashMap[String, String]()

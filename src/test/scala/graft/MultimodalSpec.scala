@@ -299,33 +299,4 @@ class MultimodalSpec extends SparkTestBase {
     }
     assert(wd.toSeq === expect, "decoded aHash drifted from the generator")
   }
-
-  test("bench body is row-identical to the gated body for the decode family") {
-    // the benchRun reads pre-materialized payload parquet instead of
-    // synthesizing records inline; semantics must be IDENTICAL or the
-    // bench would time a different operator than the one the gate checks
-    val withBench = SparkEntry.allQueries.filter(_.benchRun.isDefined)
-    assert(withBench.map(_.name).toSet === Set(
-      "q98_image_decode", "q99_audio_decode", "q100_jpeg_decode",
-      "q101_audio_formats", "q102_video_frames", "q103_image_resize",
-      "q104_gif_decode", "q141_bpe_encode", "q173_bpe_decode",
-      "q181_bpe_fertility", "q190_ann_drift_retrain",
-      "q275_release_semantic", "q307_image_ahash_neardup",
-      // round-17: the mutation-family ANN/NSW gates bench their
-      // operator (append/delete/compact/chain/stream-maintain) over a
-      // cached deterministic build — the q190 withBench stance
-      "q187_ann_index_append", "q205_ann_index_compact",
-      "q216_ann_lifecycle_chain", "q217_ann_stream_maintain",
-      "q219_ann_index_delete", "q232_nsw_delete", "q233_nsw_append",
-      "q234_nsw_maintain", "q238_nsw_compact", "q247_nsw_lifecycle_chain",
-      // round-17: the SQ8/matryoshka/binary mutation gates get the same
-      // stance (shared body, fresh gated build vs cached bench build)
-      "q254_sq8_append", "q255_matryoshka_append", "q256_sq8_delete",
-      "q258_matryoshka_delete", "q298_binary_append", "q299_binary_delete"))
-    for (q <- withBench) {
-      val gated = q.run(spark, Sf).collect().map(_.toString).sorted
-      val bench = q.bench(spark, Sf).collect().map(_.toString).sorted
-      assert(gated.toSeq === bench.toSeq, s"bench body drifted for ${q.name}")
-    }
-  }
 }
