@@ -7,18 +7,36 @@ import org.apache.spark.sql.types._
 
 /** OSM XML → 5 normalized tables, Spark-first (SURVEY.md §2.1 S1/S2, §2.4).
   *
-  * The reference stream-parses with iterparse one element at a time
-  * (py:179–186); here the whole shape is declarative: the built-in XML
-  * source scans `<node>`/`<way>` row-tags in parallel splits, projection +
-  * cleaning are codegen'd expressions, and the child `<tag>`/`<nd>` lists
-  * flatten with explode/posexplode (G1/G2). The entire pipeline is narrow —
-  * no shuffle — so it scales linearly with input splits.
+  * The reference stream-parses with iterparse, one pass, one element at a
+  * time (py:179–186). Here `OsmXml`, the engine's splittable OSM reader,
+  * makes the same single pass in as many tasks as Spark's file-split sizing
+  * gives (`spark.sql.files.maxPartitionBytes`/`openCostInBytes`): one row
+  * per `<node>` or `<way>` with a `kind` column, the 8 attributes as
+  * strings and the `<tag>`/`<nd>` child lists. A split owns every element
+  * whose `<` byte lies inside it, so each element is read once. Projection
+  * and cleaning are codegen'd expressions, and the child lists flatten with
+  * explode/posexplode (G1/G2). The whole pipeline is narrow — no shuffle —
+  * so it scales linearly with input splits. `runEtl` caches the one scan
+  * and feeds all five sinks from it.
   *
-  * `<relation>` elements are dropped by row-tag selection (S2, py:108/149).
+  * Why not Spark's built-in XML source: on Spark 4.1 its `multiLine`
+  * option defaults to true, which reads each file in ONE task, and it
+  * scans once per row tag, so two full single-task parses per pass.
+  * `multiLine=false` does split, but its record reader costs 2–3× more per
+  * byte, so the wall time barely moves.
   *
-  * Explicit read schemas (no inference): single-child elements then parse as
-  * 1-element arrays, and a second schema-inference pass over 100 TB of XML
-  * is avoided.
+  * Robustness rules (details in `OsmXml`):
+  *  - PERMISSIVE: one malformed element must not kill a 100 TB job. An
+  *    element the parser rejects becomes a row of nulls and parsing resumes
+  *    at the next element; a well-formed but bad value (`lat="bad"`)
+  *    becomes null through `try_cast` in the projections.
+  *  - `<node>`/`<way>` must be children of the `<osm>` root. An osmChange
+  *    file or any other nesting is refused with an error.
+  *  - `<relation>` and `<bounds>` elements are not read (S2, py:108/149).
+  *
+  * `readNodesRaw`/`readWaysRaw` are a `kind` filter plus a projection onto
+  * the fixed read schemas below (no inference, so no second pass over the
+  * data).
   */
 object OsmIngest {
 
@@ -26,9 +44,8 @@ object OsmIngest {
     StructField("_k", StringType), StructField("_v", StringType))))
 
   // Attributes read as strings, typed via try_cast in the projections:
-  // the XML source's typed attribute parsing throws on a single malformed
-  // value even in PERMISSIVE mode (and ANSI casts would too); try_cast
-  // degrades bad cells to null without killing a 100 TB job.
+  // try_cast degrades a bad cell to null where a typed parse (or an ANSI
+  // cast) would fail the task.
   val nodeReadSchema: StructType = StructType(Seq(
     StructField("_id", StringType), StructField("_lat", StringType),
     StructField("_lon", StringType), StructField("_user", StringType),
@@ -43,22 +60,18 @@ object OsmIngest {
     StructField("tag", tagArray),
     StructField("nd", ArrayType(StructType(Seq(StructField("_ref", StringType)))))))
 
-  def readRaw(spark: SparkSession, path: String, rowTag: String,
-              schema: StructType): DataFrame =
-    spark.read.format("xml")
-      .option("rowTag", rowTag)
-      .option("attributePrefix", "_")
-      // one malformed element must not kill a 100 TB job: unparseable
-      // attributes degrade to nulls instead of failing the task
-      .option("mode", "PERMISSIVE")
-      .schema(schema)
-      .load(path)
+  /** One scan of the whole file: every `<node>` and `<way>` (`OsmXml.schema`). */
+  def readOsm(spark: SparkSession, path: String): DataFrame =
+    spark.read.format(classOf[OsmXml].getName).schema(OsmXml.schema).load(path)
+
+  private def ofKind(raw: DataFrame, kind: String, schema: StructType): DataFrame =
+    raw.filter(col("kind") === kind).select(schema.fieldNames.map(col): _*)
 
   def readNodesRaw(spark: SparkSession, path: String): DataFrame =
-    readRaw(spark, path, "node", nodeReadSchema)
+    ofKind(readOsm(spark, path), "node", nodeReadSchema)
 
   def readWaysRaw(spark: SparkSession, path: String): DataFrame =
-    readRaw(spark, path, "way", wayReadSchema)
+    ofKind(readOsm(spark, path), "way", wayReadSchema)
 
   private def tc(c: String, t: String) = expr(s"try_cast($c AS $t)")
 
@@ -152,25 +165,28 @@ object OsmIngest {
     wayNodes(waysRaw).createOrReplaceTempView("way_nodes")
   }
 
-  /** The full ETL (EP1, py:206–236): one XML pass per row-tag, 5 CSV sinks.
+  /** The full ETL (EP1, py:206–236): one XML pass, 5 CSV sinks.
     * Equivalent of process_map; each output is an independent narrow job. */
   def runEtl(spark: SparkSession, osmPath: String, outDir: String): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val n = readNodesRaw(spark, osmPath).cache()
-    val w = readWaysRaw(spark, osmPath).cache()
-    // Submit all five sink jobs concurrently: the scheduler overlaps the
-    // node-side and way-side parses and the per-table writes (cached raw
-    // frames are computed once — RDD cache locks per partition). Serial
-    // submission would serialize five scans of work behind one another.
-    val jobs = Seq(
-      Future(OsmCsv.write(nodes(n), s"$outDir/nodes", "nodes")),
-      Future(OsmCsv.write(nodeTags(n), s"$outDir/node_tags", "node_tags")),
-      Future(OsmCsv.write(ways(w), s"$outDir/ways", "ways")),
-      Future(OsmCsv.write(wayTags(w), s"$outDir/way_tags", "way_tags")),
-      Future(OsmCsv.write(wayNodes(w), s"$outDir/way_nodes", "way_nodes")))
-    Await.result(Future.sequence(jobs), Duration.Inf)
-    n.unpersist(); w.unpersist()
+    val raw = readOsm(spark, osmPath).cache()
+    try {
+      val n = ofKind(raw, "node", nodeReadSchema)
+      val w = ofKind(raw, "way", wayReadSchema)
+      // Submit all five sink jobs concurrently: the scheduler overlaps the
+      // scan with the per-table writes, and the cached scan is computed
+      // once (RDD cache locks per partition). Every sink is waited for, so
+      // none is still writing when a failure is rethrown.
+      val jobs = Seq(
+        Future(OsmCsv.write(nodes(n), s"$outDir/nodes", "nodes")),
+        Future(OsmCsv.write(nodeTags(n), s"$outDir/node_tags", "node_tags")),
+        Future(OsmCsv.write(ways(w), s"$outDir/ways", "ways")),
+        Future(OsmCsv.write(wayTags(w), s"$outDir/way_tags", "way_tags")),
+        Future(OsmCsv.write(wayNodes(w), s"$outDir/way_nodes", "way_nodes")))
+      val failures = jobs.flatMap(j => Await.ready(j, Duration.Inf).value.get.failed.toOption)
+      failures.headOption.foreach { e => failures.tail.foreach(e.addSuppressed); throw e }
+    } finally raw.unpersist()
   }
 }
