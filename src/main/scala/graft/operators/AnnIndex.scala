@@ -13,16 +13,18 @@ import org.apache.spark.sql.functions._
   *
   * `build` runs the exact q184 construction (Lloyd-trained coarse
   * quantizer, per-subspace Lloyd-trained PQ codebooks, one narrow
-  * cell-assign + encode map over the corpus) and PERSISTS the resulting
+  * cell-assign + encode map over the corpus) and persists the resulting
   * (nid, cell, code0..m-1) frame — the IVFADC index, m + 12 bytes per
-  * corpus vector — materializing it eagerly so no query pays encode
-  * work. The handle's query frame is rebased onto the materialized
-  * RDD (the Bpe.flatLineage move): its logical plan is a flat scan, so
-  * no downstream optimizer rule can fold the m·ksub encode expressions
-  * back into a query's plan, and plan-string costs stay O(1) per query.
-  * Unlike the inline body's `localCheckpoint(false)`, `persist` keeps
+  * corpus vector — with [[Graph.persistOwned]], materializing it eagerly
+  * so no query pays encode work. The handle's query frame is a flat scan
+  * of the persisted rows, so no downstream optimizer rule can fold the
+  * m·ksub encode expressions back into a query's plan, and plan-string
+  * costs stay O(1) per query. The storage is this handle's alone (a
+  * Dataset `persist` would share one CacheManager entry between two
+  * builds with identical plans, and releasing either would uncache
+  * both); unlike the inline body's `localCheckpoint(false)` it keeps
   * lineage — an executor loss recomputes the lost blocks instead of
-  * failing the query — and `release()` actually frees the storage.
+  * failing the query — and `release()` actually frees it.
   *
   * Queries never touch corpus vectors between the index scan and the
   * bounded rerank fetch: routing + ADC tables are narrow maps on the
@@ -40,7 +42,8 @@ final class IvfAdcIndex private (
     releaseStorage: () => Unit,
     cb: IndexedSeq[IndexedSeq[(Seq[Long], Long)]],
     cents: Seq[(Long, Seq[Long])],
-    corpus: DataFrame, idCol: String, vecCol: String, sub: Int) {
+    corpus: DataFrame, idCol: String, vecCol: String, sub: Int)
+    extends VectorIndex[IvfAdcIndex] {
 
   private val spark = codes.sparkSession
   private val m = cb.length
@@ -367,80 +370,30 @@ object IvfAdcIndex {
     val cents = Similarity.collectTrainedCentroids(corpus, idCol, vecCol,
       nlist, trainRounds)
     val shift = Similarity.shiftFor(nlist)
-    val cached = Similarity.pqCodes(
+    val (flat, rdd) = Graph.persistOwned(Similarity.pqCodes(
         p.select(col(idCol).as("nid"), col("q"), col("nsq")), cb, sub)
       .withColumn("cell",
         least(Similarity.cellAssignKeys(cents, shift): _*) % shift)
-      .drop("q", "nsq")
-      .persist()
-    cached.count() // materialize: queries must never pay encode work
-    // flat-lineage rebase: the handle's plan is a bare scan of the
-    // materialized RDD (reads the cache blocks; recomputes through the
-    // cached plan's lineage only if released or an executor is lost)
-    val flat = corpus.sparkSession.createDataFrame(cached.rdd, cached.schema)
-    new IvfAdcIndex(flat, () => { cached.unpersist(); () }, cb, cents,
+      .drop("q", "nsq"))
+    flat.count() // materialize: queries must never pay encode work
+    new IvfAdcIndex(flat, () => Graph.release(rdd), cb, cents,
       corpus, idCol, vecCol, sub)
   }
 
-  // cacheKey -> built index handle (the Bpe.trainedMerges memoization
-  // pattern applied to a RESIDENT artifact: each entry holds a persisted
-  // m+12-bytes-per-vector frame, so the bound matters more than for the
-  // merge lists). Bounded at MaxCacheEntries; when full, ONE arbitrary
-  // entry is evicted and released (freeing its storage) rather than
-  // clearing wholesale — hot entries survive.
-  private val MaxCacheEntries = 8
-  private val handleCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfAdcIndex]()
+  private val handleCache = new HandleCache[IvfAdcIndex](8, _.release())
 
-  /** [[build]] memoized per (`cacheKey`, corpus plan, parameters) — the
-    * body of q185: the timed work is index SERVING (route + ADC +
-    * rerank), the build amortizing across calls exactly as a production
-    * index amortizes across query batches. Semantics identical to a
-    * fresh build (training is deterministic per dataset; AnnIndexSpec
-    * asserts handle-served ≡ inline).
-    *
-    * The key folds in the corpus's canonicalized plan hash and the
-    * owning session's UUID, not just the caller-supplied `cacheKey`:
-    * two callers passing the same key with different corpus frames
-    * (one filtered, say) get their own indexes rather than silently
-    * sharing whichever corpus arrived first, and a handle built on a
-    * stopped session can never be served to a new one — the UUID is
-    * unique per session object, where an identity hash could collide
-    * between a stopped session and its successor.
-    *
-    * Locking is PER KEY ([[java.util.concurrent.ConcurrentHashMap]]
-    * `computeIfAbsent` blocks only same-bin callers), so concurrent
-    * builds for different datasets proceed in parallel instead of
-    * serializing behind one global monitor. Eviction runs before the
-    * compute without a global lock: two racing first-time callers can
-    * transiently overshoot MaxCacheEntries by one — bounded and
-    * self-correcting on the next call, the right trade against
-    * serializing every build. */
+  /** [[build]] memoized per (`cacheKey`, corpus plan, parameters,
+    * session) through [[HandleCache]] — the body of q185: the timed work
+    * is index SERVING (route + ADC + rerank), the build amortizing across
+    * calls exactly as a production index amortizes across query batches.
+    * Semantics identical to a fresh build (training is deterministic per
+    * dataset; AnnIndexSpec asserts handle-served ≡ inline). Callers must
+    * NOT release a cached handle — the cache owns it. */
   def buildCached(corpus: DataFrame, cacheKey: String, idCol: String,
       vecCol: String, nlist: Int, trainRounds: Int, m: Int, ksub: Int,
-      dim: Int, pqTrainRounds: Int = 2): IvfAdcIndex = {
-    val sessionToken =
-      org.apache.spark.sql.graftbridge.ColumnBridge.sessionUUID(
-        corpus.sparkSession)
-    val k = s"${new java.io.File(cacheKey).getCanonicalPath}|$idCol|$vecCol" +
-      s"|$nlist|$trainRounds|$m|$ksub|$dim|$pqTrainRounds" +
-      s"|${corpus.queryExecution.analyzed.semanticHash()}" +
-      s"|$sessionToken"
-    if (handleCache.size >= MaxCacheEntries && !handleCache.containsKey(k)) {
-      val it = handleCache.keys()
-      if (it.hasMoreElements) {
-        val victim = it.nextElement()
-        val evicted = handleCache.remove(victim)
-        // a victim whose session has since stopped can't unpersist —
-        // dropping the handle is the right outcome either way; null
-        // means another evictor won the race, equally fine
-        if (evicted != null)
-          try evicted.release()
-          catch { case _: IllegalStateException => () }
-      }
-    }
-    handleCache.computeIfAbsent(k, _ =>
+      dim: Int, pqTrainRounds: Int = 2): IvfAdcIndex =
+    handleCache.get(HandleCache.key(corpus, cacheKey,
+      s"$idCol|$vecCol|$nlist|$trainRounds|$m|$ksub|$dim|$pqTrainRounds"))(
       build(corpus, idCol, vecCol, nlist, trainRounds, m, ksub, dim,
         pqTrainRounds))
-  }
 }

@@ -159,13 +159,7 @@ object GraphAnn {
       StructField("d2", LongType), StructField("rank", IntegerType)))
   }
 
-  // Bounded handle cache for [[nswGraphCached]] — the
-  // [[IvfAdcIndex.buildCached]] machinery applied to the graph family.
-  // FIFO-ish eviction via the map's iteration order rather than
-  // clearing wholesale — hot entries survive.
-  private val MaxGraphCacheEntries = 8
-  private val graphCache =
-    new java.util.concurrent.ConcurrentHashMap[String, NswGraph]()
+  private val graphCache = new HandleCache[NswGraph](8, _.release())
 
   /** [[nswGraphResult]] memoized per (`cacheKey`, corpus plan,
     * parameters, session) — the [[IvfAdcIndex.buildCached]] stance for
@@ -175,40 +169,15 @@ object GraphAnn {
     * amortizes across query batches. Semantics identical to a fresh
     * build (seed + NN-descent are deterministic per dataset; the shared
     * oracle replays construction either way, and VectorSpec asserts
-    * cached-served ≡ freshly-built-served).
-    *
-    * The key folds in the corpus's canonicalized plan hash and the
-    * owning session's UUID (not just `cacheKey`), so two callers with
-    * different corpus frames — full vs base-only vs MIPS-augmented —
-    * get their own graphs, and a handle built on a stopped session is
-    * never served to a new one. Callers must NOT release a cached
-    * handle: the cache owns it (release happens on eviction). */
+    * cached-served ≡ freshly-built-served). Keys and eviction are
+    * [[HandleCache]]'s. Callers must NOT release a cached handle: the
+    * cache owns it (release happens on eviction). */
   def nswGraphCached(corpus: DataFrame, cacheKey: String, idCol: String,
       vecCol: String, m: Int, planes: Int, dim: Int,
-      refineRounds: Int): NswGraph = {
-    val sessionToken =
-      org.apache.spark.sql.graftbridge.ColumnBridge.sessionUUID(
-        corpus.sparkSession)
-    val k = s"${new java.io.File(cacheKey).getCanonicalPath}|$idCol" +
-      s"|$vecCol|$m|$planes|$dim|$refineRounds" +
-      s"|${corpus.queryExecution.analyzed.semanticHash()}" +
-      s"|$sessionToken"
-    if (graphCache.size >= MaxGraphCacheEntries && !graphCache.containsKey(k)) {
-      val it = graphCache.keys()
-      if (it.hasMoreElements) {
-        val victim = it.nextElement()
-        val evicted = graphCache.remove(victim)
-        // a victim whose session has since stopped can't unpersist —
-        // dropping the handle is the right outcome either way; null
-        // means another evictor won the race, equally fine
-        if (evicted != null)
-          try evicted.release()
-          catch { case _: IllegalStateException => () }
-      }
-    }
-    graphCache.computeIfAbsent(k, _ =>
+      refineRounds: Int): NswGraph =
+    graphCache.get(HandleCache.key(corpus, cacheKey,
+      s"$idCol|$vecCol|$m|$planes|$dim|$refineRounds"))(
       nswGraphResult(corpus, idCol, vecCol, m, planes, dim, refineRounds))
-  }
 
   /** The NSW neighbor graph: (src, dst, d2), at most m out-edges per
     * node that shares a bucket with at least one peer. Deterministic:

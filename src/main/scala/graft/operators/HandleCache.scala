@@ -1,12 +1,11 @@
 package graft.operators
 
-/** Bounded per-JVM cache of built serving handles — the
-  * [[IvfAdcIndex.buildCached]] machinery factored into ONE owner so the
-  * remaining serving families (SQ8, matryoshka, binary) get the same
-  * stance without five copies of the eviction logic. The timed work of
-  * a serving-path gate is the SEARCH/round-trip/stream drain; the build
-  * amortizes across calls exactly as a production index amortizes
-  * across query batches. Semantics identical to a fresh build (training
+/** Bounded per-JVM cache of built serving handles — the ONE owner of the
+  * memo and eviction logic every serving family's `buildCached` uses
+  * ([[IvfAdcIndex]], the NSW graph, and the SQ8 / matryoshka / binary
+  * [[CodedIndex]] families). The timed work of a serving-path gate is
+  * the SEARCH/round-trip/stream drain; the build amortizes across calls
+  * exactly as a production index amortizes across query batches. Semantics identical to a fresh build (training
   * and encoding are deterministic per dataset; the shared oracles
   * replay construction either way).
   *
@@ -18,9 +17,10 @@ package graft.operators
   * served to a new one.
   *
   * Eviction releases ONE arbitrary entry instead of clearing wholesale,
-  * so hot entries survive (the [[IvfAdcIndex.buildCached]] rule); two
-  * racing first-time callers can transiently overshoot `max` by one —
-  * bounded and self-correcting on the next call. Callers must NOT
+  * so hot entries survive; locking is per key (`computeIfAbsent`), so
+  * builds for different keys proceed in parallel; two racing first-time
+  * callers can transiently overshoot `max` by one — bounded and
+  * self-correcting on the next call. Callers must NOT
   * release a cached handle: the cache owns it. */
 private[operators] final class HandleCache[T](max: Int,
     releaseFn: T => Unit) {

@@ -1045,7 +1045,7 @@ object ReleaseOps {
     releaseSql(multilingualFixtureCtes, "mfix", robustTextSql)
 
   // (data dir, query family) -> the ONE release-artifact dir this JVM
-  // round-trips through (the SimilarityOps idxDirs rule: each
+  // round-trips through (the SimilarityOps tempDirs rule: each
   // invocation overwrite-saves — the save IS the operator — but
   // repeated passes in one JVM must not accumulate artifact copies).
   // ONE dir per (data dir, consuming query family) — round-13 advice:

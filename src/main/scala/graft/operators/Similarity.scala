@@ -114,19 +114,14 @@ object Similarity {
   def binaryHammingKnn(queries: DataFrame, corpus: DataFrame,
                        idCol: String, vecCol: String, k: Int,
                        candidates: Int, nBands: Int = 8,
-                       bandBits: Int = 8): DataFrame = {
-    val cp = prepared(corpus, idCol, vecCol)
-    val words = cp.select(col(idCol).as("nid"),
-      binaryWordsCol(nBands, bandBits).as("wds"))
-    binaryServe(queries, words, cp, idCol, vecCol, k, candidates,
-      nBands, bandBits)
-  }
+                       bandBits: Int = 8): DataFrame =
+    BinaryCodec(nBands, bandBits).knn(queries,
+      prepared(corpus, idCol, vecCol), idCol, vecCol, k, candidates)
 
   /** The sign-bit word packing lane over a prepared `q` column — ONE
-    * owner for the inline route, [[BinaryIndex.build]]'s materialized
-    * encode and its append path (encode is DATA-INDEPENDENT — no
-    * trained state — so every route packs identical words by
-    * construction). */
+    * owner for [[BinaryCodec]]'s encode, so the inline route and every
+    * binary handle pack identical words (encode is DATA-INDEPENDENT — no
+    * trained state). */
   private[operators] def binaryWordsCol(nBands: Int, bandBits: Int): Column = {
     require(nBands > 0 && bandBits > 0 && bandBits <= 62,
       s"nBands=$nBands bandBits=$bandBits out of range")
@@ -137,26 +132,17 @@ object Similarity {
         "shiftleft(CAST(1 AS BIGINT), d), CAST(0 AS BIGINT))))")
   }
 
-  /** The binary serving core — multi-probed band candidates, hamming
-    * cut, exact rerank — over an EXPLICIT (nid, wds) words frame: ONE
-    * owner for [[binaryHammingKnn]] (words derived inline) and the
-    * [[BinaryIndex]] handle (words materialized / loaded), so
-    * handle-served results equal inline results character for
-    * character (the q185/q251 discipline). `allowed` (first column =
-    * id) semi-joins the words BEFORE the candidate cut — the q220
-    * filtered-serving stance. */
-  private[operators] def binaryServe(queries: DataFrame, words: DataFrame,
-      corpusPrepared: DataFrame, idCol: String, vecCol: String, k: Int,
-      candidates: Int, nBands: Int, bandBits: Int,
-      allowed: Option[DataFrame] = None): DataFrame = {
+  /** The binary candidate stage ([[BinaryCodec]]'s serve) —
+    * multi-probed band candidates, hamming cut, exact rerank — over an
+    * admissible (nid, wds) words frame: derived inline for
+    * [[binaryHammingKnn]], materialized / loaded / allow-list filtered
+    * for a [[BinaryIndex]] handle. */
+  private[operators] def binaryServe(queries: DataFrame,
+      admissible: DataFrame, corpusPrepared: DataFrame, idCol: String,
+      vecCol: String, k: Int, candidates: Int, nBands: Int,
+      bandBits: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(candidates >= k, s"candidates=$candidates must be >= k=$k")
-    val admissible = allowed match {
-      case Some(a) =>
-        words.join(a.select(col(a.columns.head).as("nid")),
-          Seq("nid"), "left_semi")
-      case None => words
-    }
     val qp = prepared(queries, idCol, vecCol)
       .withColumn("wds", binaryWordsCol(nBands, bandBits))
       .select(col(idCol).as("qid"), col("q").as("qq"),
@@ -1212,40 +1198,8 @@ object Similarity {
     * encode, the candidate cut and the rerank bit-for-bit. */
   def sq8Knn(queries: DataFrame, corpus: DataFrame, idCol: String,
              vecCol: String, k: Int, candidates: Int, dim: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(candidates >= k, s"candidates=$candidates must be >= k=$k")
     val p = prepared(corpus, idCol, vecCol)
-    // train: per-dimension bounds — ONE agg row to the driver, O(dim)
-    val boundAggs = (0 until dim).flatMap(i => Seq(
-      min(col("q").getItem(i)).as(s"mn$i"),
-      max(col("q").getItem(i)).as(s"mx$i")))
-    val row = p.agg(boundAggs.head, boundAggs.tail: _*).head()
-    val mns = (0 until dim).map(i => row.getLong(2 * i))
-    val mxs = (0 until dim).map(i => row.getLong(2 * i + 1))
-    // encode: narrow per-row map, dim literal-bound div/clamp lanes
-    def codeCol: Column = array((0 until dim).map { i =>
-      val span = mxs(i) - mns(i)
-      if (span > 0L)
-        least(greatest(
-          expr(s"((q[$i] - ${mns(i)}L) * 255L) div ${span}L"), lit(0L)),
-          lit(255L))
-      else lit(0L)
-    }: _*)
-    val codes = p.select(col(idCol).as("nid"), codeCol.as("code"))
-      .withColumn("cnsq", normSq(col("code")))
-    val qcodes = prepared(queries, idCol, vecCol)
-      .select(col(idCol).as("qid"), col("q").as("qq"), col("nsq").as("qnsq"),
-        codeCol.as("qcode"))
-      .withColumn("qcnsq", normSq(col("qcode")))
-    val wA = Window.partitionBy("qid").orderBy(col("adist"), col("nid"))
-    val cand = codes.join(broadcast(qcodes), col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), col("qq"), col("qnsq"),
-        (col("qcnsq") + col("cnsq")
-          - lit(2L) * dot(col("qcode"), col("code"))).cast("long").as("adist"))
-      .withColumn("arank", row_number().over(wA))
-      .filter(col("arank") <= candidates)
-      .select("qid", "nid", "qq", "qnsq")
-    pqRerank(cand, p, idCol, k)
+    Sq8Codec.train(p, dim).knn(queries, p, idCol, vecCol, k, candidates)
   }
 
   /** Two-stage kNN through the vector PREFIX — the Matryoshka (MRL)
@@ -1261,27 +1215,9 @@ object Similarity {
     * with both. All-integer; the oracle replays the slice, the prefix-L2
     * ranking with its tie-break, the cut and the rerank. */
   def matryoshkaKnn(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int, candidates: Int, prefixDim: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(candidates >= k, s"candidates=$candidates must be >= k=$k")
-    val p = prepared(corpus, idCol, vecCol)
-    val pre = p.select(col(idCol).as("nid"),
-        slice(col("q"), 1, prefixDim).as("pq"))
-      .withColumn("pnsq", normSq(col("pq")))
-    val qp = prepared(queries, idCol, vecCol)
-      .select(col(idCol).as("qid"), col("q").as("qq"), col("nsq").as("qnsq"),
-        slice(col("q"), 1, prefixDim).as("qpq"))
-      .withColumn("qpnsq", normSq(col("qpq")))
-    val wA = Window.partitionBy("qid").orderBy(col("adist"), col("nid"))
-    val cand = pre.join(broadcast(qp), col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), col("qq"), col("qnsq"),
-        (col("qpnsq") + col("pnsq")
-          - lit(2L) * dot(col("qpq"), col("pq"))).cast("long").as("adist"))
-      .withColumn("arank", row_number().over(wA))
-      .filter(col("arank") <= candidates)
-      .select("qid", "nid", "qq", "qnsq")
-    pqRerank(cand, p, idCol, k)
-  }
+      vecCol: String, k: Int, candidates: Int, prefixDim: Int): DataFrame =
+    MatryoshkaCodec(prefixDim).knn(queries, prepared(corpus, idCol, vecCol),
+      idCol, vecCol, k, candidates)
 
   /** χ² distribution-drift monitor over base-derived norm deciles — the
     * population-stability check an ingest pipeline runs per batch (see

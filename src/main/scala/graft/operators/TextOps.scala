@@ -135,7 +135,7 @@ object TextOps {
 
   // data dir -> the ONE tokenizer-artifact file this JVM round-trips
   // through (overwrite per invocation — the save is the operator under
-  // test; the SimilarityOps.idxDirs rule)
+  // test; the SimilarityOps.tempDirs rule)
   private val bpeArtifacts =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def bpeArtifact(d: String): String =
@@ -1754,7 +1754,7 @@ object TextOps {
        |${dsirFinalSelect("xd2")}""".stripMargin
 
   // data dir -> the ONE q279 artifact dir this JVM round-trips through
-  // (the SimilarityOps idxDirs rule: each invocation overwrite-saves —
+  // (the SimilarityOps tempDirs rule: each invocation overwrite-saves —
   // the save IS the operator — but repeated passes in one JVM must
   // not accumulate artifact copies).
   private val dsirDirs =

@@ -718,4 +718,68 @@ class AnnIndexSpec extends SparkTestBase {
       served("q264_matryoshka_mips"),
       "matryoshka MIPS artifact round-trip diverges from the in-memory build")
   }
+
+  test("binary delete and filtered serving: deleted ids never resurface, " +
+    "filtered results stay inside the allow-list") {
+    import graft.operators.BinaryIndex
+    val del = emb.filter(col("vec_id") % 10 === 3)
+    val allow = emb.filter(col("label") < 5).select("vec_id")
+    val allowIds = allow.collect().map(_.getLong(0)).toSet
+    val idx = BinaryIndex.build(emb, "vec_id", "embedding")
+    val pruned = idx.delete(del, "vec_id")
+    val fil = rows(idx.queryFiltered(queries, allow, k = 5,
+      candidates = 100))
+    idx.release() // independent storage: pruned must keep serving
+    val deleted = rows(pruned.query(queries, k = 5, candidates = 100))
+    pruned.release()
+    assert(deleted.nonEmpty && !deleted.exists(_._2 % 10 == 3),
+      "a deleted id resurfaced from the binary index")
+    assert(fil.nonEmpty && fil.forall(r => allowIds.contains(r._2)),
+      "binary filtered serve leaked an id outside the allow-list")
+  }
+
+  test("a fresh build of the same corpus and parameters never releases " +
+    "the storage of the resident buildCached handle") {
+    import graft.operators.{BinaryIndex, MatryoshkaIndex, Sq8Index}
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.storage.StorageLevel
+    // the persisted RDDs a frame's plan reads — the handle's storage
+    def storage(df: org.apache.spark.sql.DataFrame): Set[Int] = {
+      def walk(r: RDD[_]): Seq[RDD[_]] =
+        r +: r.dependencies.flatMap(d => walk(d.rdd))
+      walk(df.queryExecution.toRdd)
+        .filter(_.getStorageLevel != StorageLevel.NONE).map(_.id).toSet
+    }
+    val key = s"$Sf/fresh-build-isolation"
+    val dropped = scala.collection.mutable.ArrayBuffer.empty[String]
+    def check(family: String, resident: org.apache.spark.sql.DataFrame)(
+        freshBuildAndRelease: => Unit): Unit = {
+      val held = storage(resident)
+      assert(held.nonEmpty, s"$family: the cached handle holds no storage")
+      freshBuildAndRelease
+      val live = spark.sparkContext.getPersistentRDDs.keySet
+      if (!held.subsetOf(live)) dropped += s"$family ${held -- live}"
+    }
+    check("IVF-ADC", IvfAdcIndex.buildCached(emb, key, "vec_id",
+        "embedding", nlist = 8, trainRounds = 2, m = 16, ksub = 8,
+        dim = 64).codes) {
+      IvfAdcIndex.build(emb, "vec_id", "embedding", nlist = 8,
+        trainRounds = 2, m = 16, ksub = 8, dim = 64).release()
+    }
+    check("SQ8", Sq8Index.buildCached(emb, key, "vec_id", "embedding",
+        dim = 64).stored) {
+      Sq8Index.build(emb, "vec_id", "embedding", dim = 64).release()
+    }
+    check("matryoshka", MatryoshkaIndex.buildCached(emb, key, "vec_id",
+        "embedding", prefixDim = 16).stored) {
+      MatryoshkaIndex.build(emb, "vec_id", "embedding", prefixDim = 16)
+        .release()
+    }
+    check("binary", BinaryIndex.buildCached(emb, key, "vec_id",
+        "embedding").stored) {
+      BinaryIndex.build(emb, "vec_id", "embedding").release()
+    }
+    assert(dropped.isEmpty, "releasing a fresh build dropped the resident " +
+      s"handle's storage: ${dropped.mkString(", ")}")
+  }
 }
