@@ -95,7 +95,8 @@ object Tables {
   private[graft] def escapeGlob(path: String): String =
     path.replaceAll("([{}\\[\\]*?,\\\\])", "\\\\$1")
 
-  /** Number of cached relations across all sessions. */
+  /** Number of cached relations across all sessions (test seam: the
+    * cache-bound tests read it). */
   private[graft] def cachedRelations: Int = resolved.size
 
   /** Nanos-as-long → floor-divide to micros (DuckDB's truncation);

@@ -17,17 +17,14 @@ object Cleaners {
     * which `rlike` reproduces exactly. */
   val LowerColon = "^([a-z]|_)+:([a-z]|_)+"
 
-  /** T1 — split a tag key at the FIRST colon when it matches LOWER_COLON;
-    * extra colons stay in the key; non-matching keys get type='regular'.
-    * py:117–126. Returns struct(type, key). */
-  def keySplit(k: Column): Column =
-    struct(keyType(k).as("type"), keyTail(k).as("key"))
-
-  /** T1 type component only (for column-at-a-time pipelines). */
+  /** T1 (py:117–126) — a tag key splits at its FIRST colon when it
+    * matches LOWER_COLON. The type is the part before that colon;
+    * non-matching keys get type='regular'. */
   def keyType(k: Column): Column =
     when(k.rlike(LowerColon), substring_index(k, ":", 1)).otherwise(lit("regular"))
 
-  /** T1 key component only. */
+  /** T1 key: the part after the first colon (extra colons stay in the
+    * key); non-matching keys stay whole. */
   def keyTail(k: Column): Column =
     when(k.rlike(LowerColon), k.substr(instr(k, ":") + 1, length(k)))
       .otherwise(k)

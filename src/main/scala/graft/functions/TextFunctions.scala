@@ -29,16 +29,6 @@ object TextFunctions {
   def tokenOccurrences(text: Column, w: String): Column =
     size(filter(tokens(text), t => t === w))
 
-  /** Word n-gram shingles, preserving document order.
-    * e.g. n=3: ["a b c", "b c d", ...]. Empty array when fewer than n tokens. */
-  def wordShingles(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n)))))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /** Deterministic 128-bit document fingerprint (md5 — identical in every
     * engine, unlike murmur variants). */
   def fingerprint(text: Column): Column = md5(text)
@@ -53,13 +43,4 @@ object TextFunctions {
     * (see TextOps.q_lang_id) so the marker lists stay data-dependent. */
   def markerCount(text: Column, marker: String): Column =
     tokenOccurrences(text, marker)
-
-  /** Stopword ratio with a fixed small stopword list. Exact: integer counts,
-    * one IEEE division. */
-  def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
-    val toks = tokens(text)
-    val stops = size(filter(toks,
-      t => stopwords.map(s => t === s).reduce(_ || _)))
-    stops.cast("double") / size(toks).cast("double")
-  }
 }

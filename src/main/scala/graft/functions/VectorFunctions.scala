@@ -26,7 +26,8 @@ object VectorFunctions {
   def quantize(v: Column, scale: Int = 1000): Column =
     graft.plans.GraftFunctions.quantizeFloat(v, scale)
 
-  /** Declarative reference implementation of [[quantize]]. */
+  /** Declarative reference implementation of [[quantize]] (kept for
+    * equivalence testing of the custom expression). */
   def quantizeHof(v: Column, scale: Int = 1000): Column =
     transform(v, x => floor(x.cast("double") * scale).cast("long"))
 

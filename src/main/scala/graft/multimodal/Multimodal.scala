@@ -208,7 +208,9 @@ object Multimodal {
     }
   }
 
-  /** End-to-end: documents -> typed media records -> features DataFrame. */
+  /** End-to-end: documents -> typed media records -> features DataFrame.
+    * No query calls it: its specs exercise the text-stub decode path
+    * through it. */
   def documentFeatures(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
     val media = withPayload(docs, "doc_id", "text").as[MediaRecord]
@@ -646,26 +648,6 @@ object Multimodal {
     MediaRecord(id, "avi", payload, payload.length.toLong)
   }
 
-  /** Byte-normalize resize (non-raster modality): normalize every payload
-    * to exactly `targetBytes` (truncate or zero-pad) — the fixed-resolution
-    * analog for payloads with no raster decoder. Raster payloads should use
-    * [[resizedImages]], the REAL decode-scale-re-encode path. Output
-    * schema/metadata stay consistent with [[MediaRecord]] so downstream
-    * ops are unchanged. */
-  def resized(media: Dataset[MediaRecord], targetBytes: Int): Dataset[MediaRecord] = {
-    require(targetBytes > 0, s"targetBytes=$targetBytes must be positive")
-    implicit val enc = org.apache.spark.sql.Encoders.product[MediaRecord]
-    media.mapPartitions { it =>
-      // per-partition codec context would be created here
-      it.map { r =>
-        if (r.payload == null) r // null media passes through undecoded
-        else r.copy(
-          payload = java.util.Arrays.copyOf(r.payload, targetBytes),
-          n_bytes = targetBytes.toLong)
-      }
-    }
-  }
-
   /** REAL image resize (raster modality, pure JDK): ImageIO decode →
     * integer nearest-neighbor resample — source pixel of target (x, y) is
     * `(x*srcW/targetW, y*srcH/targetH)`, floor division, so the mapping is
@@ -674,9 +656,10 @@ object Multimodal {
     * determinism is a pipeline requirement here: no rounding-mode or
     * gamma ambiguity, byte-identical output on any JVM.
     *
-    * Non-raster / undecodable payloads take the [[resized]] byte stub at
-    * the fixed-resolution byte size (targetW·targetH·3) so the output
-    * stays uniformly shaped. */
+    * Non-raster / undecodable payloads (no raster decoder) are
+    * byte-normalized instead: truncated or zero-padded to the
+    * fixed-resolution byte size (targetW·targetH·3) so the output stays
+    * uniformly shaped; null media passes through undecoded. */
   def resizedImages(media: Dataset[MediaRecord], targetW: Int,
                     targetH: Int): Dataset[MediaRecord] = {
     require(targetW > 0 && targetH > 0, s"bad target ${targetW}x$targetH")

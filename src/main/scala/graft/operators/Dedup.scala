@@ -191,14 +191,10 @@ object Dedup {
     x & 0x0FFFFFFFFFFFFFFL // keep < 2^56 so xor stays within 60 bits
   }
 
-  /** SQL fragments for hash_i: 60-bit left rotation of `base` by r, then
-    * xor with seed. Masks before shifting so no intermediate exceeds 62
-    * bits (DuckDB errors on BIGINT overflow). Two dialects because `^` is
-    * xor in Spark SQL but POWER in DuckDB. */
-  def mhExprSpark(base: String, i: Int): String = {
-    val r = mhRot(i); val seed = mhSeed(i)
-    s"(shiftleft($base % ${1L << (60 - r)}, $r) | shiftright($base, ${60 - r})) ^ $seed"
-  }
+  /** DuckDB SQL fragment for hash_i: 60-bit left rotation of `base` by r,
+    * then xor with seed. Masks before shifting so no intermediate exceeds
+    * 62 bits (DuckDB errors on BIGINT overflow); `xor()` because `^` is
+    * POWER in DuckDB. */
   def mhExprDuck(base: String, i: Int): String = {
     val r = mhRot(i); val seed = mhSeed(i)
     s"xor((($base % ${1L << (60 - r)}) << $r) | ($base >> ${60 - r}), $seed)"
@@ -812,8 +808,8 @@ object Dedup {
     * two-phase multi-distinct aggregate (Spark plans the expand), the
     * fingerprint itself a narrow codegen'd map — same scale shape as
     * q38. */
-  def tokenNormalizedDedupStats(docs: DataFrame, idCol: String,
-      textCol: String, groupCol: String): DataFrame =
+  def tokenNormalizedDedupStats(docs: DataFrame, textCol: String,
+      groupCol: String): DataFrame =
     docs.select(col(groupCol),
         md5(col(textCol)).as("fp_raw"),
         md5(concat_ws(" ",

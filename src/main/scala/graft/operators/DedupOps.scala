@@ -26,8 +26,8 @@ object DedupOps {
   private val JaccardCapSql = "GREATEST(4, count(*) // 300)"
 
   /** DuckDB n-gram shingle CTE (1-based list indexing; matches
-    * TextFunctions.wordShingles(n) incl. the <n-token empty case: the
-    * range is empty when len(sp) < n). Parametrized by source CTE/table
+    * Dedup.shingleRows(n) incl. the <n-token empty case: the range is
+    * empty when len(sp) < n). Parametrized by source CTE/table
     * and emitted CTE name so the q215 release composition can run the
     * SAME text over mid-pipeline survivor sets (single-owner rule). */
   private[operators] def shingleCteN(n: Int, from: String = "documents",
@@ -452,7 +452,6 @@ object DedupOps {
     //      both verdicts (no false negatives / FP share within budget)
     //      are hash-gated, the q128 full-sketch-replay pattern. ----
     Q("q136_incremental_bloom", {
-      val m = BloomMBits
       val pos = (j: String, h: String) => bloomPosSql(j, h)
       s"""WITH w AS (
          |  SELECT doc_id, source, md5(substr(text, CAST(p AS INTEGER), 40)) AS h
@@ -750,8 +749,7 @@ object DedupOps {
         col("source"),
         concat(regexp_replace(col("text"), " ", "\u3000"), lit("\u00A0"),
           tail).as("text"))
-      Dedup.tokenNormalizedDedupStats(v1.union(v2), "doc_id", "text",
-          "source")
+      Dedup.tokenNormalizedDedupStats(v1.union(v2), "text", "source")
         .orderBy("source")
     },
 

@@ -274,13 +274,6 @@ object GraphAnn {
     new NswGraph(e, () => Graph.release(eh))
   }
 
-  /** Convenience form of [[nswGraphResult]]: the snapshot is
-    * Spark-managed (ContextCleaner reclaims blocks on GC) — long-lived
-    * sessions should use the Result form and release(). */
-  def nswGraph(corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int, planes: Int, dim: Int, refineRounds: Int): DataFrame =
-    nswGraphResult(corpus, idCol, vecCol, m, planes, dim, refineRounds).edges
-
   /** Hub-entry beam search against a PREBUILT [[NswGraph]] handle — the
     * build-once/query-many serving form (the [[IvfAdcIndex]] doctrine: a
     * production store answers many query batches against one built
@@ -651,8 +644,9 @@ object GraphAnn {
     out
   }
 
-  /** Convenience form of [[nswSearchResult]] (ContextCleaner-managed
-    * output snapshot — the [[nswGraph]] caveat applies). */
+  /** Convenience form of [[nswSearchResult]]: the output snapshot is
+    * Spark-managed (ContextCleaner reclaims blocks on GC) — long-lived
+    * sessions should use the Result form and release(). */
   def nswSearch(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, k: Int, m: Int, planes: Int, dim: Int,
       refineRounds: Int, beamWidth: Int, searchRounds: Int,

@@ -97,7 +97,7 @@ object ReleaseOps {
       TextFunctions.tokensRe(graft.plans.GraftFunctions.nfc(col("text")))))
 
   private def canonicalized(docs: DataFrame,
-      handles: Handles = null): DataFrame = {
+      handles: Handles): DataFrame = {
     val (out, h) = Graph.snapshot(canonicalText(docs))
     if (handles != null) handles += h
     out
@@ -384,7 +384,9 @@ object ReleaseOps {
     *                   counts and refuses a torn artifact loudly.
     *
     * Runs the pipeline ONCE (both outputs derive from one
-    * [[corpusPipeline]] call); overwrites any prior save at `path`. */
+    * [[corpusPipeline]] call); overwrites any prior save at `path`. No
+    * query writes a release: this and [[saveDelta]] are the artifact
+    * write API that the torn-write tests go through. */
   def saveRelease(docs0: DataFrame, path: String,
       robust: Boolean = false): Unit = {
     val (kept, card, release) = corpusPipeline(docs0, robust)
@@ -909,7 +911,7 @@ object ReleaseOps {
     * `semantic` adds the n_semantic stage column (q275) between
     * near-dup and decontamination — the card audits every stage the
     * variant ran, and ONLY those. */
-  private def cardSelectSql(semantic: Boolean = false): String = {
+  private def cardSelectSql(semantic: Boolean): String = {
     val semCol = if (!semantic) "" else
       "  CAST(coalesce(a3s.n_semantic, 0) AS BIGINT) AS n_semantic,\n|"
     val semJoin = if (!semantic) "" else " LEFT JOIN a3s USING (source)"

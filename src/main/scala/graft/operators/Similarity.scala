@@ -844,7 +844,8 @@ object Similarity {
   }
 
   /** Exhaustive-verification variant of [[nearDupKeepList]]: exact cosine
-    * over ALL pairs (n² nested loop — small-N only). */
+    * over ALL pairs (n² nested loop — small-N only). No query calls it: it
+    * is the reference the keep-list tests compare against. */
   def nearDupKeepListExact(emb: DataFrame, idCol: String, vecCol: String,
                            minCosine: Double): DataFrame = {
     val pairs = allPairsCosine(emb, idCol, vecCol)
@@ -1568,7 +1569,8 @@ object Similarity {
     * neighbor), which is why it needs its own gold and its own routing
     * rule rather than a pass-through to L2. Same broadcast shape as
     * [[exactL2Knn]]: queries broadcast, corpus streams, one bounded
-    * window per query. */
+    * window per query. No query calls it: it is the gold the MIPS recall
+    * tests compare against. */
   def exactIpKnn(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window

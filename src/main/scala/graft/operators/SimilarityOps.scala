@@ -2491,12 +2491,10 @@ object SimilarityOps {
     //      itself, the cost a deployment pays to survive restart. ----
     Q("q230_nsw_save_load", NswOracleSqlStd) { (s, d) =>
       val emb = Tables.t(s, d, "embeddings")
-      val planes = Similarity.adaptivePlanes(emb.count(), targetBucket = 64)
       // cached build (the q189 buildCached stance): the timed work is
       // the artifact ROUND-TRIP (save + verified load + serve), not
       // per-call seed/NN-descent; the cache owns the handle
-      val g = GraphAnn.nswGraphCached(emb, d, "vec_id", "embedding",
-        m = 16, planes = planes, dim = Dim, refineRounds = 1)
+      val g = nswCached(emb, d)
       val dir = tempDir("nswidx", d)
       g.save(dir)
       val loaded = NswGraph.load(s, dir)
@@ -2522,11 +2520,9 @@ object SimilarityOps {
     //      k·|queries| = 50 rows. ----
     Q("q231_nsw_stream_serve", NswOracleSqlStd) { (s, d) =>
       val emb = Tables.t(s, d, "embeddings")
-      val planes = Similarity.adaptivePlanes(emb.count(), targetBucket = 64)
       // cached build (the q193 resident-index stance): the timed work
       // is the micro-batch drain served against ONE resident handle
-      val g = GraphAnn.nswGraphCached(emb, d, "vec_id", "embedding",
-        m = 16, planes = planes, dim = Dim, refineRounds = 1)
+      val g = nswCached(emb, d)
       queryStream(s, emb, tempDir("nswstream", d), GraphAnn.TopKSchema) {
           batch =>
         // nswSearchOn materializes its own bounded snapshot; release
@@ -2605,11 +2601,9 @@ object SimilarityOps {
     //      VectorSpec pins recall vs exact gold over the allowed set. ----
     Q("q236_nsw_filtered_knn", NswFilteredOracleSqlStd) { (s, d) =>
       val emb = Tables.t(s, d, "embeddings")
-      val planes = Similarity.adaptivePlanes(emb.count(), targetBucket = 64)
       // cached build (the q220 filtered-search stance): the timed work
       // is the allow-list beam walk, not per-call construction
-      val g = GraphAnn.nswGraphCached(emb, d, "vec_id", "embedding",
-        m = 16, planes = planes, dim = Dim, refineRounds = 1)
+      val g = nswCached(emb, d)
       val out = GraphAnn.nswSearchFilteredOn(emb.filter(col("vec_id") < 10),
         g, emb, emb.filter(col("vec_id") % 5 === 1).select("vec_id"),
         "vec_id", "embedding", k = 5, beamWidth = 8, searchRounds = 3)
@@ -2629,11 +2623,9 @@ object SimilarityOps {
     //      expansion arms, every frontier cut) depends on. ----
     Q("q241_nsw_filtered_from_artifact", NswFilteredOracleSqlStd) { (s, d) =>
       val emb = Tables.t(s, d, "embeddings")
-      val planes = Similarity.adaptivePlanes(emb.count(), targetBucket = 64)
       // cached build (the q189 buildCached stance): the timed work is
       // the artifact round-trip + filtered serve
-      val g = GraphAnn.nswGraphCached(emb, d, "vec_id", "embedding",
-        m = 16, planes = planes, dim = Dim, refineRounds = 1)
+      val g = nswCached(emb, d)
       val dir = tempDir("nswfidx", d)
       g.save(dir)
       val loaded = NswGraph.load(s, dir)
@@ -2661,11 +2653,9 @@ object SimilarityOps {
       nswStatsOracleSql(m = 16, targetBucket = 64, refineRounds = 1)) {
       (s, d) =>
       val emb = Tables.t(s, d, "embeddings")
-      val planes = Similarity.adaptivePlanes(emb.count(), targetBucket = 64)
       // cached build (the q207 invlists-stats stance): the timed work
       // is the introspection pass, not per-call construction
-      val g = GraphAnn.nswGraphCached(emb, d, "vec_id", "embedding",
-        m = 16, planes = planes, dim = Dim, refineRounds = 1)
+      val g = nswCached(emb, d)
       val out = GraphAnn.nswStats(g).orderBy("out_degree")
       // materialize (bounded: ≤ m distinct degree values) — the stats
       // frame reads the cached g.edges lazily
@@ -2701,11 +2691,9 @@ object SimilarityOps {
       nswHybridOracleSql(m = 16, targetBucket = 64, refineRounds = 1,
         beamWidth = 8, searchRounds = 3)) { (s, d) =>
       val emb = Tables.t(s, d, "embeddings")
-      val planes = Similarity.adaptivePlanes(emb.count(), targetBucket = 64)
       // cached build (the q185 buildCached stance): the timed work is
       // the fused retrieval, not per-call construction
-      val g = GraphAnn.nswGraphCached(emb, d, "vec_id", "embedding",
-        m = 16, planes = planes, dim = Dim, refineRounds = 1)
+      val g = nswCached(emb, d)
       val served = GraphAnn.nswSearchOn(emb.filter(col("vec_id") < 5),
         g, emb, "vec_id", "embedding", k = 10, beamWidth = 8,
         searchRounds = 3)
@@ -2741,12 +2729,10 @@ object SimilarityOps {
       nswSweepOracleSql(m = 16, targetBucket = 64, refineRounds = 1,
         widths = Seq(2, 4, 8), searchRounds = 3, k = 5)) { (s, d) =>
       val emb = Tables.t(s, d, "embeddings")
-      val planes = Similarity.adaptivePlanes(emb.count(), targetBucket = 64)
       // cached build (the q224 sweep stance): serving is the cheap
       // phase under test — three beam walks, never three builds, and
       // not a per-call construction either
-      val g = GraphAnn.nswGraphCached(emb, d, "vec_id", "embedding",
-        m = 16, planes = planes, dim = Dim, refineRounds = 1)
+      val g = nswCached(emb, d)
       val queries = emb.filter(col("vec_id") < 10)
       val exact = Similarity.exactL2Knn(queries, emb, "vec_id",
           "embedding", 5)
@@ -2787,15 +2773,13 @@ object SimilarityOps {
       val emb = Tables.t(s, d, "embeddings")
       val corpusAug = mipsAugmented(emb)
       val queriesAug = mipsAugmentedZero(emb.filter(col("vec_id") < 10))
-      val planes = Similarity.adaptivePlanes(emb.count(), targetBucket = 64)
       // dim stays 64: the bucket hash reads the original components
       // only (the augmented one carries no direction); d2 scoring reads
       // the full augmented arrays
       // cached build over the augmented corpus (its own cache entry —
       // the key folds in the corpus plan hash): the timed work is the
       // MIPS beam walk, not per-call construction
-      val g = GraphAnn.nswGraphCached(corpusAug, d, "vec_id", "embedding",
-        m = 16, planes = planes, dim = Dim, refineRounds = 1)
+      val g = nswCached(corpusAug, d)
       val out = GraphAnn.nswSearchOn(queriesAug, g, corpusAug, "vec_id",
         "embedding", k = 5, beamWidth = 8, searchRounds = 3)
       out.rows.orderBy("qid", "rank")
@@ -2813,11 +2797,9 @@ object SimilarityOps {
       val emb = Tables.t(s, d, "embeddings")
       val corpusAug = mipsAugmented(emb)
       val queriesAug = mipsAugmentedZero(emb.filter(col("vec_id") < 10))
-      val planes = Similarity.adaptivePlanes(emb.count(), targetBucket = 64)
       // cached build (the q189/q229 stance): the timed work is the
       // artifact round-trip + the MIPS serve from the loaded handle
-      val g = GraphAnn.nswGraphCached(corpusAug, d, "vec_id", "embedding",
-        m = 16, planes = planes, dim = Dim, refineRounds = 1)
+      val g = nswCached(corpusAug, d)
       val dir = tempDir("nswmips", d)
       g.save(dir)
       val loaded = NswGraph.load(s, dir)
@@ -3196,7 +3178,7 @@ object SimilarityOps {
        |$steps""".stripMargin
   }
 
-  private def mmrTailSql(k: Int = 5): String =
+  private def mmrTailSql(k: Int): String =
     s"""$MmrPpSql,
        |${mmrSelChainSql(k, 1, 1)}
        |SELECT qid, nid, CAST(step AS INTEGER) AS step FROM sel$k
@@ -3496,6 +3478,12 @@ object SimilarityOps {
   private def ivfCached(emb: DataFrame, d: String): IvfAdcIndex =
     IvfAdcIndex.buildCached(emb, d, "vec_id", "embedding", nlist = 8,
       trainRounds = 2, m = 16, ksub = 8, dim = Dim, pqTrainRounds = 2)
+  // the NSW serving point every cached-graph gate shares: planes sized
+  // to the corpus for ~64-vector buckets
+  private def nswCached(corpus: DataFrame, d: String): NswGraph =
+    GraphAnn.nswGraphCached(corpus, d, "vec_id", "embedding", m = 16,
+      planes = Similarity.adaptivePlanes(corpus.count(), targetBucket = 64),
+      dim = Dim, refineRounds = 1)
   private def ivfQuery(idx: IvfAdcIndex, queries: DataFrame): DataFrame =
     idx.query(queries, k = 5, candidates = 50, nprobe = 2)
 

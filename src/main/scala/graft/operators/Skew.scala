@@ -28,15 +28,6 @@ object Skew {
       .groupBy(col(keyCol))
       .agg(sum("_partial").as("n"))
 
-  /** Exact decimal sum per key with the same two-round shape. */
-  def saltedSum(df: DataFrame, keyCol: String, valueCol: String,
-                saltFactor: Int = 16): DataFrame =
-    df.withColumn("_salt", salt(saltFactor))
-      .groupBy(col(keyCol), col("_salt"))
-      .agg(sum(col(valueCol).cast("decimal(18,4)")).as("_partial"))
-      .groupBy(col(keyCol))
-      .agg(sum("_partial").cast("double").as("sum_v"))
-
   /** Broadcast-salt the small side of a skewed join: replicate each small-
     * side row `saltFactor` times with explicit salt values, salt the big
     * side randomly, and join on (key, salt). Exact results; the hot key's

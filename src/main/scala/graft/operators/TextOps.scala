@@ -17,7 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  private val Stopwords = Seq("the", "a")
   private val LangMarkers = Seq("the", "a", "data", "spark", "fast")
 
   /** DuckDB replica of Bpe.wordTypes: the ASCII-alnum word-TYPE table and
@@ -2053,7 +2052,7 @@ object TextOps {
     * for the gate unless `ordered = false` (streaming sinks sort after
     * collection). */
   private def perceptronScoreDelta(feats: DataFrame, w: Array[Long],
-      ordered: Boolean = true): DataFrame = {
+      ordered: Boolean): DataFrame = {
     val scored = feats
       .select(col("doc_id"), col("y").as("label"),
         perceptronMarginCol(w).cast("long").as("margin"))
@@ -2091,7 +2090,7 @@ object TextOps {
     * the weight row aliased `w` — parameterized so the delta gates can
     * score an EVAL feature table against weights trained on the train
     * split (q284–q286). */
-  private def perceptronMarginSql(fa: String = "f"): String =
+  private def perceptronMarginSql(fa: String): String =
     (0 to PerceptronMarkers.length)
       .map(i => s"w.b$i * $fa.x$i").mkString(" + ")
 
@@ -2099,7 +2098,7 @@ object TextOps {
     * misclassified-set update sums under the previous round's weights,
     * then the integer weight add — the Lloyd-style oracle replay of an
     * iterative trainer. */
-  private def perceptronRoundCte(r: Int, fName: String = "f"): String = {
+  private def perceptronRoundCte(r: Int, fName: String): String = {
     val nf = PerceptronMarkers.length
     val m = perceptronMarginSql(fName)
     val upd = (0 to nf).map(i =>
@@ -2130,7 +2129,7 @@ object TextOps {
 
   /** The w0 + PerceptronRounds training CTEs over feature CTE `fName`,
     * ending in `w$PerceptronRounds(b0..b5)`. */
-  private def perceptronTrainCtes(fName: String = "f"): String = {
+  private def perceptronTrainCtes(fName: String): String = {
     val nf = PerceptronMarkers.length
     val w0 = (0 to nf).map(i => s"CAST(0 AS BIGINT) AS b$i").mkString(", ")
     val rounds = (1 to PerceptronRounds)

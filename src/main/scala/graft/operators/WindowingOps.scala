@@ -45,10 +45,9 @@ object WindowingOps {
     //      file-source streams (genuine duplicate delivery across
     //      micro-batches); dropDuplicates on the stream must reconstruct
     //      the batch table exactly. Production uses
-    //      dropDuplicatesWithinWatermark (bounded state, EventStreams
-    //      .dedupedStream); the unbounded form is used here because the
-    //      within-watermark guarantee is deliberately weaker than the
-    //      bit-exact oracle. ----
+    //      dropDuplicatesWithinWatermark (bounded state); the unbounded
+    //      form is used here because the within-watermark guarantee is
+    //      deliberately weaker than the bit-exact oracle. ----
     Q("q90_stream_dedup",
       """SELECT event_id, ts, user_id, event_type, value, props
         |FROM events ORDER BY event_id""".stripMargin) { (s, d) =>

@@ -41,16 +41,4 @@ object Geo {
              latMin: Double, latMax: Double,
              lonMin: Double, lonMax: Double): Column =
     lat >= latMin && lat <= latMax && lon >= lonMin && lon <= lonMax
-
-  /** Great-circle distance in meters (haversine). Trig per row — use for
-    * computation/filtering, not for cross-engine-hashed outputs. */
-  def haversineMeters(lat1: Column, lon1: Column,
-                      lat2: Column, lon2: Column): Column = {
-    val r = 6371008.8 // mean earth radius
-    val dLat = radians(lat2 - lat1)
-    val dLon = radians(lon2 - lon1)
-    val a = pow(sin(dLat / 2), 2) +
-      cos(radians(lat1)) * cos(radians(lat2)) * pow(sin(dLon / 2), 2)
-    lit(2 * r) * asin(sqrt(a))
-  }
 }

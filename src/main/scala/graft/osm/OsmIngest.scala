@@ -1,7 +1,7 @@
 package graft.osm
 
 import graft.functions.Cleaners
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -134,30 +134,9 @@ object OsmIngest {
     raw.select(tc("_id", "BIGINT").as("id"), posexplode(col("nd")).as(Seq("position", "n")))
       .select(col("id"), expr("try_cast(n._ref AS BIGINT)").as("node_id"), col("position"))
 
-  // ---- typed surface: Dataset[T] views of the 5 tables ----
-
-  import OsmModel._
-
-  def nodesDs(spark: SparkSession, raw: DataFrame): Dataset[Node] = {
-    import spark.implicits._; nodes(raw).as[Node]
-  }
-  def nodeTagsDs(spark: SparkSession, raw: DataFrame): Dataset[NodeTag] = {
-    import spark.implicits._; nodeTags(raw).as[NodeTag]
-  }
-  def waysDs(spark: SparkSession, raw: DataFrame): Dataset[Way] = {
-    import spark.implicits._; ways(raw).as[Way]
-  }
-  def wayTagsDs(spark: SparkSession, raw: DataFrame): Dataset[WayTag] = {
-    import spark.implicits._; wayTags(raw).as[WayTag]
-  }
-  def wayNodesDs(spark: SparkSession, raw: DataFrame): Dataset[WayNode] = {
-    import spark.implicits._; wayNodes(raw).as[WayNode]
-  }
-
   /** Register the 5 shaped tables as temp views — the SQL surface of EP3
     * (the reference's interactive sqlite> shell, SURVEY.md §3). */
-  def registerViews(spark: SparkSession, nodesRaw: DataFrame,
-                    waysRaw: DataFrame): Unit = {
+  def registerViews(nodesRaw: DataFrame, waysRaw: DataFrame): Unit = {
     nodes(nodesRaw).createOrReplaceTempView("nodes")
     nodeTags(nodesRaw).createOrReplaceTempView("node_tags")
     ways(waysRaw).createOrReplaceTempView("ways")

@@ -9,14 +9,6 @@ import org.apache.spark.sql.types._
   */
 object OsmModel {
 
-  case class Node(id: Long, lat: Double, lon: Double, user: String, uid: Long,
-                  version: Int, changeset: Long, timestamp: java.sql.Timestamp)
-  case class NodeTag(id: Long, key: String, value: String, `type`: String)
-  case class Way(id: Long, user: String, uid: Long, version: Int,
-                 changeset: Long, timestamp: java.sql.Timestamp)
-  case class WayTag(id: Long, key: String, value: String, `type`: String)
-  case class WayNode(id: Long, node_id: Long, position: Int)
-
   val nodesSchema: StructType = StructType(Seq(
     StructField("id", LongType), StructField("lat", DoubleType),
     StructField("lon", DoubleType), StructField("user", StringType),

@@ -42,20 +42,6 @@ object Workload {
       .orderBy(col("num").desc, col("value"))
       .limit(k)
 
-  /** §2.8: the bridge-table join the schema exists for — way geometry as
-    * the ordered (lat, lon) sequence per way. way_nodes ⋈ nodes shuffles on
-    * node_id (the big side); ways metadata joins broadcast. No query in the
-    * reference performs it, but capability parity requires it. */
-  def wayGeometry(ways: DataFrame, wayNodes: DataFrame, nodes: DataFrame): DataFrame = {
-    val wn = wayNodes.select(col("id").as("way_id"), col("node_id"), col("position"))
-    val nd = nodes.select(col("id").as("node_id"), col("lat"), col("lon"))
-    val w = ways.select(col("id").as("way_id"))
-    wn.join(nd, "node_id")
-      .join(broadcast(w), "way_id") // semi-filter to known ways
-      .select("way_id", "position", "node_id", "lat", "lon")
-      .orderBy("way_id", "position")
-  }
-
   /** A5: share of a value-set among all groups (Readme.md:226 — "37.33% of
     * the amenities are restaurants and fast food"). */
   def valueShare(tags: DataFrame, key: String, values: Seq[String]): DataFrame =

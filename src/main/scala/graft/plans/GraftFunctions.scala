@@ -16,11 +16,6 @@ object GraftFunctions {
   def quantizeFloat(v: Column, scale: Int): Column =
     ColumnBridge.column(FloatArrayQuantize(ColumnBridge.expression(v), scale))
 
-  /** Streaming chunk generator — use with multi-alias:
-    * df.select(col("id"), chunkTokens(col("text"), 32, 16).as(Seq("chunk_idx", "chunk_text"))) */
-  def chunkTokens(text: Column, chunk: Int, stride: Int): Column =
-    ColumnBridge.column(ChunkTokens(ColumnBridge.expression(text), chunk, stride))
-
   /** Distinct word-shingle generator — use with multi-alias:
     * df.select(col("id"), shingleRows(col("text"), 3).as(Seq("s", "ns"))) */
   def shingleRows(text: Column, n: Int, distinct: Boolean = true): Column =

@@ -55,7 +55,7 @@ case class MinHashSigAgg(
       var i = 0
       while (i < numHashes) {
         val r = rots(i)
-        // 60-bit rotate-left by r, then xor — matches Dedup.mhExprSpark
+        // 60-bit rotate-left by r, then xor — matches Dedup.mhExprDuck
         val h = (((base % (1L << (60 - r))) << r) | (base >> (60 - r))) ^ seeds(i)
         if (h < buf(i)) buf(i) = h
         i += 1

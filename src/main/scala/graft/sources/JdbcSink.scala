@@ -8,6 +8,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * (Tables.registerViews); this path exists for capability parity when the
   * downstream really is an external relational store.
   *
+  * No query or main calls it: it stays as the engine's analogue of the
+  * reference's "load the CSVs into SQLite" step (PAPER.md), covered by
+  * JdbcSinkSpec.
+  *
   * Scale note: JDBC writes are per-partition inserts — `numPartitions`
   * bounds the connection count against the target DB. This is an EXPORT
   * path for aggregated results, not a 100 TB data path.

@@ -6,7 +6,9 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Execution observability (SURVEY.md §2.1 S5 — the reference's .dbinfo /
   * file-size reporting, upgraded to per-operator runtime metrics): after an
-  * action, surface scan and operator metrics from the executed plan. */
+  * action, surface scan and operator metrics from the executed plan.
+  * No query reaches it yet: it stays as the plan-metric reader that the
+  * engine's own tracing (ROADMAP, observability) is to build on. */
 object Metrics {
 
   /** Full traversal: AQE wraps materialized stages in QueryStageExec nodes
@@ -32,12 +34,5 @@ object Metrics {
   def scanOutputRows(df: DataFrame): Long =
     all(df).collect {
       case ((node, "numOutputRows"), v) if node.toLowerCase.contains("scan") => v
-    }.sum
-
-  /** Total file bytes read by scans, when reported. */
-  def scanBytesRead(df: DataFrame): Long =
-    all(df).collect {
-      case ((node, metric), v)
-          if node.toLowerCase.contains("scan") && metric == "filesSize" => v
     }.sum
 }

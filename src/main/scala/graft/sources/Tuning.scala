@@ -1,55 +1,24 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Spill-aware sizing helpers (SURVEY-prompt: size shuffle partitions and
-  * scan splits so partitions fit executor memory at the target SF).
-  *
-  * The rules of thumb encoded here: shuffle partitions ≈ shuffled bytes /
-  * target (128 MiB) rounded up to a multiple of parallelism, never below
-  * it; AQE then coalesces small outputs at runtime, so oversizing is cheap
-  * and undersizing (spill) is not. Scan-side parallelism comes from
-  * spark.sql.files.maxPartitionBytes, which Spark applies per file split.
-  */
+/** Streaming state-store sizing: how many shuffle partitions a bounded
+  * streaming replay starts with (one per ~128 MiB of state), and the
+  * scoped conf that applies it. */
 object Tuning {
 
   val TargetPartitionBytes: Long = 128L * 1024 * 1024
 
-  /** Partition count that keeps ~target bytes per shuffle partition. */
-  def adviseShufflePartitions(shuffledBytes: Long, parallelism: Int,
-                              targetBytes: Long = TargetPartitionBytes): Int = {
-    val byBytes = math.ceil(shuffledBytes.toDouble / targetBytes).toInt
-    val rounded = math.ceil(byBytes.toDouble / parallelism).toInt * parallelism
-    math.max(parallelism, rounded)
-  }
-
-  /** Sum of input file sizes behind a DataFrame's scan(s) — the cheap
-    * planning-time proxy for shuffle volume of a scan-heavy stage. */
-  def inputBytes(df: DataFrame): Long =
-    df.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation.sizeInBytes
-    }.sum
-
-  /** Apply advised sizing to a session for a given expected input. */
-  def configureFor(spark: SparkSession, expectedInputBytes: Long): Unit = {
-    val parallelism = spark.sparkContext.defaultParallelism
-    spark.conf.set("spark.sql.shuffle.partitions",
-      adviseShufflePartitions(expectedInputBytes, parallelism).toString)
-    spark.conf.set("spark.sql.files.maxPartitionBytes",
-      TargetPartitionBytes.toString)
-  }
-
-  /** Streaming STATE-STORE partition sizing — the [[adviseShufflePartitions]]
-    * philosophy applied to `spark.sql.shuffle.partitions` as read by a
-    * stateful streaming query at start (stream-stream joins, streaming
+  /** Streaming STATE-STORE partition sizing: bytes / target applied to
+    * `spark.sql.shuffle.partitions` as read by a stateful streaming query
+    * at start (stream-stream joins, streaming
     * aggregates): one state store is created, loaded, committed and
     * snapshotted PER PARTITION PER MICRO-BATCH, so unlike a batch
     * shuffle — where AQE coalesces small outputs for free — an
     * over-partitioned stream pays a fixed store overhead forever and
     * AQE cannot help (it is disabled under micro-batch execution).
     * Measured on the q151 stream-stream join at sf0.1: 7.5 s at 32
-    * partitions vs 2.0 s at 2, identical results. The batch rule's
+    * partitions vs 2.0 s at 2, identical results. A batch rule's usual
     * "never below parallelism" floor is therefore WRONG here: below
     * ~target bytes of state there is nothing to parallelize, the store
     * machinery is the workload. Floor 2 keeps the multi-store code path
@@ -92,32 +61,4 @@ object Tuning {
       else Option(d.listFiles).map(_.map(walk).sum).getOrElse(0L)
     walk(f)
   }
-
-  /** Enable Catalyst's runtime bloom-filter join pruning for shuffle
-    * joins with a selective build side — the 100 TB fact-table move:
-    * before the fact side shuffles, a bloom filter built from the
-    * (filtered) dim side's join keys drops non-matching fact rows AT THE
-    * SCAN, so the shuffle moves only rows that can join (`might_contain`
-    * appears in the fact-side scan filter — pinned in PlanSpec). Spark
-    * gates injection on an application-side scan ≥ 10 GB by default,
-    * which a local fixture never reaches; production defaults are kept,
-    * only the size gate is caller-adjustable. Returns the previous conf
-    * values so callers (and the spec) can restore. */
-  def enableRuntimeJoinFilters(spark: SparkSession,
-      applicationSideScanBytesThreshold: Long = 10L << 30)
-      : Map[String, String] = {
-    val keys = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-    val prev = keys.map(k => k -> spark.conf.getOption(k).orNull).toMap
-    spark.conf.set(keys.head, "true")
-    spark.conf.set(keys(1), applicationSideScanBytesThreshold.toString)
-    prev
-  }
-
-  /** Restore confs captured by [[enableRuntimeJoinFilters]]. */
-  def restoreConfs(spark: SparkSession, prev: Map[String, String]): Unit =
-    prev.foreach { case (k, v) =>
-      if (v == null) spark.conf.unset(k) else spark.conf.set(k, v)
-    }
 }

@@ -94,13 +94,6 @@ object EventStreams {
       .select("purchase_id", "user_id", "purchase_ts", "click_id", "click_ts")
   }
 
-  /** Streaming exact dedup: drop re-deliveries of the same id, with state
-    * bounded by the watermark (late duplicates beyond it age out of state —
-    * the only way dedup state stays finite over an unbounded stream). */
-  def dedupedStream(stream: DataFrame, idCol: String, watermark: String): DataFrame =
-    stream.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(idCol)
-
   // ---- custom state: typed sessionization via flatMapGroupsWithState ----
 
   // ts flows through java.time.Instant and MICROSECOND longs end to end:

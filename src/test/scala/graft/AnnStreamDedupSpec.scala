@@ -2,14 +2,11 @@ package graft
 
 import graft.operators.Similarity
 import graft.streaming.EventStreams
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import java.sql.Timestamp
 
-/** Multi-probe LSH recall vs brute force, and watermarked streaming dedup. */
+/** Multi-probe LSH recall vs brute force, and the stream-stream interval
+  * join against its batch form. */
 class AnnStreamDedupSpec extends SparkTestBase {
-
-  import spark.implicits._
 
   test("multi-probe LSH knn recall@5 beats 0.5 while probing a fraction of corpus") {
     val emb = Tables.t(spark, Sf, "embeddings").cache()
@@ -27,7 +24,6 @@ class AnnStreamDedupSpec extends SparkTestBase {
   }
 
   test("stream-stream interval join matches the batch join") {
-    implicit val sqlCtx = spark.sqlContext
     val ev = Tables.t(spark, Sf, "events").cache()
     val purchases = ev.filter(col("event_type") === "purchase")
     val clicks = ev.filter(col("event_type") === "click")
@@ -48,24 +44,4 @@ class AnnStreamDedupSpec extends SparkTestBase {
     try q.processAllAvailable() finally q.stop()
     assert(spark.table("ssj_out").count() === batch)
   }
-
-  test("streaming dedup within watermark drops re-delivered ids") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev2]
-    def ts(s: String) = Timestamp.valueOf(s)
-    mem.addData(
-      Ev2(1L, ts("2024-01-01 00:00:00")),
-      Ev2(2L, ts("2024-01-01 00:00:10")),
-      Ev2(1L, ts("2024-01-01 00:00:20")), // duplicate id within watermark
-      Ev2(3L, ts("2024-01-01 00:01:00")))
-    val q = EventStreams.dedupedStream(mem.toDF(), "event_id", "10 minutes")
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val ids = spark.table("dedup_out").select("event_id")
-      .collect().map(_.getLong(0)).sorted
-    assert(ids.toSeq === Seq(1L, 2L, 3L))
-  }
 }
-
-case class Ev2(event_id: Long, ts: Timestamp)

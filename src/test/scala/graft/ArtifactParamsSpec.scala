@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.ArtifactParams
-import org.apache.spark.sql.functions._
 
 /** Unit gates for the ONE artifact-params owner (round-13 verdict item
   * 4): every persisted family (NSW, IVF-ADC, SQ8, matryoshka, release)

@@ -1,33 +1,18 @@
 package graft
 
 import graft.operators.ChunkingOps
-import graft.plans.GraftFunctions
 import org.apache.spark.sql.functions._
 
-/** The custom Generator must agree exactly with the composed
-  * sequence/slice/posexplode formulation on the real corpus. */
+/** Token chunking (sequence/slice/posexplode) on edge documents, and the
+  * q296 packing audit. */
 class ChunkGeneratorSpec extends SparkTestBase {
-
-  test("ChunkTokens generator == composed chunking on all documents") {
-    val docs = Tables.t(spark, Sf, "documents")
-    val viaGen = docs.select(col("doc_id"),
-        GraftFunctions.chunkTokens(col("text"), 32, 16).as(Seq("chunk_idx", "chunk_text")))
-      .orderBy("doc_id", "chunk_idx").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
-    val viaCompose = docs.select(col("doc_id"),
-        posexplode(ChunkingOps.chunks(col("text"), 32, 16)).as(Seq("chunk_idx", "chunk_text")))
-      .orderBy("doc_id", "chunk_idx").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
-    assert(viaGen.length === viaCompose.length)
-    assert(viaGen.toSeq === viaCompose.toSeq)
-  }
 
   test("generator handles edge documents (single token, exact multiple)") {
     import spark.implicits._
     val edge = Seq((1L, "solo"), (2L, (1 to 32).map(i => s"t$i").mkString(" ")))
       .toDF("doc_id", "text")
     val rows = edge.select(col("doc_id"),
-        GraftFunctions.chunkTokens(col("text"), 32, 16).as(Seq("chunk_idx", "chunk_text")))
+        posexplode(ChunkingOps.chunks(col("text"), 32, 16)).as(Seq("chunk_idx", "chunk_text")))
       .collect().map(r => (r.getLong(0), r.getInt(1)))
     // doc 1: one chunk; doc 2: starts at 0 and 16 (16 < 32 tokens)
     assert(rows.count(_._1 == 1L) === 1)

@@ -157,27 +157,6 @@ class ExtendedOpsSpec extends SparkTestBase {
     }
   }
 
-  test("OSM bridge-table join yields ordered way geometry") {
-    import graft.osm.{OsmIngest, Workload}
-    val dir = java.nio.file.Files.createTempDirectory("graft-geo")
-    dir.toFile.deleteOnExit()
-    val f = dir.resolve("g.osm")
-    java.nio.file.Files.write(f,
-      """<osm>
-        |<node id="1" lat="52.1" lon="4.1" user="u" uid="1" version="1" changeset="1" timestamp="2016-01-01T00:00:00Z"/>
-        |<node id="2" lat="52.2" lon="4.2" user="u" uid="1" version="1" changeset="1" timestamp="2016-01-01T00:00:00Z"/>
-        |<way id="9" user="u" uid="1" version="1" changeset="1" timestamp="2016-01-01T00:00:00Z">
-        |<nd ref="2"/><nd ref="1"/></way>
-        |</osm>""".stripMargin.getBytes("UTF-8"))
-    val nodesRaw = OsmIngest.readNodesRaw(spark, f.toString)
-    val waysRaw = OsmIngest.readWaysRaw(spark, f.toString)
-    val geo = Workload.wayGeometry(
-      OsmIngest.ways(waysRaw), OsmIngest.wayNodes(waysRaw), OsmIngest.nodes(nodesRaw))
-      .collect().map(r => (r.getAs[Long]("way_id"), r.getAs[Int]("position"),
-        r.getAs[Double]("lat")))
-    assert(geo.toSeq === Seq((9L, 0, 52.2), (9L, 1, 52.1)))
-  }
-
   test("approx_count_distinct lands within 5% of exact on events") {
     // q57 now emits the tolerance verdict itself (oracle-gated); assert it
     val rows = SparkEntry.queries("q57_approx_distinct")(spark, Sf).collect()

@@ -191,16 +191,6 @@ class FormatsRobustnessSpec extends SparkTestBase {
     assert(Metrics.scanOutputRows(df) <= Tables.t(spark, Sf, "lineitem").count())
   }
 
-  test("shuffle-partition advice scales with bytes and floors at parallelism") {
-    assert(Tuning.adviseShufflePartitions(0L, 32) === 32)
-    assert(Tuning.adviseShufflePartitions(1L << 30, 32) === 32)     // 1 GiB -> 8, floored
-    assert(Tuning.adviseShufflePartitions(1L << 40, 32) === 8192)   // 1 TiB -> 8192 exact
-    assert(Tuning.adviseShufflePartitions(100L << 40, 32) ===
-      math.ceil(math.ceil(100.0 * (1L << 40) / Tuning.TargetPartitionBytes) / 32).toInt * 32)
-    val bytes = Tuning.inputBytes(Tables.t(spark, Sf, "lineitem"))
-    assert(bytes > 0)
-  }
-
   test("state-partition advice floors at 2 (NOT parallelism) and scales " +
     "with bytes; the scoped shuffle-partition override restores the conf") {
     // streaming state stores pay a fixed per-partition-per-batch cost and

@@ -3,7 +3,7 @@ package graft
 import graft.osm.Geo
 import org.apache.spark.sql.functions._
 
-/** Geospatial operator behavior: morton locality, bbox, haversine sanity. */
+/** Geospatial operator behavior: morton locality, bbox. */
 class GeoSpec extends SparkTestBase {
 
   import spark.implicits._
@@ -18,19 +18,6 @@ class GeoSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((keys(1L) >> 8) === (keys(2L) >> 8))  // same fine cell
     assert((keys(1L) >> 20) !== (keys(3L) >> 20)) // different coarse cell
-  }
-
-  test("haversine: zero self-distance, symmetric, Amsterdam-Paris ~430km") {
-    val df = Seq((52.3676, 4.9041, 48.8566, 2.3522)).toDF("a1", "o1", "a2", "o2")
-    val d1 = df.select(Geo.haversineMeters(col("a1"), col("o1"), col("a2"), col("o2")))
-      .head().getDouble(0)
-    val d2 = df.select(Geo.haversineMeters(col("a2"), col("o2"), col("a1"), col("o1")))
-      .head().getDouble(0)
-    assert(math.abs(d1 - d2) < 1e-6)
-    assert(d1 > 420000 && d1 < 440000, s"d1=$d1")
-    val z = df.select(Geo.haversineMeters(col("a1"), col("o1"), col("a1"), col("o1")))
-      .head().getDouble(0)
-    assert(z === 0.0)
   }
 
   test("bbox filter + morton bucketing compose for spatial scans") {

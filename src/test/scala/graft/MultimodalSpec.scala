@@ -63,14 +63,18 @@ class MultimodalSpec extends SparkTestBase {
   test("resize stub normalizes every payload to the target size") {
     val media = Multimodal.withPayload(docs, "doc_id", "text")
       .as[Multimodal.MediaRecord]
-    val out = Multimodal.resized(media, 128).collect()
+    // text payloads are non-raster: resizedImages byte-normalizes them to
+    // the fixed-resolution size w·h·3
+    val (w, h) = (8, 5)
+    val target = w * h * 3
+    val out = Multimodal.resizedImages(media, w, h).collect()
     assert(out.nonEmpty)
-    assert(out.forall(r => r.payload.length === 128 && r.n_bytes === 128L))
+    assert(out.forall(r => r.payload.length === target && r.n_bytes === target.toLong))
     // truncation keeps the original prefix; padding is zeros
     val orig = media.collect().map(r => r.media_id -> r.payload).toMap
     out.foreach { r =>
       val p = orig(r.media_id)
-      val n = math.min(128, p.length)
+      val n = math.min(target, p.length)
       assert(java.util.Arrays.equals(r.payload.take(n), p.take(n)))
       assert(r.payload.drop(n).forall(_ === 0.toByte))
     }

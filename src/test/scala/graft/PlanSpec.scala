@@ -247,6 +247,14 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("Window"), p)
     // co-partitioned: exactly one exchange per side feeding the merge
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
+    // a second run re-installs idempotently: the session holds the planner
+    // strategy once, and graft adds no optimizer rule to it
+    q("q91_asof_merge_join").collect()
+    val exp = spark.experimental
+    assert(exp.extraStrategies.count(_ == graft.plans.AsOfJoinStrategy) === 1,
+      exp.extraStrategies)
+    assert(!exp.extraOptimizations.exists(_.getClass.getName.startsWith("graft.")),
+      exp.extraOptimizations)
   }
 
   test("entry flagship broadcasts dims and aggregates exactly once per region") {
@@ -721,33 +729,6 @@ class PlanSpec extends SparkTestBase {
     // the vector id
     assert("Exchange hashpartitioning\\(b#".r.findFirstIn(p).isDefined, p)
     assert(!"Exchange hashpartitioning\\(vec_id#".r.findFirstIn(p).isDefined, p)
-  }
-
-  test("runtime bloom-filter join pruning: the fact scan carries " +
-    "might_contain from the selective dim side") {
-    // the 100 TB fact-join move Tuning.enableRuntimeJoinFilters turns on:
-    // the fact side is filtered AT THE SCAN by a bloom filter of the dim
-    // side's surviving join keys, so the shuffle moves only joinable rows.
-    // Shuffle join forced (broadcast would sidestep injection); the size
-    // gate is lowered because a local fixture never reaches 10 GB.
-    val prevBloom = graft.sources.Tuning.enableRuntimeJoinFilters(spark,
-      applicationSideScanBytesThreshold = 0L)
-    val prevBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val li = Tables.t(spark, Sf, "lineitem")
-      val ord = Tables.t(spark, Sf, "orders")
-        .filter(col("o_orderstatus") === "F")
-      val j = li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderstatus").agg(sum("l_quantity"))
-      val p = planOf(j)
-      assert(p.contains("might_contain"), p)
-      // and the filter sits on the lineitem (fact) side, keyed by its column
-      assert("might_contain[\\s\\S]{0,80}l_orderkey".r.findFirstIn(p).isDefined, p)
-    } finally {
-      graft.sources.Tuning.restoreConfs(spark, prevBloom)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
-    }
   }
 
   test("q214 span cutter: candidates ride the shingle equi-join, the " +

@@ -134,7 +134,6 @@ class StreamingSpec extends SparkTestBase {
   test("OSM cleaning pipeline runs unchanged over a CSV stream (SURVEY §2.11)") {
     // The stateless shape/clean transforms are streaming-safe as-is: stream
     // raw tag rows and apply the same expression chain used in batch.
-    implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-osmstream")
     dir.toFile.deleteOnExit()
     java.nio.file.Files.write(dir.resolve("tags.csv"),
@@ -170,7 +169,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("file-source stream of the events table processes all rows") {
-    implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-stream")
     dir.toFile.deleteOnExit()
     java.nio.file.Files.copy(
@@ -188,7 +186,6 @@ class StreamingSpec extends SparkTestBase {
   test("single-file stream path with glob metacharacters in the name") {
     // the {name} glob wrapper must escape [, ], { etc. — unescaped, this
     // file name is a character-class glob that matches nothing
-    implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-streamglob")
     dir.toFile.deleteOnExit()
     val f = dir.resolve("part-[0]{a}.parquet")

@@ -57,19 +57,6 @@ class VectorSpec extends SparkTestBase {
     assert(r.getLong(0) === 32L)
   }
 
-  test("DotProductRewrite: declarative HOF dot is optimized to graft_dot") {
-    graft.plans.GraftExtensions.install(spark)
-    val q = emb.select(col("vec_id"), VectorFunctions.quantize(col("embedding")).as("q"))
-    val df = q.select(VectorFunctions.dotHof(col("q"), col("q")).as("nsq"))
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert(optimized.contains("graft_dot"), optimized)
-    // and the rewritten plan computes the same values as the unoptimized form
-    val viaRule = df.collect().map(_.getLong(0)).sorted
-    val viaExpr = q.select(VectorFunctions.dot(col("q"), col("q")))
-      .collect().map(_.getLong(0)).sorted
-    assert(viaRule.toSeq === viaExpr.toSeq)
-  }
-
   test("LongArrayDot returns null on length-mismatched arrays (zip_with parity)") {
     GraftFunctions.register(spark)
     // interpreted + codegen paths both null; equal lengths still exact
@@ -82,35 +69,6 @@ class VectorSpec extends SparkTestBase {
     assert(r.isNullAt(0), "length mismatch must be null")
     assert(r.getLong(1) === 32L)
     assert(r.isNullAt(2), "declarative form nulls too — semantics agree")
-  }
-
-  test("DotProductRewrite requires exact lambda-variable identity") {
-    graft.plans.GraftExtensions.install(spark)
-    val q = emb.limit(50)
-      .select(col("vec_id"), VectorFunctions.quantize(col("embedding")).as("q"))
-    // x*x (ignores second zip variable) and acc+acc (ignores element) are
-    // NOT dot products — the rule must leave them alone
-    val notDotSquare = q.select(
-      aggregate(zip_with(col("q"), col("q"), (x, _) => x * x),
-        lit(0L), (acc, v) => acc + v).as("s"))
-    assert(!notDotSquare.queryExecution.optimizedPlan.toString.contains("graft_dot"),
-      notDotSquare.queryExecution.optimizedPlan.toString)
-    val notDotAcc = q.select(
-      aggregate(zip_with(col("q"), col("q"), (x, y) => x * y),
-        lit(0L), (acc, _) => acc + acc).as("s"))
-    assert(!notDotAcc.queryExecution.optimizedPlan.toString.contains("graft_dot"),
-      notDotAcc.queryExecution.optimizedPlan.toString)
-    // the true dot (either operand order in the merge) still rewrites
-    val isDot = q.select(
-      aggregate(zip_with(col("q"), col("q"), (x, y) => x * y),
-        lit(0L), (acc, v) => v + acc).as("s"))
-    assert(isDot.queryExecution.optimizedPlan.toString.contains("graft_dot"),
-      isDot.queryExecution.optimizedPlan.toString)
-    // and the non-rewritten squares are actually correct (values unchanged)
-    val sq = notDotSquare.collect().map(_.getLong(0))
-    val ref = q.select(aggregate(transform(col("q"), x => x * x),
-      lit(0L), (acc, v) => acc + v).as("s")).collect().map(_.getLong(0))
-    assert(sq.toSeq === ref.toSeq)
   }
 
   test("bruteForceKnn: rank-1 neighbor is the true argmax") {
