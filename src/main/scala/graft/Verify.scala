@@ -1,11 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. The optional
   * third argument restricts the dump (and oracle_sql.json) to the named
   * queries; an unknown name is refused, since an empty dump would
-  * compare as a silent 0 pass, 0 fail. */
+  * compare as a silent 0 pass, 0 fail. Each query's wall time goes to
+  * stderr as `[verify] <name> <seconds>s`. */
 object Verify {
   val Usage = "Usage: graft.Verify <sfDir> <outDir> [name,name,...]"
 
@@ -27,23 +27,21 @@ object Verify {
 
   private def run(sfDir: String, outDir: String,
       only: Option[Set[String]]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      val t0 = System.nanoTime()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      // one line per query, so log lines can be attributed by time
+      System.err.println(
+        f"[verify] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The ANN index MAINTENANCE LOOP — the composition the three gated
@@ -17,32 +17,37 @@ import org.apache.spark.sql.functions._
   * Every stage is the already-gated operator; this object only wires
   * them, so q190's oracle can replay the whole loop: the frozen-
   * quantizer route, the exact gold, the integer threshold compare, and
-  * whichever serve path the decision picks.
+  * whichever serve path the decision picks. The loop is generic over
+  * [[VectorIndex]]: the NSW graph runs the same one (q234), with the
+  * graph insert path as its append and seed + NN-descent as its
+  * rebuild.
   */
 object AnnMaintenance {
 
-  /** Run append → canary → conditional retrain → serve, returning the
+  /** Run append → canary → conditional rebuild → serve, returning the
     * served top-k for `queries` with the decision audit columns
-    * (`mean_recall`, `retrained`) on every row.
+    * (`mean_recall`, `retrained`) on every row. One loop for every
+    * [[VectorIndex]] family: `build` builds a fresh index over a corpus
+    * (IVF-ADC retrains its quantizers, NSW re-runs seed + NN-descent),
+    * and `serve` answers a bounded query frame from an index, collected.
     *
-    * The canary compares the APPENDED (frozen-quantizer) index's
-    * top-k against [[Similarity.exactL2Knn]] gold over base ∪ delta on
-    * the bounded `queries` sample — k·|queries| rows, never the
-    * corpus. The decision is pure integer math (`hits·100 <
-    * minRecallPct·|gold|`), so a SQL oracle replays it exactly; the
-    * exact-rerank stage keeps SERVED results correct either way —
-    * drift costs recall (missing true neighbors), never wrong
-    * distances, which is why recall is the right trigger metric.
+    * The canary compares the APPENDED index's top-k against
+    * [[Similarity.exactL2Knn]] gold over base ∪ delta on the bounded
+    * `queries` sample — k·|queries| rows, never the corpus. The decision
+    * is pure integer math (`hits·100 < minRecallPct·|gold|`), so a SQL
+    * oracle replays it exactly (q190, q234); an exact-rerank stage keeps
+    * SERVED results correct either way — drift costs recall (missing
+    * true neighbors), never wrong distances, which is why recall is the
+    * right trigger metric.
     *
     * All intermediate handles release before return; results are
     * materialized driver-side first (bounded by definition — the q187
     * rule: nothing may stay lazy over an appended index past its
     * release()). */
-  def appendServeWithCanary(base: DataFrame, delta: DataFrame,
-      queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      candidates: Int, nprobe: Int, nlist: Int, trainRounds: Int,
-      m: Int, ksub: Int, dim: Int, pqTrainRounds: Int,
-      minRecallPct: Int): DataFrame = {
+  def appendServeWithCanary[I <: VectorIndex[I]](base: DataFrame,
+      delta: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+      k: Int, minRecallPct: Int)(build: DataFrame => I,
+      serve: (I, DataFrame) => Array[Row]): DataFrame = {
     // fail fast (round-10 advice item 4): an invalid threshold must be
     // rejected BEFORE any build/append work, not after it
     require(minRecallPct >= 0 && minRecallPct <= 100,
@@ -50,19 +55,16 @@ object AnnMaintenance {
     val union = base.select(col(idCol), col(vecCol))
       .union(delta.select(col(idCol), col(vecCol)))
 
-    // nightly maintenance: train on base, freeze, append the delta
-    val baseIdx = IvfAdcIndex.build(base, idCol, vecCol, nlist,
-      trainRounds, m, ksub, dim, pqTrainRounds)
+    // nightly maintenance: build on base, append the delta under it
+    val baseIdx = build(base)
     val appended = baseIdx.append(delta)
     baseIdx.release()
 
-    // canary: frozen-quantizer top-k vs exact gold on the sample
+    // canary: the appended index's top-k vs exact gold on the sample
     val (apprRows, hits, total) = canaryHitsRows(appended, union, queries,
-      idCol, vecCol, k, candidates, nprobe)
-    canaryServeDecided(appended, queries, k, candidates, nprobe,
-      apprRows, hits, total, minRecallPct,
-      rebuilt = () => IvfAdcIndex.build(union, idCol, vecCol, nlist,
-        trainRounds, m, ksub, dim, pqTrainRounds))
+      idCol, vecCol, k)(serve)
+    canaryServeDecided(appended, queries, apprRows, hits, total,
+      minRecallPct)(() => build(union), serve)
   }
 
   /** The decision + serve TAIL of the canary loop, over an
@@ -74,26 +76,31 @@ object AnnMaintenance {
     * re-golding in the nightly window would recompute identical rows —
     * one full exact-kNN pass and one index query saved per run (guide
     * §1.2: don't compute things you throw away). CONSUMES `appended`
-    * (releases it) and releases the rebuilt index after serving. */
-  def canaryServeDecided(appended: IvfAdcIndex, queries: DataFrame,
-      k: Int, candidates: Int, nprobe: Int,
-      apprRows: Array[org.apache.spark.sql.Row], hits: Long, total: Long,
-      minRecallPct: Int, rebuilt: () => IvfAdcIndex): DataFrame = {
+    * (releases it) and releases the rebuilt index after serving. An
+    * empty gold set (an empty query sample or corpus) is refused: the
+    * canary cannot adjudicate recall over zero queries. */
+  def canaryServeDecided[I <: VectorIndex[I]](appended: I,
+      queries: DataFrame, apprRows: Array[Row], hits: Long, total: Long,
+      minRecallPct: Int)(rebuilt: () => I,
+      serve: (I, DataFrame) => Array[Row]): DataFrame = {
     require(minRecallPct >= 0 && minRecallPct <= 100,
       s"minRecallPct=$minRecallPct out of 0..100")
     val spark = queries.sparkSession
     appended.release()
+    // without this guard mean_recall is NaN and retrained silently
+    // false (the round-11 advice finding)
+    require(total > 0,
+      "appendServeWithCanary: empty exact-gold set — the canary cannot " +
+        "adjudicate recall over zero queries; pass a non-empty query sample")
     val retrained = hits * 100L < minRecallPct.toLong * total
 
     // serve: the appended index's answers stand unless the canary
-    // tripped — then rebuild with quantizers retrained on base ∪ delta
+    // tripped — then rebuild over base ∪ delta
     val servedRows =
       if (!retrained) apprRows
       else {
         val idx = rebuilt()
-        val out = idx.query(queries, k, candidates, nprobe).collect()
-        idx.release()
-        out
+        try serve(idx, queries) finally idx.release()
       }
 
     import spark.implicits._
@@ -110,11 +117,10 @@ object AnnMaintenance {
     * door records one verdict per micro-batch, and a caller whose LAST
     * canary already covers the final state (the q217 stream drain)
     * hands the rows to [[canaryServeDecided]] instead of re-measuring. */
-  def canaryHitsRows(idx: IvfAdcIndex, corpus: DataFrame,
-      queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      candidates: Int, nprobe: Int):
-      (Array[org.apache.spark.sql.Row], Long, Long) = {
-    val appr = idx.query(queries, k, candidates, nprobe).collect()
+  def canaryHitsRows[I <: VectorIndex[I]](idx: I, corpus: DataFrame,
+      queries: DataFrame, idCol: String, vecCol: String, k: Int)(
+      serve: (I, DataFrame) => Array[Row]): (Array[Row], Long, Long) = {
+    val appr = serve(idx, queries)
     val gold = Similarity.exactL2Knn(queries, corpus, idCol, vecCol, k)
       .select(col("qid"), col("nid")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -150,11 +156,11 @@ object AnnMaintenance {
     * Returns (served frame — the q190-oracle-gated rows, per-batch
     * canary recalls in arrival order — the monitoring trail a spec
     * asserts). */
-  def streamMaintain(base: DataFrame, delta: DataFrame, stageDir: String,
-      groups: Int, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, candidates: Int, nprobe: Int, nlist: Int, trainRounds: Int,
-      m: Int, ksub: Int, dim: Int, pqTrainRounds: Int,
-      minRecallPct: Int): (DataFrame, Seq[Double]) = {
+  def streamMaintain[I <: VectorIndex[I]](base: DataFrame,
+      delta: DataFrame, stageDir: String, groups: Int, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int, minRecallPct: Int)(
+      build: DataFrame => I,
+      serve: (I, DataFrame) => Array[Row]): (DataFrame, Seq[Double]) = {
     // fail fast (round-10 advice item 4): reject before staging a single
     // file — not after the whole stream has drained
     require(minRecallPct >= 0 && minRecallPct <= 100,
@@ -162,16 +168,12 @@ object AnnMaintenance {
     stageDeltaGroups(delta, stageDir, groups, idCol)
     val union = base.select(col(idCol), col(vecCol))
       .union(delta.select(col(idCol), col(vecCol)))
-    val rebuilt = () => IvfAdcIndex.build(union, idCol, vecCol, nlist,
-      trainRounds, m, ksub, dim, pqTrainRounds)
     val spark = base.sparkSession
     // foreachBatch runs sequentially on the driver: plain vars are safe
-    var cur = IvfAdcIndex.build(base, idCol, vecCol, nlist, trainRounds,
-      m, ksub, dim, pqTrainRounds)
+    var cur = build(base)
     var arrived = List.empty[Long]
     var recalls = List.empty[Double]
-    var lastCanary:
-      Option[(Array[org.apache.spark.sql.Row], Long, Long)] = None
+    var lastCanary: Option[(Array[Row], Long, Long)] = None
     graft.streaming.StreamHarness
       .drainFileStream(spark, delta.schema, s"$stageDir/b*") { batch =>
         // which staged group arrived (1-row agg — never the batch
@@ -191,7 +193,7 @@ object AnnMaintenance {
             delta.filter(pmod(col(idCol), lit(groups)).isin(arrived: _*))
               .select(col(idCol), col(vecCol)))
           val (rows, h, t) = canaryHitsRows(cur, soFar, queries, idCol,
-            vecCol, k, candidates, nprobe)
+            vecCol, k)(serve)
           lastCanary = Some((rows, h, t))
           recalls = (h.toDouble / t) :: recalls
         }
@@ -200,9 +202,9 @@ object AnnMaintenance {
     // base ∪ delta, same index handle, same query sample); with nothing
     // arrived, measure the base index in the nightly window
     val (rows, h, t) = lastCanary.getOrElse(canaryHitsRows(cur, union,
-      queries, idCol, vecCol, k, candidates, nprobe))
-    (canaryServeDecided(cur, queries, k, candidates, nprobe, rows, h, t,
-      minRecallPct, rebuilt), recalls.reverse)
+      queries, idCol, vecCol, k)(serve))
+    (canaryServeDecided(cur, queries, rows, h, t, minRecallPct)(
+      () => build(union), serve), recalls.reverse)
   }
 
   /** Stage the delta as one parquet file per `pmod(id, groups)` group —

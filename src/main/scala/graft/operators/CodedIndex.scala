@@ -8,9 +8,11 @@ import org.apache.spark.sql.functions._
   * then derive NEW handles by `append` / `delete`, `save` as an on-disk
   * artifact, and `release` the storage. Each derived handle owns
   * independent storage, so a superseded handle may be released as soon as
-  * its successor exists. Implemented by [[IvfAdcIndex]] and [[CodedIndex]];
-  * the NSW graph keeps its free-function API ([[GraphAnn]]) because its
-  * append needs the base corpus and its load takes none. */
+  * its successor exists. Each handle is bound to the corpus it serves
+  * (an append binds corpus ∪ delta, a delete anti-joins the ids out).
+  * Implemented by [[IvfAdcIndex]], [[CodedIndex]] and the NSW graph
+  * ([[NswGraph]]); [[AnnMaintenance]]'s canary loop runs over any of
+  * them. */
 trait VectorIndex[I <: VectorIndex[I]] {
   def append(delta: DataFrame): I
   def delete(ids: DataFrame, idsCol: String): I

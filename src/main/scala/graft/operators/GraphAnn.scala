@@ -5,11 +5,30 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The NSW graph with an explicit release handle ([[ClusterLabels]] /
-  * [[KeepList]] pattern): `edges` must not be consumed after release. */
+/** The NSW graph as a serving handle bound to its corpus — a
+  * [[VectorIndex]] like [[IvfAdcIndex]] and [[CodedIndex]]. It owns the
+  * (src, dst, d2) edge table (storage released by `release`; `edges`
+  * must not be consumed after it) and binds what every search reads:
+  * the corpus (hub layer and exact scoring, joined BY id), its id and
+  * vector columns, and the construction parameters `m` and `dim` that
+  * `append` reuses.
+  *
+  *   - `query` / `queryFiltered` collect their bounded k·|queries| rows
+  *     into a local frame and release their own search snapshot, so a
+  *     result holds no storage and outlives the handle;
+  *   - `append` / `delete` / `compact` return NEW handles with
+  *     independent storage — the source may be released right away. An
+  *     append binds corpus ∪ delta, a delete anti-joins the ids out of
+  *     the binding (deleted nodes also vanish as hubs);
+  *   - `save` writes the edge table plus a params table; [[NswGraph.load]]
+  *     binds a corpus to it again with zero construction jobs.
+  *
+  * Construction and the search algorithm are [[GraphAnn]]'s. */
 final class NswGraph private[operators] (
     val edges: DataFrame,
-    releaseStorage: () => Unit) {
+    releaseStorage: () => Unit,
+    corpus: DataFrame, idCol: String, vecCol: String, m: Int, dim: Int)
+    extends VectorIndex[NswGraph] {
   def release(): Unit = releaseStorage()
 
   /** Persist the graph as an on-disk artifact — the graph family's
@@ -41,9 +60,9 @@ final class NswGraph private[operators] (
 
   /** COMPACT the edge storage — the graph family's LSM merge (the q205
     * IvfAdcIndex.compact analog, round-12 verdict item 3): after N
-    * [[GraphAnn.nswAppend]]s the edge table's blocks descend from N+1
-    * union legs (base edges, each delta's insert edges and seed), so a
-    * beam round's `src` equi-join reads every node's out-edges from
+    * [[append]]s the edge table's blocks descend from N+1 union legs
+    * (base edges, each delta's insert edges and seed), so a beam
+    * round's `src` equi-join reads every node's out-edges from
     * scattered blocks. One shuffle ON `src` re-colocates each node's
     * full edge list (sorted by the serving cut's (d2, dst) order inside
     * each partition), persisted as INDEPENDENT storage: the fragmented
@@ -52,11 +71,172 @@ final class NswGraph private[operators] (
     * reorganization — the edge SET is untouched, so a compacted graph
     * serves bit-identically (q238 gates it against the append oracle;
     * VectorSpec pins set-equality, src colocation and independence). */
-  def compact(): NswGraph = {
-    val (e, eh) = Graph.snapshot(
-      edges.repartition(col("src")).sortWithinPartitions("src", "d2", "dst"))
+  def compact(): NswGraph =
+    derived(Graph.snapshot(
+      edges.repartition(col("src")).sortWithinPartitions("src", "d2", "dst")),
+      corpus)
+
+  /** Hub-entry beam search — the build-once/query-many serving form:
+    * top-k (qid, nid, d2, rank) for a bounded query frame, every
+    * per-round visited pool released before return. */
+  def query(queries: DataFrame, k: Int, beamWidth: Int,
+      searchRounds: Int): DataFrame =
+    local(search(queries, k, beamWidth, searchRounds))
+
+  /** METADATA-FILTERED beam search (the q220 allow-list stance for the
+    * graph family, round-11 verdict item 3): only ids in `allowed` (its
+    * `idCol` column) may be RETURNED — and, crucially, the filter
+    * constrains BEAM EXPANSION, not just the final cut. Post-filtering
+    * the top-k starves recall under a selective predicate (a 20 %
+    * allow-list leaves ~1 allowed row in a k=5 cut), and a beam whose
+    * slots fill with disallowed near-query nodes spends its entire
+    * candidate budget on rows it can never return. Here the visited
+    * pool — and therefore every frontier — holds ALLOWED nodes only:
+    * entry hubs are the smallest allowed ids, and each round expands a
+    * frontier node through (a) its direct allowed out-neighbors and
+    * (b) its disallowed out-neighbors' allowed out-neighbors — the
+    * filtered-ANN "bridge" step (ACORN / filtered-DiskANN's
+    * predicate-agnostic traversal, collapsed to two hops): the walk may
+    * ROUTE through a disallowed node but never grants it a beam slot,
+    * so the allowed subgraph's disconnection (under a selective
+    * predicate most same-bucket neighbors are disallowed) doesn't stall
+    * the search. Candidate volume per round is bounded by
+    * beamWidth·m·(1+m) BEFORE the allow join — bounded, never
+    * corpus-sized. Deterministic (d2, id) order throughout; DuckDB
+    * replays it bit-for-bit (q236). */
+  def queryFiltered(queries: DataFrame, allowed: DataFrame, k: Int,
+      beamWidth: Int, searchRounds: Int): DataFrame = {
+    val alw = allowed.select(col(idCol).cast("long").as("vid")).distinct()
+    // allowed corpus side, quantized once: hub layer, scoring, and the
+    // allow joins all read this one persisted frame
+    val na = GraphAnn.pool(corpus, idCol, vecCol).join(alw, "vid").persist()
+    val alwCand = alw.withColumnRenamed("vid", "cand")
+    val e1 = edges.select(col("src").as("e1s"), col("dst").as("e1d"))
+    val e2 = edges.select(col("src").as("e2s"), col("dst").as("e2d"))
+    try {
+      // fail loudly when the allow-list misses the corpus entirely (the
+      // round-12 advice finding): an empty intersection empties the hub
+      // layer and every frontier, and the search would SILENTLY return
+      // zero rows — indistinguishable from "no near neighbors". One
+      // bounded probe (first hit short-circuits the scan); the cached
+      // frame is released on the way out either way.
+      require(na.limit(1).count() == 1L,
+        "NswGraph.queryFiltered: the allow-list shares no ids with the " +
+          "corpus — every candidate would be filtered out; pass an " +
+          "allow-list drawn from the corpus id space")
+      local(GraphAnn.beamWalk(queries, na, idCol, vecCol, k, beamWidth,
+          searchRounds) { beam =>
+        // 1-hop neighborhood of the (all-allowed) frontier
+        val adj = beam.join(e1, col("nid") === col("e1s"))
+          .select(col("qid"), col("e1d").as("cand")).distinct()
+        // bridge: expand DISALLOWED 1-hop nodes one more hop — route
+        // through them without granting them beam slots or pool rows
+        val bridge = adj
+          .join(alwCand, Seq("cand"), "left_anti")
+          .withColumnRenamed("cand", "mid")
+          .join(e2, col("mid") === col("e2s"))
+          .select(col("qid"), col("e2d").as("cand"))
+        adj.union(bridge).distinct()
+          .join(alwCand, Seq("cand"))
+          .select(col("qid"), col("cand").as("nid"))
+      })
+    } finally na.unpersist()
+  }
+
+  /** APPEND a delta — the graph family's incremental insert (q187's
+    * nightly-delta stance, HNSW's insert batched): each delta vector
+    * beam-searches THIS graph over the bound corpus (entry hubs = its
+    * smallest ids) and its top-m hits become insert edges; delta↔delta
+    * edges come from the sharded-bucket SEED over the delta alone
+    * (NN-descent's starting point — the next full rebuild refines them);
+    * then every node's edge list re-ranks top-m over base edges ∪ insert
+    * edges (both directions) ∪ delta seed (both directions). Untouched
+    * base nodes keep their lists BY CONSTRUCTION (their candidate set is
+    * exactly their old edges), so the re-rank is a global statement, not
+    * a global cost. The new handle binds corpus ∪ delta. */
+  def append(delta: DataFrame): NswGraph = {
+    import org.apache.spark.sql.expressions.Window
+    // fail loudly on id overlap: re-ingesting an existing id (the natural
+    // upsert mistake) would merge two nodes' edge lists under one src and
+    // serve duplicate/corrupt top-k with no error. One id-only semi-join,
+    // probed from the bounded delta side, short-circuited at the first hit.
+    val clash = delta.select(col(idCol).cast("long").as("_vid"))
+      .join(corpus.select(col(idCol).cast("long").as("_vid")),
+        Seq("_vid"), "left_semi")
+      .limit(1).count()
+    require(clash == 0,
+      "NswGraph.append: delta shares ids with the corpus — an update is " +
+        "a delete then an append, never a re-insert")
+    val (ins, insH) = search(delta, k = m, NswGraph.InsertBeamWidth,
+      NswGraph.InsertSearchRounds)
+    val planesD = Similarity.adaptivePlanes(delta.count(),
+      NswGraph.TargetBucket)
+    val gd = GraphAnn.nswGraphResult(delta, idCol, vecCol, m, planesD, dim,
+      refineRounds = 0)
+    val a = ins.select(col("qid").as("src"), col("nid").as("dst"), col("d2"))
+    val w = Window.partitionBy("src").orderBy(col("d2"), col("dst"))
+    val pool = edges
+      .union(a)
+      .union(a.select(col("dst").as("src"), col("src").as("dst"), col("d2")))
+      .union(gd.edges)
+      .union(gd.edges.select(col("dst").as("src"), col("src").as("dst"),
+        col("d2")))
+      .distinct()
+    val next = derived(Graph.snapshot(
+      pool.withColumn("rk", row_number().over(w)).filter(col("rk") <= m)
+        .drop("rk")),
+      corpus.select(col(idCol), col(vecCol))
+        .union(delta.select(col(idCol), col(vecCol))))
+    Graph.release(insH)
+    gd.release()
+    next
+  }
+
+  /** DELETE ids — the graph family's FAISS `remove_ids` analog (q219's
+    * stance, applied to edges instead of codes): the surviving edges are
+    * still exact distances between surviving vectors — geometry, not
+    * membership — so no rebuild is needed; but every edge INCIDENT to a
+    * deleted node must go (one anti-join per side), or search would
+    * route through and even RETURN deleted vectors. The ids also leave
+    * the bound corpus, so they vanish as hubs and scoring rows. */
+  def delete(ids: DataFrame, idsCol: String): NswGraph = {
+    val del = ids.select(col(idsCol).cast("long").as("_del"))
+    val kept = edges
+      .join(del.withColumnRenamed("_del", "src"), Seq("src"), "left_anti")
+      .join(del.withColumnRenamed("_del", "dst"), Seq("dst"), "left_anti")
+      .select("src", "dst", "d2")
+    derived(Graph.snapshot(kept), corpus.join(
+      ids.select(col(idsCol).as(idCol)), Seq(idCol), "left_anti"))
+  }
+
+  /** The unfiltered beam search in its snapshot form: the materialized
+    * top-k and the RDD that backs it, for the caller to release. */
+  private def search(queries: DataFrame, k: Int, beamWidth: Int,
+      searchRounds: Int): (DataFrame, RDD[_]) = {
+    val n = GraphAnn.pool(corpus, idCol, vecCol).persist()
+    try GraphAnn.beamWalk(queries, n, idCol, vecCol, k, beamWidth,
+        searchRounds) { beam =>
+      beam.join(edges, col("nid") === col("src"))
+        .select(col("qid"), col("dst").as("nid")).distinct()
+    } finally n.unpersist()
+  }
+
+  /** A materialized handle over `storage`, owned by it alone, with the
+    * same columns and parameters bound to `binding`. */
+  private def derived(storage: (DataFrame, RDD[_]),
+      binding: DataFrame): NswGraph = {
+    val (e, eh) = storage
     e.count()
-    new NswGraph(e, () => Graph.release(eh))
+    new NswGraph(e, () => Graph.release(eh), binding, idCol, vecCol, m, dim)
+  }
+
+  /** Collect a bounded search result into a local frame and release the
+    * snapshot that backed it. */
+  private def local(result: (DataFrame, RDD[_])): DataFrame = {
+    val (out, rdd) = result
+    val rows = try out.collect() finally Graph.release(rdd)
+    out.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      out.schema)
   }
 }
 
@@ -69,9 +249,22 @@ object NswGraph {
     * tables that genuinely lack the column. */
   private[operators] val FormatVersion = 2
 
+  /** The search settings every graph uses: `Hubs` entry points per
+    * search, and `append`'s insert search (beam width, rounds) and delta
+    * seed occupancy (`TargetBucket` vectors per bucket). */
+  private[operators] val Hubs = 16
+  private val InsertBeamWidth = 8
+  private val InsertSearchRounds = 3
+  private val TargetBucket = 64
+
   /** Rebuild a serving handle from a [[NswGraph.save]] artifact: one
-    * parquet read, cached and materialized — no construction jobs. */
-  def load(spark: org.apache.spark.sql.SparkSession, path: String): NswGraph = {
+    * parquet read, cached and materialized — no construction jobs —
+    * bound to `corpus` (the frame the saved graph was built over, same
+    * ids and vectors) and the build parameters `m` and `dim`, which
+    * `append` reuses. */
+  def load(spark: org.apache.spark.sql.SparkSession, path: String,
+      corpus: DataFrame, idCol: String, vecCol: String, m: Int,
+      dim: Int): NswGraph = {
     // shape-validate / version-gate / count-verify through the ONE
     // artifact-params owner (round-13 verdict item 4). An artifact
     // whose params genuinely lack n_edges is still a valid,
@@ -89,15 +282,9 @@ object NswGraph {
     val got = e.count()
     p.verifyCounts { e.unpersist() }(
       ArtifactParams.Count("edges", nEdges, got))
-    new NswGraph(e, () => { e.unpersist(); () })
+    new NswGraph(e, () => { e.unpersist(); () }, corpus, idCol, vecCol, m,
+      dim)
   }
-}
-
-/** A materialized NSW search result (bounded: k rows per query) with its
-  * release handle; `rows` must not be consumed after release. */
-final case class NswTopK(rows: DataFrame,
-                         private val rdd: RDD[_]) {
-  def release(): Unit = Graph.release(rdd)
 }
 
 /** Graph-based ANN — the NSW/HNSW family (round-10 verdict item 3): the
@@ -123,7 +310,8 @@ final case class NswTopK(rows: DataFrame,
   * neighbors-of-neighbors and keeps the top-m — a neighbor's neighbor
   * is likely a neighbor, which is the small-world bet.
   *
-  * Search = hub entry + best-first beam: the query scores the `hubs`
+  * Search = hub entry + best-first beam ([[beamWalk]], served by
+  * [[NswGraph.query]]): the query scores the [[NswGraph.Hubs]] (16)
   * smallest corpus ids exactly (HNSW's upper layer collapsed to one
   * coarse level — without it, greedy from a single fixed entry stalls
   * in the entry's neighborhood; measured 0.26 recall vs 0.9 for the
@@ -131,7 +319,7 @@ final case class NswTopK(rows: DataFrame,
   * `searchRounds` hops scores the frontier's out-neighbors, pools them
   * with everything visited, and keeps the best `beamWidth` as the next
   * frontier. Final top-k cut from the visited pool. Candidate budget ≤
-  * hubs + searchRounds·beamWidth·m.
+  * 16 + searchRounds·beamWidth·m.
   *
   * Scale shape: the graph is an (src, dst, d2) edge table — m rows per
   * corpus vector, the same residency class as PQ codes; construction
@@ -140,7 +328,11 @@ final case class NswTopK(rows: DataFrame,
   * serving cost is corpus-size-free once the graph stands, which is
   * why this family wins at low latency. At 100 TB the seed uses more
   * planes (occupancy-scaled like adaptivePlanes) and more refine
-  * rounds — knobs, not new shapes. */
+  * rounds — knobs, not new shapes.
+  *
+  * [[nswGraphResult]] returns the graph as an [[NswGraph]] handle bound
+  * to its corpus; search, append, delete, compaction and the artifact
+  * are that handle's methods. */
 object GraphAnn {
 
   /** Target shard occupancy for the seed's hot-bucket sharding — a
@@ -148,10 +340,10 @@ object GraphAnn {
     * shards, hard-bounding every node's seed-join contribution. */
   private[operators] val SeedCap = 64
 
-  /** The ONE declaration of [[nswSearchOn]]'s output schema — drain
-    * paths (the q231 stream buffer) must build rows against this, and
-    * [[nswSearchOn]] asserts its plan still produces it, so a column
-    * change fails at the source instead of corrupting a drain. */
+  /** The ONE declaration of the NSW search output schema — drain paths
+    * (the q231 stream buffer) must build rows against this, and
+    * [[beamWalk]] asserts its plan still produces it, so a column change
+    * fails at the source instead of corrupting a drain. */
   val TopKSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
@@ -183,16 +375,14 @@ object GraphAnn {
     * node that shares a bucket with at least one peer. Deterministic:
     * LSH-bucket seed, `refineRounds` NN-descent rounds, every cut
     * ranked by (d2 ASC, dst ASC). Snapshot-per-round; the returned
-    * handle owns the final round's blocks. */
+    * handle owns the final round's blocks and is bound to `corpus`. */
   def nswGraphResult(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, planes: Int, dim: Int, refineRounds: Int): NswGraph = {
     import org.apache.spark.sql.expressions.Window
     require(m > 0 && m <= 64, s"m=$m out of range")
     require(refineRounds >= 0 && refineRounds <= 8,
       s"refineRounds=$refineRounds out of range")
-    val n = Similarity.prepared(corpus, idCol, vecCol)
-      .select(col(idCol).cast("long").as("vid"), col("q"), col("nsq"))
-      .persist()
+    val n = pool(corpus, idCol, vecCol).persist()
     val nb = n.withColumn("bucket", lshBucketExpr("q", planes, dim))
     val w = Window.partitionBy("src").orderBy(col("d2"), col("dst"))
     // MULTI-probe seed (own bucket + every single-bit flip — the q81
@@ -271,32 +461,36 @@ object GraphAnn {
       e = e2; eh = eh2; r += 1
     }
     n.unpersist()
-    new NswGraph(e, () => Graph.release(eh))
+    new NswGraph(e, () => Graph.release(eh), corpus, idCol, vecCol, m, dim)
   }
 
-  /** Hub-entry beam search against a PREBUILT [[NswGraph]] handle — the
-    * build-once/query-many serving form (the [[IvfAdcIndex]] doctrine: a
-    * production store answers many query batches against one built
-    * artifact; a search that rebuilds per batch pays seed + NN-descent
-    * every time). Does NOT release `g` — the caller owns it across
-    * batches. Output (qid, nid, d2, rank ≤ k), MATERIALIZED — every
-    * per-round visited pool is released before return; the result
-    * handle owns only the bounded output. */
-  def nswSearchOn(queries: DataFrame, g: NswGraph, corpus: DataFrame,
+  /** The prepared corpus side every search scores against:
+    * (vid, q, nsq). */
+  private[operators] def pool(corpus: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    Similarity.prepared(corpus, idCol, vecCol)
+      .select(col(idCol).cast("long").as("vid"), col("q"), col("nsq"))
+
+  /** Hub-entry best-first beam walk over the prepared pool `n` (see
+    * [[pool]]): the queries score the [[NswGraph.Hubs]] smallest pool ids
+    * exactly, then each of `searchRounds` rounds takes the best
+    * `beamWidth` of the visited pool as the frontier, scores the
+    * candidate (qid, nid) pairs `expand` draws from it against the pool,
+    * and adds them to the visited pool. Output (qid, nid, d2, rank ≤ k)
+    * without the query's own id, MATERIALIZED: every per-round pool is
+    * released before return, and the returned RDD backs only the bounded
+    * output. */
+  private[operators] def beamWalk(queries: DataFrame, n: DataFrame,
       idCol: String, vecCol: String, k: Int, beamWidth: Int,
-      searchRounds: Int, hubs: Int = 16): NswTopK = {
+      searchRounds: Int)(expand: DataFrame => DataFrame): (DataFrame, RDD[_]) = {
     import org.apache.spark.sql.expressions.Window
     require(beamWidth > 0 && searchRounds > 0, "beam/searchRounds must be > 0")
-    require(hubs > 0 && hubs <= 4096, s"hubs=$hubs out of range")
-    val n = Similarity.prepared(corpus, idCol, vecCol)
-      .select(col(idCol).cast("long").as("vid"), col("q"), col("nsq"))
-      .persist()
     val qp = Similarity.prepared(queries, idCol, vecCol)
       .select(col(idCol).cast("long").as("qid"), col("q").as("qq"),
         col("nsq").as("qnsq"))
-    // hub layer: the `hubs` smallest corpus ids — bounded, broadcast-legal
+    // hub layer: the smallest pool ids — bounded, broadcast-legal
     val hub = n.join(broadcast(n.select(col("vid")).orderBy("vid")
-      .limit(hubs)), "vid")
+      .limit(NswGraph.Hubs)), "vid")
     val nn = n.select(col("vid").as("nid"), col("q").as("nq"),
       col("nsq").as("nnsq"))
     val wb = Window.partitionBy("qid").orderBy(col("d2"), col("nid"))
@@ -310,8 +504,7 @@ object GraphAnn {
     while (r < searchRounds) {
       val beam = visited.withColumn("rk", row_number().over(wb))
         .filter(col("rk") <= beamWidth).drop("rk")
-      val scored = beam.join(g.edges, col("nid") === col("src"))
-        .select(col("qid"), col("dst").as("nid")).distinct()
+      val scored = expand(beam)
         .join(qp, "qid").join(nn, "nid")
         .select(col("qid"), col("nid"),
           (col("qnsq") + col("nnsq")
@@ -327,120 +520,10 @@ object GraphAnn {
         .select("qid", "nid", "d2", "rank"))
     out.count()
     Graph.release(vh)
-    n.unpersist()
     require(out.schema.map(f => (f.name, f.dataType)) ==
       TopKSchema.map(f => (f.name, f.dataType)),
-      s"nswSearchOn output drifted from TopKSchema: ${out.schema}")
-    NswTopK(out, oh)
-  }
-
-  /** METADATA-FILTERED beam search against a prebuilt graph (the q220
-    * allow-list stance for the graph family, round-11 verdict item 3):
-    * only ids in `allowed` may be RETURNED — and, crucially, the filter
-    * constrains BEAM EXPANSION, not just the final cut. Post-filtering
-    * the top-k starves recall under a selective predicate (a 20 %
-    * allow-list leaves ~1 allowed row in a k=5 cut), and a beam whose
-    * slots fill with disallowed near-query nodes spends its entire
-    * candidate budget on rows it can never return. Here the visited
-    * pool — and therefore every frontier — holds ALLOWED nodes only:
-    * entry hubs are the smallest allowed ids, and each round expands a
-    * frontier node through (a) its direct allowed out-neighbors and
-    * (b) its disallowed out-neighbors' allowed out-neighbors — the
-    * filtered-ANN "bridge" step (ACORN / filtered-DiskANN's
-    * predicate-agnostic traversal, collapsed to two hops): the walk may
-    * ROUTE through a disallowed node but never grants it a beam slot,
-    * so the allowed subgraph's disconnection (under a selective
-    * predicate most same-bucket neighbors are disallowed) doesn't stall
-    * the search. Candidate volume per round is bounded by
-    * beamWidth·m·(1+m) BEFORE the allow join — bounded, never
-    * corpus-sized. Deterministic (d2, id) order throughout; DuckDB
-    * replays it bit-for-bit (q236). Does not release `g` or consume
-    * `allowed` destructively; the result is materialized and owns only
-    * its bounded output. */
-  def nswSearchFilteredOn(queries: DataFrame, g: NswGraph, corpus: DataFrame,
-      allowed: DataFrame, idCol: String, vecCol: String, k: Int,
-      beamWidth: Int, searchRounds: Int, hubs: Int = 16): NswTopK = {
-    import org.apache.spark.sql.expressions.Window
-    require(beamWidth > 0 && searchRounds > 0, "beam/searchRounds must be > 0")
-    require(hubs > 0 && hubs <= 4096, s"hubs=$hubs out of range")
-    val alw = allowed.select(col(idCol).cast("long").as("vid")).distinct()
-    // allowed corpus side, quantized once: hub layer, scoring, and the
-    // allow joins all read this one persisted frame
-    val na = Similarity.prepared(corpus, idCol, vecCol)
-      .select(col(idCol).cast("long").as("vid"), col("q"), col("nsq"))
-      .join(alw, "vid")
-      .persist()
-    // fail loudly when the allow-list misses the corpus entirely (the
-    // round-12 advice finding): an empty intersection empties the hub
-    // layer and every frontier, and the search would SILENTLY return
-    // zero rows — indistinguishable from "no near neighbors" — while
-    // the analogous canary/torn-artifact paths all fail with a designed
-    // message. One bounded probe (first hit short-circuits the scan).
-    if (na.limit(1).count() != 1L) {
-      // release the cached frame before raising the designed error —
-      // every designed-failure invocation would otherwise leak its
-      // persisted blocks (round-13 advice)
-      na.unpersist()
-      throw new IllegalArgumentException(
-        "requirement failed: nswSearchFilteredOn: the allow-list " +
-          "shares no ids with the corpus — every candidate would be " +
-          "filtered out; pass an allow-list drawn from the corpus id " +
-          "space")
-    }
-    val qp = Similarity.prepared(queries, idCol, vecCol)
-      .select(col(idCol).cast("long").as("qid"), col("q").as("qq"),
-        col("nsq").as("qnsq"))
-    val hub = na.join(broadcast(na.select(col("vid")).orderBy("vid")
-      .limit(hubs)), "vid")
-    val nn = na.select(col("vid").as("nid"), col("q").as("nq"),
-      col("nsq").as("nnsq"))
-    val alwCand = alw.withColumnRenamed("vid", "cand")
-    val wb = Window.partitionBy("qid").orderBy(col("d2"), col("nid"))
-    var (visited, vh) = Graph.snapshot(
-      qp.crossJoin(broadcast(hub))
-        .select(col("qid"), col("vid").as("nid"),
-          (col("qnsq") + col("nsq")
-            - lit(2L) * dot(col("qq"), col("q"))).cast("long").as("d2")))
-    visited.count()
-    val e1 = g.edges.select(col("src").as("e1s"), col("dst").as("e1d"))
-    val e2 = g.edges.select(col("src").as("e2s"), col("dst").as("e2d"))
-    var r = 0
-    while (r < searchRounds) {
-      val beam = visited.withColumn("rk", row_number().over(wb))
-        .filter(col("rk") <= beamWidth).drop("rk")
-      // 1-hop neighborhood of the (all-allowed) frontier
-      val adj = beam.join(e1, col("nid") === col("e1s"))
-        .select(col("qid"), col("e1d").as("cand")).distinct()
-      // bridge: expand DISALLOWED 1-hop nodes one more hop — route
-      // through them without granting them beam slots or pool rows
-      val bridge = adj
-        .join(alwCand, Seq("cand"), "left_anti")
-        .withColumnRenamed("cand", "mid")
-        .join(e2, col("mid") === col("e2s"))
-        .select(col("qid"), col("e2d").as("cand"))
-      val scored = adj.union(bridge).distinct()
-        .join(alwCand, Seq("cand"))
-        .select(col("qid"), col("cand").as("nid"))
-        .join(qp, "qid").join(nn, "nid")
-        .select(col("qid"), col("nid"),
-          (col("qnsq") + col("nnsq")
-            - lit(2L) * dot(col("qq"), col("nq"))).cast("long").as("d2"))
-      val (v2, vh2) = Graph.snapshot(visited.union(scored).distinct())
-      v2.count()
-      Graph.release(vh)
-      visited = v2; vh = vh2; r += 1
-    }
-    val (out, oh) = Graph.snapshot(
-      visited.filter(col("qid") =!= col("nid"))
-        .withColumn("rank", row_number().over(wb)).filter(col("rank") <= k)
-        .select("qid", "nid", "d2", "rank"))
-    out.count()
-    Graph.release(vh)
-    na.unpersist()
-    require(out.schema.map(f => (f.name, f.dataType)) ==
-      TopKSchema.map(f => (f.name, f.dataType)),
-      s"nswSearchFilteredOn output drifted from TopKSchema: ${out.schema}")
-    NswTopK(out, oh)
+      s"NSW search output drifted from TopKSchema: ${out.schema}")
+    (out, oh)
   }
 
   /** Graph INTROSPECTION (round-12 verdict item 3 — the q207 invlists
@@ -488,169 +571,4 @@ object GraphAnn {
         lit(nRecip * 1000000L / nEdges).as("reciprocity_ppm"),
         lit(nComp).as("n_components"))
   }
-
-  /** APPEND a delta to an existing graph — the graph family's
-    * incremental-insert (q187's nightly-delta stance, HNSW's insert
-    * batched): each delta vector beam-searches the EXISTING graph over
-    * the base corpus (entry hubs = base smallest ids) and its top-m
-    * hits become insert edges; delta↔delta edges come from the
-    * sharded-bucket SEED over the delta alone (NN-descent's starting
-    * point — the next full rebuild refines them); then every node's
-    * edge list re-ranks top-m over base edges ∪ insert edges (both
-    * directions) ∪ delta seed (both directions). Untouched base nodes
-    * keep their lists BY CONSTRUCTION (their candidate set is exactly
-    * their old edges), so the re-rank is a global statement, not a
-    * global cost. Returns a NEW snapshot-backed handle; `g` is
-    * untouched. Serving the appended graph passes base ∪ delta as the
-    * corpus (hubs come from the union's smallest ids). */
-  def nswAppend(g: NswGraph, base: DataFrame, delta: DataFrame,
-      idCol: String, vecCol: String, m: Int, dim: Int, beamWidth: Int,
-      searchRounds: Int, hubs: Int = 16, targetBucket: Int = 64): NswGraph = {
-    import org.apache.spark.sql.expressions.Window
-    // fail loudly on id overlap: re-ingesting an existing id (the natural
-    // upsert mistake) would merge two nodes' edge lists under one src and
-    // serve duplicate/corrupt top-k with no error. One id-only semi-join,
-    // probed from the bounded delta side, short-circuited at the first hit.
-    val clash = delta.select(col(idCol).cast("long").as("_vid"))
-      .join(base.select(col(idCol).cast("long").as("_vid")),
-        Seq("_vid"), "left_semi")
-      .limit(1).count()
-    require(clash == 0,
-      "nswAppend: delta shares ids with base — an update is a delete " +
-        "then an append, never a re-insert")
-    val ins = nswSearchOn(delta, g, base, idCol, vecCol, k = m,
-      beamWidth, searchRounds, hubs)
-    val planesD = Similarity.adaptivePlanes(delta.count(), targetBucket)
-    val gd = nswGraphResult(delta, idCol, vecCol, m, planesD, dim,
-      refineRounds = 0)
-    val a = ins.rows.select(col("qid").as("src"), col("nid").as("dst"),
-      col("d2"))
-    val w = Window.partitionBy("src").orderBy(col("d2"), col("dst"))
-    val pool = g.edges
-      .union(a)
-      .union(a.select(col("dst").as("src"), col("src").as("dst"), col("d2")))
-      .union(gd.edges)
-      .union(gd.edges.select(col("dst").as("src"), col("src").as("dst"),
-        col("d2")))
-      .distinct()
-    val (e, eh) = Graph.snapshot(
-      pool.withColumn("rk", row_number().over(w)).filter(col("rk") <= m)
-        .drop("rk"))
-    e.count()
-    ins.release()
-    gd.release()
-    new NswGraph(e, () => Graph.release(eh))
-  }
-
-  /** DELETE ids from the graph — the graph family's FAISS `remove_ids`
-    * analog (q219's stance, applied to edges instead of codes): the
-    * surviving edges are still exact distances between surviving
-    * vectors — geometry, not membership — so no rebuild is needed; but
-    * every edge INCIDENT to a deleted node must go (one anti-join per
-    * side), or search would route through and even RETURN deleted
-    * vectors. Returns a NEW snapshot-backed handle; the input handle is
-    * untouched and the two share no storage obligations. Serving must
-    * pass the SURVIVING corpus to [[nswSearchOn]] (the hub layer and
-    * exact scoring read it): deleted nodes also vanish as hubs. */
-  def nswDelete(g: NswGraph, deleted: DataFrame, idCol: String): NswGraph = {
-    val del = deleted.select(col(idCol).cast("long").as("_del"))
-    val kept = g.edges
-      .join(del.withColumnRenamed("_del", "src"), Seq("src"), "left_anti")
-      .join(del.withColumnRenamed("_del", "dst"), Seq("dst"), "left_anti")
-      .select("src", "dst", "d2")
-    val (e, eh) = Graph.snapshot(kept)
-    e.count()
-    new NswGraph(e, () => Graph.release(eh))
-  }
-
-  /** The graph family's MAINTENANCE LOOP ([[AnnMaintenance
-    * .appendServeWithCanary]]'s stance): append the delta under the
-    * EXISTING graph ([[nswAppend]] — bounded insert search + seed +
-    * re-rank, never a rebuild), score a recall canary against
-    * [[Similarity.exactL2Knn]] gold over base ∪ delta on the bounded
-    * query sample, and REBUILD the graph from scratch only when the
-    * canary says the insert path has cost too much recall. The decision
-    * is pure integer math (hits·100 < minRecallPct·|gold|), so a SQL
-    * oracle replays it exactly; output carries the q190 audit columns
-    * (`mean_recall`, `retrained`) on every row. All intermediate
-    * handles release before return; results materialize driver-side
-    * first (bounded: k·|queries| rows). */
-  def appendServeWithCanary(base: DataFrame, delta: DataFrame,
-      queries: DataFrame, idCol: String, vecCol: String, k: Int, m: Int,
-      dim: Int, beamWidth: Int, searchRounds: Int, minRecallPct: Int,
-      hubs: Int = 16, targetBucket: Int = 64): DataFrame = {
-    // fail fast (the round-10 advice lesson): validate before any build
-    require(minRecallPct >= 0 && minRecallPct <= 100,
-      s"minRecallPct=$minRecallPct out of 0..100")
-    val spark = base.sparkSession
-    val planesB = Similarity.adaptivePlanes(base.count(), targetBucket)
-    val g = nswGraphResult(base, idCol, vecCol, m, planesB, dim,
-      refineRounds = 1)
-    val appended = nswAppend(g, base, delta, idCol, vecCol, m, dim,
-      beamWidth, searchRounds, hubs, targetBucket)
-    val union = base.select(col(idCol), col(vecCol))
-      .union(delta.select(col(idCol), col(vecCol)))
-    val servedH = nswSearchOn(queries, appended, union, idCol, vecCol,
-      k, beamWidth, searchRounds, hubs)
-    val apprRows = servedH.rows.collect()
-    servedH.release()
-    appended.release()
-    g.release()
-    val gold = Similarity.exactL2Knn(queries, union, idCol, vecCol, k)
-      .select(col("qid"), col("nid")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val hits = apprRows.count(r => gold.contains((r.getLong(0), r.getLong(1))))
-    val total = gold.size
-    // an empty query sample (or an empty union) yields total=0; without
-    // this guard mean_recall is NaN and retrained silently false — fail
-    // loudly instead (the round-11 advice finding)
-    require(total > 0,
-      "appendServeWithCanary: empty exact-gold set — the canary cannot " +
-        "adjudicate recall over zero queries; pass a non-empty query sample")
-    val retrained = hits.toLong * 100L < minRecallPct.toLong * total.toLong
-    val servedRows =
-      if (!retrained) apprRows
-      else {
-        val planesU = Similarity.adaptivePlanes(union.count(), targetBucket)
-        val g2 = nswGraphResult(union, idCol, vecCol, m, planesU, dim,
-          refineRounds = 1)
-        val out = nswSearchOn(queries, g2, union, idCol, vecCol, k,
-          beamWidth, searchRounds, hubs)
-        val rows = out.rows.collect()
-        out.release()
-        g2.release()
-        rows
-      }
-    import spark.implicits._
-    val meanRecall = hits.toDouble / total
-    servedRows.toSeq
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3),
-        meanRecall, retrained))
-      .toDF("qid", "nid", "d2", "rank", "mean_recall", "retrained")
-  }
-
-  /** Build + one-shot search: constructs the graph, serves one query
-    * batch via [[nswSearchOn]], and releases the graph before return.
-    * Callers with more than one batch should hold an [[nswGraphResult]]
-    * handle and call [[nswSearchOn]] per batch instead. */
-  def nswSearchResult(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int, m: Int, planes: Int, dim: Int,
-      refineRounds: Int, beamWidth: Int, searchRounds: Int,
-      hubs: Int = 16): NswTopK = {
-    val g = nswGraphResult(corpus, idCol, vecCol, m, planes, dim, refineRounds)
-    val out = nswSearchOn(queries, g, corpus, idCol, vecCol, k, beamWidth,
-      searchRounds, hubs)
-    g.release()
-    out
-  }
-
-  /** Convenience form of [[nswSearchResult]]: the output snapshot is
-    * Spark-managed (ContextCleaner reclaims blocks on GC) — long-lived
-    * sessions should use the Result form and release(). */
-  def nswSearch(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int, m: Int, planes: Int, dim: Int,
-      refineRounds: Int, beamWidth: Int, searchRounds: Int,
-      hubs: Int = 16): DataFrame =
-    nswSearchResult(queries, corpus, idCol, vecCol, k, m, planes, dim,
-      refineRounds, beamWidth, searchRounds, hubs).rows
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Oracle-checked similarity-search queries over `embeddings` (64-dim
@@ -2153,9 +2153,7 @@ object SimilarityOps {
       val emb = Tables.t(s, d, "embeddings")
       val idx = ivfCached(emb, d)
       queryStream(s, emb, tempDir("annstream", d),
-          ivfQuery(idx, emb.limit(0)).schema) { batch =>
-        ivfQuery(idx, batch).collect()
-      }
+          ivfQuery(idx, emb.limit(0)).schema)(ivfRows(idx, _))
     },
 
     // ---- HYBRID retrieval (RRF): the production RAG front door fuses
@@ -2225,9 +2223,8 @@ object SimilarityOps {
       val queries = union.filter(col("vec_id") < 5 ||
         (col("vec_id") >= AppendBase && col("vec_id") < AppendBase + 5))
       AnnMaintenance.appendServeWithCanary(base, delta, queries,
-        "vec_id", "embedding", k = 5, candidates = 50, nprobe = 2,
-        nlist = 8, trainRounds = 2, m = 16, ksub = 8, dim = Dim,
-        pqTrainRounds = 2, minRecallPct = DriftMinRecallPct)
+          "vec_id", "embedding", k = 5, minRecallPct = DriftMinRecallPct)(
+          ivfBuild, ivfRows)
         .orderBy("qid", "rank")
     },
 
@@ -2253,10 +2250,9 @@ object SimilarityOps {
       val union = base.union(delta)
       val queries = union.filter(col("vec_id") < 5 ||
         (col("vec_id") >= AppendBase && col("vec_id") < AppendBase + 5))
-      AnnMaintenance.streamMaintain(base, delta, tempDir("annmaint", d), groups = 3,
-        queries, "vec_id", "embedding", k = 5, candidates = 50, nprobe = 2,
-        nlist = 8, trainRounds = 2, m = 16, ksub = 8, dim = Dim,
-        pqTrainRounds = 2, minRecallPct = DriftMinRecallPct)
+      AnnMaintenance.streamMaintain(base, delta, tempDir("annmaint", d),
+          groups = 3, queries, "vec_id", "embedding", k = 5,
+          minRecallPct = DriftMinRecallPct)(ivfBuild, ivfRows)
         ._1.orderBy("qid", "rank")
     },
 
@@ -2420,15 +2416,7 @@ object SimilarityOps {
     //      budget. ----
     Q("q226_nsw_graph_knn", NswOracleSqlStd) { (s, d) =>
       val emb = Tables.t(s, d, "embeddings")
-      // occupancy-scaled seed planes (the q83 rule at targetBucket=64):
-      // a FIXED plane count makes the bucket self-join quadratic in the
-      // corpus — measured 13.9× wall at a 10× probe before this; the
-      // oracle derives the identical count from its own count(*) CTE
-      val planes = Similarity.adaptivePlanes(emb.count(), targetBucket = 64)
-      GraphAnn.nswSearch(emb.filter(col("vec_id") < 10), emb, "vec_id",
-          "embedding", k = 5, m = 16, planes = planes, dim = Dim,
-          refineRounds = 1, beamWidth = 8, searchRounds = 3)
-        .orderBy("qid", "rank")
+      lifecycleServe(s, emb, nswBuild(emb))()(nswQuery)
     },
 
     // ---- MIPS from the PERSISTED index artifact (q227's metric lifted
@@ -2494,18 +2482,10 @@ object SimilarityOps {
       // cached build (the q189 buildCached stance): the timed work is
       // the artifact ROUND-TRIP (save + verified load + serve), not
       // per-call seed/NN-descent; the cache owns the handle
-      val g = nswCached(emb, d)
-      val dir = tempDir("nswidx", d)
-      g.save(dir)
-      val loaded = NswGraph.load(s, dir)
-      // nswSearchOn materializes its bounded output into its OWN
-      // snapshot, so the rows stay valid past the loaded handle's
-      // release (the q187 rule is satisfied by construction)
-      val out = GraphAnn.nswSearchOn(emb.filter(col("vec_id") < 10),
-        loaded, emb, "vec_id", "embedding", k = 5, beamWidth = 8,
-        searchRounds = 3)
-      loaded.release()
-      out.rows.orderBy("qid", "rank")
+      // query returns a local frame, so the rows stay valid past the
+      // loaded handle's release (the q187 rule, by construction)
+      roundTrip(nswCached(emb, d), tempDir("nswidx", d))(nswLoad(s, emb))(
+        nswQuery(_, emb.filter(col("vec_id") < 10)).orderBy("qid", "rank"))
     },
 
     // ---- STREAMING NSW serving (the q193 arrival pattern for the
@@ -2523,16 +2503,8 @@ object SimilarityOps {
       // cached build (the q193 resident-index stance): the timed work
       // is the micro-batch drain served against ONE resident handle
       val g = nswCached(emb, d)
-      queryStream(s, emb, tempDir("nswstream", d), GraphAnn.TopKSchema) {
-          batch =>
-        // nswSearchOn materializes its own bounded snapshot; release
-        // it as soon as the rows are drained into the buffer
-        val served = GraphAnn.nswSearchOn(batch, g, emb, "vec_id",
-          "embedding", k = 5, beamWidth = 8, searchRounds = 3)
-        val rows = served.rows.collect()
-        served.release()
-        rows
-      }
+      queryStream(s, emb, tempDir("nswstream", d), GraphAnn.TopKSchema)(
+        nswRows(g, _))
     },
 
     // ---- NSW deletion (the q219 remove_ids stance, graph-side): the
@@ -2548,8 +2520,13 @@ object SimilarityOps {
     Q("q232_nsw_delete",
       nswOracleSql(m = 16, targetBucket = 64, refineRounds = 1,
         beamWidth = 8, searchRounds = 3, k = 5,
-        delPred = Some("(%ID% >= 20 AND %ID% % 7 = 3)")))(
-      (s, d) => nswDeleteServe(s, d)),
+        delPred = Some("(%ID% >= 20 AND %ID% % 7 = 3)"))) { (s, d) =>
+      val emb = Tables.t(s, d, "embeddings")
+      // the oracle's own delete predicate, not the shared `deleted` tenth
+      lifecycleServe(s, emb, nswBuild(emb))(_.delete(
+        emb.filter(col("vec_id") >= 20 && col("vec_id") % 7 === 3)
+          .select("vec_id"), "vec_id"))(nswQuery)
+    },
 
     // ---- NSW incremental append (the q187 nightly-delta stance for
     //      the graph family, HNSW insert batched): the base graph is
@@ -2562,8 +2539,10 @@ object SimilarityOps {
     //      pooled re-rank and the final serve over the appended graph
     //      with full-corpus hubs; one flipped edge anywhere in the
     //      insert path breaks the hash. ----
-    Q("q233_nsw_append", NswAppendOracleSqlStd)(
-      (s, d) => nswAppendServe(s, d)),
+    Q("q233_nsw_append", NswAppendOracleSqlStd) { (s, d) =>
+      val emb = Tables.t(s, d, "embeddings")
+      lifecycleServe(s, emb, nswBuild(baseRows(emb)))(appended(emb))(nswQuery)
+    },
 
     // ---- NSW maintenance loop (the q190 stance for the graph family):
     //      append under the existing graph, recall canary vs exact gold
@@ -2580,11 +2559,10 @@ object SimilarityOps {
         beamWidth = 8, searchRounds = 3, k = 5,
         canaryMinPct = Some(60))) { (s, d) =>
       val emb = Tables.t(s, d, "embeddings")
-      GraphAnn.appendServeWithCanary(
-          emb.filter(col("vec_id") < 400), emb.filter(col("vec_id") >= 400),
-          emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-          k = 5, m = 16, dim = Dim, beamWidth = 8, searchRounds = 3,
-          minRecallPct = 60)
+      AnnMaintenance.appendServeWithCanary(baseRows(emb),
+          emb.filter(col("vec_id") >= AppendBase),
+          emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
+          minRecallPct = 60)(nswBuild, nswRows)
         .orderBy("qid", "rank")
     },
 
@@ -2603,11 +2581,7 @@ object SimilarityOps {
       val emb = Tables.t(s, d, "embeddings")
       // cached build (the q220 filtered-search stance): the timed work
       // is the allow-list beam walk, not per-call construction
-      val g = nswCached(emb, d)
-      val out = GraphAnn.nswSearchFilteredOn(emb.filter(col("vec_id") < 10),
-        g, emb, emb.filter(col("vec_id") % 5 === 1).select("vec_id"),
-        "vec_id", "embedding", k = 5, beamWidth = 8, searchRounds = 3)
-      out.rows.orderBy("qid", "rank")
+      nswFiltered(nswCached(emb, d), emb)
     },
 
     // ---- FILTERED search from the PERSISTED graph artifact (round-12
@@ -2625,18 +2599,8 @@ object SimilarityOps {
       val emb = Tables.t(s, d, "embeddings")
       // cached build (the q189 buildCached stance): the timed work is
       // the artifact round-trip + filtered serve
-      val g = nswCached(emb, d)
-      val dir = tempDir("nswfidx", d)
-      g.save(dir)
-      val loaded = NswGraph.load(s, dir)
-      // nswSearchFilteredOn materializes its bounded output into its
-      // OWN snapshot, so the rows stay valid past the loaded handle's
-      // release (the q187 rule, satisfied by construction)
-      val out = GraphAnn.nswSearchFilteredOn(emb.filter(col("vec_id") < 10),
-        loaded, emb, emb.filter(col("vec_id") % 5 === 1).select("vec_id"),
-        "vec_id", "embedding", k = 5, beamWidth = 8, searchRounds = 3)
-      loaded.release()
-      out.rows.orderBy("qid", "rank")
+      roundTrip(nswCached(emb, d), tempDir("nswfidx", d))(nswLoad(s, emb))(
+        nswFiltered(_, emb))
     },
 
     // ---- NSW graph INTROSPECTION (round-12 verdict item 3 — the q207
@@ -2664,7 +2628,7 @@ object SimilarityOps {
     },
 
     // ---- NSW graph COMPACTION after append (round-12 verdict item 3 —
-    //      the q205 LSM merge for the graph family): after nswAppend
+    //      the q205 LSM merge for the graph family): after an append
     //      the edge table's blocks descend from base ∪ insert ∪ seed
     //      union legs; compact() shuffles ONCE by src so each node's
     //      out-edge list is colocated (sorted in the serving cut's
@@ -2674,8 +2638,11 @@ object SimilarityOps {
     //      pure storage reorganization, so the hash proves compacted ≡
     //      appended; VectorSpec pins edge-set equality, src colocation
     //      and storage independence. ----
-    Q("q238_nsw_compact", NswAppendOracleSqlStd)(
-      (s, d) => nswCompactServe(s, d)),
+    Q("q238_nsw_compact", NswAppendOracleSqlStd) { (s, d) =>
+      val emb = Tables.t(s, d, "embeddings")
+      lifecycleServe(s, emb, nswBuild(baseRows(emb)))(
+        appended(emb), _.compact())(nswQuery)
+    },
 
     // ---- HYBRID retrieval with the NSW dense leg (round-12 verdict
     //      item 4): q194's RRF front door was wired to the IVF route
@@ -2693,13 +2660,9 @@ object SimilarityOps {
       val emb = Tables.t(s, d, "embeddings")
       // cached build (the q185 buildCached stance): the timed work is
       // the fused retrieval, not per-call construction
-      val g = nswCached(emb, d)
-      val served = GraphAnn.nswSearchOn(emb.filter(col("vec_id") < 5),
-        g, emb, "vec_id", "embedding", k = 10, beamWidth = 8,
-        searchRounds = 3)
-      // the served handle stays unreleased (convenience form): the
-      // fused frame reads its bounded snapshot lazily downstream
-      fuseRrf(s, d, served.rows
+      val served = nswCached(emb, d).query(emb.filter(col("vec_id") < 5),
+        k = 10, beamWidth = 8, searchRounds = 3)
+      fuseRrf(s, d, served
         .select(col("qid"), col("nid"), col("rank").as("drank")))
     },
 
@@ -2714,8 +2677,14 @@ object SimilarityOps {
     //      process-restart boundaries and with every superseded handle
     //      released before the next step (storage independence by
     //      contract at each hop). ----
-    Q("q247_nsw_lifecycle_chain", NswAppendOracleSqlStd)(
-      (s, d) => nswChainServe(s, d)),
+    Q("q247_nsw_lifecycle_chain", NswAppendOracleSqlStd) { (s, d) =>
+      val emb = Tables.t(s, d, "embeddings")
+      val dir = tempDir("nswchain", d)
+      lifecycleServe(s, emb, nswBuild(baseRows(emb)))(
+        viaArtifact(s"$dir/n0")(nswLoad(s, baseRows(emb))),
+        appended(emb), _.compact(),
+        viaArtifact(s"$dir/n1")(nswLoad(s, emb)))(nswQuery)
+    },
 
     // ---- beam-width/recall TUNING SWEEP (the q224 operating-curve
     //      stance for the graph family): recall@5 vs exact gold at
@@ -2738,19 +2707,16 @@ object SimilarityOps {
           "embedding", 5)
         .select("qid", "nid")
       val rows = Seq(2, 4, 8).flatMap { bw =>
-        val h = GraphAnn.nswSearchOn(queries, g, emb, "vec_id",
-          "embedding", k = 5, beamWidth = bw, searchRounds = 3)
-        val r = exact
-          .join(h.rows.select(col("qid"), col("nid"), lit(1).as("hit")),
+        val served = g.query(queries, k = 5, beamWidth = bw,
+          searchRounds = 3)
+        exact
+          .join(served.select(col("qid"), col("nid"), lit(1).as("hit")),
             Seq("qid", "nid"), "left")
           .agg(sum(coalesce(col("hit"), lit(0))).cast("long").as("hits"),
             count(lit(1)).as("total"))
           .select(lit(bw).as("beam_width"), col("hits"), col("total"),
             (col("hits").cast("double") / col("total")).as("recall"))
-        // materialize (1 row) before this width's serve handle releases
-        val out = r.collect().toSeq
-        h.release()
-        out
+          .collect().toSeq
       }
       import s.implicits._
       rows.map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -2779,10 +2745,7 @@ object SimilarityOps {
       // cached build over the augmented corpus (its own cache entry —
       // the key folds in the corpus plan hash): the timed work is the
       // MIPS beam walk, not per-call construction
-      val g = nswCached(corpusAug, d)
-      val out = GraphAnn.nswSearchOn(queriesAug, g, corpusAug, "vec_id",
-        "embedding", k = 5, beamWidth = 8, searchRounds = 3)
-      out.rows.orderBy("qid", "rank")
+      nswQuery(nswCached(corpusAug, d), queriesAug).orderBy("qid", "rank")
     },
 
     // ---- MIPS from the PERSISTED graph artifact (the q229 analog —
@@ -2799,14 +2762,9 @@ object SimilarityOps {
       val queriesAug = mipsAugmentedZero(emb.filter(col("vec_id") < 10))
       // cached build (the q189/q229 stance): the timed work is the
       // artifact round-trip + the MIPS serve from the loaded handle
-      val g = nswCached(corpusAug, d)
-      val dir = tempDir("nswmips", d)
-      g.save(dir)
-      val loaded = NswGraph.load(s, dir)
-      val out = GraphAnn.nswSearchOn(queriesAug, loaded, corpusAug,
-        "vec_id", "embedding", k = 5, beamWidth = 8, searchRounds = 3)
-      loaded.release()
-      out.rows.orderBy("qid", "rank")
+      roundTrip(nswCached(corpusAug, d), tempDir("nswmips", d))(
+          nswLoad(s, corpusAug))(
+        nswQuery(_, queriesAug).orderBy("qid", "rank"))
     },
 
     // ---- SEMANTIC split-leakage audit (the q281 stance for the vector
@@ -3307,96 +3265,6 @@ object SimilarityOps {
          |  FROM sv$searchRounds WHERE nid <> qid) t WHERE rank <= 10),
          |${rrfFusionTailSql("dtop")}""".stripMargin
 
-  /** Pre-delete graph + DELETE + serve — the q232 body. The graph is
-    * built fresh (Verify exercises the real construction) and released
-    * once the pruned handle exists. */
-  private def nswDeleteServe(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val emb = Tables.t(s, d, "embeddings")
-    val planes = Similarity.adaptivePlanes(emb.count(), targetBucket = 64)
-    val g = GraphAnn.nswGraphResult(emb, "vec_id", "embedding",
-      m = 16, planes = planes, dim = Dim, refineRounds = 1)
-    val isDel = col("vec_id") >= 20 && col("vec_id") % 7 === 3
-    val g2 = GraphAnn.nswDelete(g, emb.filter(isDel).select("vec_id"),
-      "vec_id")
-    g.release()
-    val out = GraphAnn.nswSearchOn(emb.filter(col("vec_id") < 10), g2,
-      emb.filter(!isDel), "vec_id", "embedding", k = 5, beamWidth = 8,
-      searchRounds = 3)
-    g2.release()
-    out.rows.orderBy("qid", "rank")
-  }
-
-  /** Base graph + append + serve — the q233 body. */
-  private def nswAppendServe(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val emb = Tables.t(s, d, "embeddings")
-    val base = emb.filter(col("vec_id") < 400)
-    val delta = emb.filter(col("vec_id") >= 400)
-    val planesB = Similarity.adaptivePlanes(base.count(), targetBucket = 64)
-    val g = GraphAnn.nswGraphResult(base, "vec_id", "embedding",
-      m = 16, planes = planesB, dim = Dim, refineRounds = 1)
-    val appended = GraphAnn.nswAppend(g, base, delta, "vec_id",
-      "embedding", m = 16, dim = Dim, beamWidth = 8, searchRounds = 3)
-    g.release()
-    val out = GraphAnn.nswSearchOn(emb.filter(col("vec_id") < 10),
-      appended, emb, "vec_id", "embedding", k = 5, beamWidth = 8,
-      searchRounds = 3)
-    appended.release()
-    out.rows.orderBy("qid", "rank")
-  }
-
-  /** Base graph + append + COMPACT + serve — the q238 body. */
-  private def nswCompactServe(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val emb = Tables.t(s, d, "embeddings")
-    val base = emb.filter(col("vec_id") < 400)
-    val delta = emb.filter(col("vec_id") >= 400)
-    val planesB = Similarity.adaptivePlanes(base.count(), targetBucket = 64)
-    val g = GraphAnn.nswGraphResult(base, "vec_id", "embedding",
-      m = 16, planes = planesB, dim = Dim, refineRounds = 1)
-    val appended = GraphAnn.nswAppend(g, base, delta, "vec_id",
-      "embedding", m = 16, dim = Dim, beamWidth = 8, searchRounds = 3)
-    g.release()
-    val compacted = appended.compact()
-    appended.release() // compacted storage is independent by contract
-    val out = GraphAnn.nswSearchOn(emb.filter(col("vec_id") < 10),
-      compacted, emb, "vec_id", "embedding", k = 5, beamWidth = 8,
-      searchRounds = 3)
-    compacted.release()
-    out.rows.orderBy("qid", "rank")
-  }
-
-  /** The q247 body: night-0 build → save → load → append → compact →
-    * save → load → serve. */
-  private def nswChainServe(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val emb = Tables.t(s, d, "embeddings")
-    val base = emb.filter(col("vec_id") < 400)
-    val delta = emb.filter(col("vec_id") >= 400)
-    val planesB = Similarity.adaptivePlanes(base.count(), targetBucket = 64)
-    val night0 = tempDir("nswchain", d) + "/n0"
-    val night1 = tempDir("nswchain", d) + "/n1"
-    val built = GraphAnn.nswGraphResult(base, "vec_id", "embedding",
-      m = 16, planes = planesB, dim = Dim, refineRounds = 1)
-    built.save(night0)
-    built.release()
-    val loaded = NswGraph.load(s, night0)
-    val appended = GraphAnn.nswAppend(loaded, base, delta, "vec_id",
-      "embedding", m = 16, dim = Dim, beamWidth = 8, searchRounds = 3)
-    loaded.release()
-    val compacted = appended.compact()
-    appended.release() // compacted storage is independent by contract
-    compacted.save(night1)
-    compacted.release()
-    val serving = NswGraph.load(s, night1)
-    val out = GraphAnn.nswSearchOn(emb.filter(col("vec_id") < 10),
-      serving, emb, "vec_id", "embedding", k = 5, beamWidth = 8,
-      searchRounds = 3)
-    serving.release()
-    out.rows.orderBy("qid", "rank")
-  }
-
   /** A bounded result (k·|queries| rows, a keep list), collected and
     * rebuilt as a local frame so it outlives the handle that served it:
     * nothing snapshot- or artifact-backed may stay lazy past release()
@@ -3417,7 +3285,8 @@ object SimilarityOps {
     _.delete(emb.filter(col("vec_id") % 10 === 3), "vec_id")
 
   /** The ONE lifecycle body (q187/q205/q216/q219 for IVF-ADC,
-    * q254–q256/q258/q298/q299 for the coded families): run `steps` over
+    * q254–q256/q258/q298/q299 for the coded families, q226/q232/q233/
+    * q238/q247 for NSW): run `steps` over
     * the freshly built `first` handle — each step returns a NEW handle
     * with independent storage, and the superseded one is released as
     * soon as its successor exists — then serve the 10 query vectors from
@@ -3478,14 +3347,38 @@ object SimilarityOps {
   private def ivfCached(emb: DataFrame, d: String): IvfAdcIndex =
     IvfAdcIndex.buildCached(emb, d, "vec_id", "embedding", nlist = 8,
       trainRounds = 2, m = 16, ksub = 8, dim = Dim, pqTrainRounds = 2)
-  // the NSW serving point every cached-graph gate shares: planes sized
-  // to the corpus for ~64-vector buckets
-  private def nswCached(corpus: DataFrame, d: String): NswGraph =
-    GraphAnn.nswGraphCached(corpus, d, "vec_id", "embedding", m = 16,
-      planes = Similarity.adaptivePlanes(corpus.count(), targetBucket = 64),
-      dim = Dim, refineRounds = 1)
   private def ivfQuery(idx: IvfAdcIndex, queries: DataFrame): DataFrame =
     idx.query(queries, k = 5, candidates = 50, nprobe = 2)
+  private def ivfRows(idx: IvfAdcIndex, queries: DataFrame): Array[Row] =
+    ivfQuery(idx, queries).collect()
+
+  // the NSW serving point every graph gate shares. Occupancy-scaled seed
+  // planes (the q83 rule at targetBucket=64): a FIXED plane count makes
+  // the bucket self-join quadratic in the corpus — measured 13.9× wall at
+  // a 10× probe before this; the oracle derives the identical count from
+  // its own count(*) CTE
+  private def nswPlanes(corpus: DataFrame): Int =
+    Similarity.adaptivePlanes(corpus.count(), targetBucket = 64)
+  private def nswBuild(corpus: DataFrame): NswGraph =
+    GraphAnn.nswGraphResult(corpus, "vec_id", "embedding", m = 16,
+      planes = nswPlanes(corpus), dim = Dim, refineRounds = 1)
+  private def nswCached(corpus: DataFrame, d: String): NswGraph =
+    GraphAnn.nswGraphCached(corpus, d, "vec_id", "embedding", m = 16,
+      planes = nswPlanes(corpus), dim = Dim, refineRounds = 1)
+  private def nswLoad(s: org.apache.spark.sql.SparkSession,
+      corpus: DataFrame): String => NswGraph =
+    NswGraph.load(s, _, corpus, "vec_id", "embedding", m = 16, dim = Dim)
+  private def nswQuery(g: NswGraph, queries: DataFrame): DataFrame =
+    g.query(queries, k = 5, beamWidth = 8, searchRounds = 3)
+  private def nswRows(g: NswGraph, queries: DataFrame): Array[Row] =
+    nswQuery(g, queries).collect()
+  /** The q236/q241 filtered serve: the 10 query vectors, only ids with
+    * vec_id % 5 = 1 admissible. */
+  private def nswFiltered(g: NswGraph, emb: DataFrame): DataFrame =
+    g.queryFiltered(emb.filter(col("vec_id") < 10),
+        emb.filter(col("vec_id") % 5 === 1).select("vec_id"), k = 5,
+        beamWidth = 8, searchRounds = 3)
+      .orderBy("qid", "rank")
 
   /** A coded family as the gates drive it over (vec_id, embedding): a
     * fresh build and the memoized build of a corpus. */
@@ -3862,8 +3755,8 @@ object SimilarityOps {
     (Seq(init) ++ hops).mkString(",\n")
   }
 
-  /** Filtered NSW search CTE chain (the q236 replay of [[GraphAnn
-    * .nswSearchFilteredOn]]): allowed-only visited pool, hubs from the
+  /** Filtered NSW search CTE chain (the q236 replay of [[NswGraph
+    * .queryFiltered]]): allowed-only visited pool, hubs from the
     * smallest ALLOWED ids, and per round the two expansion arms — direct
     * allowed out-neighbors plus the bridge through disallowed 1-hop
     * nodes to their allowed out-neighbors. `allowPred` is a predicate
@@ -3906,8 +3799,8 @@ object SimilarityOps {
     (Seq(init) ++ hops).mkString(",\n")
   }
 
-  /** DuckDB replay of build-over-everything + [[GraphAnn
-    * .nswSearchFilteredOn]] (q236): graph CTEs over the full corpus,
+  /** DuckDB replay of build-over-everything + [[NswGraph
+    * .queryFiltered]] (q236): graph CTEs over the full corpus,
     * filtered search CTEs, final cut. */
   private def nswFilteredOracleSql(m: Int, targetBucket: Int,
       refineRounds: Int, beamWidth: Int, searchRounds: Int, k: Int,
@@ -3926,8 +3819,8 @@ object SimilarityOps {
        |  FROM ${y}sv$searchRounds WHERE nid <> qid) t
        |WHERE rank <= $k ORDER BY qid, rank""".stripMargin
 
-  /** DuckDB replay of [[GraphAnn.nswGraphResult]] + [[GraphAnn
-    * .nswSearchOn]] for the STANDARD gates (q226/q230/q231, and with
+  /** DuckDB replay of [[GraphAnn.nswGraphResult]] + [[NswGraph
+    * .query]] for the STANDARD gates (q226/q230/q231, and with
     * `delPred`, q232): graph CTEs + vec_id<10 search CTEs + final cut,
     * assembled from the prefixed fragments the q233 append replay also
     * composes. Reads the [[PreparedCte]] `e`/`n` frames. */

@@ -1,7 +1,5 @@
 package graft.osm
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point for the OSM ETL — the Spark-native equivalent of running
   * `python amsterdam_map_data_wrangling.py` (EP1, SURVEY.md §3).
   *
@@ -18,14 +16,7 @@ object OsmEtlMain {
   }
 
   private def run(osmPath: String, outDir: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-osm-etl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local().appName("graft-osm-etl").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     OsmIngest.runEtl(spark, osmPath, outDir)

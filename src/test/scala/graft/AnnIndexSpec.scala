@@ -21,6 +21,14 @@ class AnnIndexSpec extends SparkTestBase {
     nlist = 8, trainRounds = 2, m = 16, ksub = 8, dim = 64,
     pqTrainRounds = 2)
 
+  // the q190 maintenance loop's index: build over a corpus, serve the
+  // canary sample
+  private def ivfBuild(corpus: org.apache.spark.sql.DataFrame) =
+    IvfAdcIndex.build(corpus, "vec_id", "embedding", nlist = 8,
+      trainRounds = 2, m = 16, ksub = 8, dim = 64, pqTrainRounds = 2)
+  private def ivfRows(i: IvfAdcIndex, qs: org.apache.spark.sql.DataFrame) =
+    i.query(qs, k = 5, candidates = 50, nprobe = 2).collect()
+
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.select("qid", "nid", "d2", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
@@ -357,8 +365,7 @@ class AnnIndexSpec extends SparkTestBase {
     val stage = TempDirs.create("graft-annmaint-spec").toString
     val (served, recalls) = AnnMaintenance.streamMaintain(base, delta,
       stage, groups = 3, qs, "vec_id", "embedding", k = 5,
-      candidates = 50, nprobe = 2, nlist = 8, trainRounds = 2, m = 16,
-      ksub = 8, dim = 64, pqTrainRounds = 2, minRecallPct = 80)
+      minRecallPct = 80)(ivfBuild, ivfRows)
     // the monitoring trail: one genuine verdict per staged micro-batch
     assert(recalls.length === 3, s"expected 3 per-batch verdicts: $recalls")
     assert(recalls.forall(r => r >= 0.0 && r <= 1.0), recalls.toString)
@@ -367,9 +374,8 @@ class AnnIndexSpec extends SparkTestBase {
     assert(got.nonEmpty && got.forall(_.getAs[Boolean]("retrained")))
     // stream-maintained ≡ one-shot maintained (the q190 body), row for row
     val oneShot = AnnMaintenance.appendServeWithCanary(base, delta, qs,
-      "vec_id", "embedding", k = 5, candidates = 50, nprobe = 2,
-      nlist = 8, trainRounds = 2, m = 16, ksub = 8, dim = 64,
-      pqTrainRounds = 2, minRecallPct = 80).collect()
+      "vec_id", "embedding", k = 5, minRecallPct = 80)(ivfBuild, ivfRows)
+      .collect()
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3),
         r.getDouble(4), r.getBoolean(5))
@@ -396,8 +402,7 @@ class AnnIndexSpec extends SparkTestBase {
     def run(delta: org.apache.spark.sql.DataFrame, pct: Int) =
       AnnMaintenance.appendServeWithCanary(base, delta,
         canary(base.union(delta)), "vec_id", "embedding", k = 5,
-        candidates = 50, nprobe = 2, nlist = 8, trainRounds = 2, m = 16,
-        ksub = 8, dim = 64, pqTrainRounds = 2, minRecallPct = pct)
+        minRecallPct = pct)(ivfBuild, ivfRows)
     // no drift, permissive threshold: the cheap append path serves
     val clean = run(cleanDelta, 50).collect()
     assert(clean.nonEmpty && clean.forall(!_.getAs[Boolean]("retrained")))
@@ -414,6 +419,14 @@ class AnnIndexSpec extends SparkTestBase {
     // every query in the sample is answered with a full top-5
     assert(drifted.map(_.getAs[Double]("mean_recall")).distinct.length === 1)
     assert(drifted.groupBy(_.getAs[Long]("qid")).forall(_._2.length == 5))
+    // an empty query sample has no gold to judge recall by: refused,
+    // not served as an empty frame with a NaN recall
+    val ex = intercept[IllegalArgumentException] {
+      AnnMaintenance.appendServeWithCanary(base, cleanDelta,
+        base.filter(col("vec_id") < 0), "vec_id", "embedding", k = 5,
+        minRecallPct = 50)(ivfBuild, ivfRows)
+    }
+    assert(ex.getMessage.contains("empty exact-gold"), ex.getMessage)
     // all intermediate handles released: the loop must not leak index
     // storage beyond whatever was resident before it ran
     assert(spark.sparkContext.getPersistentRDDs.keySet === persistedBefore)

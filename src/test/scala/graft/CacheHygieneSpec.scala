@@ -11,6 +11,11 @@ package graft
   * hazard this gate exists to catch is per-call ACCRETION, which the
   * companion test pins for q185 directly: repeated calls share one
   * memoized index, adding zero storage.
+  *
+  * NSW search results are covered at the RDD level too: every query
+  * whose name contains `nsw`, called warm while its result is held, may
+  * add no persisted RDD — a result frame over an unreleased search
+  * snapshot keeps its blocks for as long as the frame lives.
   */
 class CacheHygieneSpec extends SparkTestBase {
 
@@ -91,5 +96,25 @@ class CacheHygieneSpec extends SparkTestBase {
     val after2 = spark.sparkContext.getPersistentRDDs.keySet
     assert(after2 === after1,
       s"quant-family queries accreted storage: ${after2 -- after1}")
+  }
+
+  test("NSW queries release their search snapshots: a warm call adds no " +
+    "persisted RDD while its result is held") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val nsw = SparkEntry.allQueries.filter(_.name.contains("nsw"))
+    // warm: the memoized graphs are resident by design
+    nsw.foreach(q => q.run(spark, Sf).count())
+    val before = persisted
+    // getPersistentRDDs holds its RDDs weakly, so every result stays
+    // referenced until the census is taken
+    val held = nsw.map { q =>
+      val at = persisted
+      val out = q.run(spark, Sf)
+      out.count()
+      (q.name, persisted -- at, out)
+    }
+    val leaks = held.collect { case (n, added, _) if added.nonEmpty => n }
+    assert(leaks.isEmpty && persisted === before,
+      s"NSW queries left persisted RDDs behind: $leaks")
   }
 }

@@ -55,6 +55,9 @@ class FormatsRobustnessSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft-nswv"); dir.toFile.deleteOnExit()
     val edges = Seq((1L, 2L, 10L), (2L, 1L, 10L), (1L, 3L, 20L))
       .toDF("src", "dst", "d2")
+    // the planted graphs are not built over a corpus: an empty binding
+    def load(path: String) = NswGraph.load(spark, path, spark.emptyDataFrame,
+      "vec_id", "embedding", m = 16, dim = 64)
 
     // v1: a pre-round-12 writer emitted (version) only — documented to
     // stay loadable across sessions, so it must load WITHOUT the
@@ -62,7 +65,7 @@ class FormatsRobustnessSpec extends SparkTestBase {
     edges.write.mode("overwrite").parquet(s"$dir/v1/edges")
     Seq(Tuple1(1)).toDF("version")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/v1/params")
-    val g1 = NswGraph.load(spark, s"$dir/v1")
+    val g1 = load(s"$dir/v1")
     assert(g1.edges.count() === 3L)
     g1.release()
 
@@ -72,7 +75,7 @@ class FormatsRobustnessSpec extends SparkTestBase {
     Seq((2, 99L)).toDF("version", "n_edges")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/torn/params")
     val exTorn = intercept[IllegalArgumentException] {
-      NswGraph.load(spark, s"$dir/torn")
+      load(s"$dir/torn")
     }
     assert(exTorn.getMessage.contains("torn"),
       s"wrong failure for a torn artifact: ${exTorn.getMessage}")
@@ -84,7 +87,7 @@ class FormatsRobustnessSpec extends SparkTestBase {
     Seq((1, 99L)).toDF("version", "n_edges")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/tornv1/params")
     val exTorn1 = intercept[IllegalArgumentException] {
-      NswGraph.load(spark, s"$dir/tornv1")
+      load(s"$dir/tornv1")
     }
     assert(exTorn1.getMessage.contains("torn"),
       s"wrong failure for a torn v1-with-count artifact: ${exTorn1.getMessage}")
@@ -95,7 +98,7 @@ class FormatsRobustnessSpec extends SparkTestBase {
     Seq((9, 3L)).toDF("version", "n_edges")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/v9/params")
     val exV = intercept[IllegalArgumentException] {
-      NswGraph.load(spark, s"$dir/v9")
+      load(s"$dir/v9")
     }
     assert(exV.getMessage.contains("version"),
       s"wrong failure for a v9 artifact: ${exV.getMessage}")

@@ -10,6 +10,12 @@ class VectorSpec extends SparkTestBase {
 
   private lazy val emb = Tables.t(spark, Sf, "embeddings").cache()
 
+  /** The q226 graph over `corpus`: occupancy-scaled planes, m = 16. */
+  private def nswBuild(corpus: org.apache.spark.sql.DataFrame) =
+    graft.operators.GraphAnn.nswGraphResult(corpus, "vec_id", "embedding",
+      m = 16, planes = Similarity.adaptivePlanes(corpus.count(), 64),
+      dim = 64, refineRounds = 1)
+
   test("LongArrayDot codegen == declarative zip_with/aggregate on real data") {
     val q = emb.select(col("vec_id"), VectorFunctions.quantize(col("embedding")).as("q"))
     val both = q.as("a").join(q.as("b"), col("a.vec_id") < col("b.vec_id"))
@@ -502,11 +508,12 @@ class VectorSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // the q226 operating point: measured 190 distinct visited candidates
     // per query (probe: run with k=1e6 so the output IS the visited pool)
-    val nsw = GraphAnn.nswSearch(queries, emb, "vec_id", "embedding",
-        k = 5, m = 16, planes = 3, dim = 64, refineRounds = 1,
-        beamWidth = 8, searchRounds = 3)
+    val g = GraphAnn.nswGraphResult(emb, "vec_id", "embedding",
+      m = 16, planes = 3, dim = 64, refineRounds = 1)
+    val nsw = g.query(queries, k = 5, beamWidth = 8, searchRounds = 3)
       .select("qid", "nid").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
+    g.release()
     // IVF at nprobe=3 of nlist=8 scans ~3n/8 ≈ 187 candidates — the same
     // budget as the beam's measured visited pool
     val ivf = Similarity.ivfKnn(queries, emb, "vec_id", "embedding",
@@ -530,11 +537,9 @@ class VectorSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val g = GraphAnn.nswGraphResult(emb, "vec_id", "embedding",
       m = 16, planes = 3, dim = 64, refineRounds = 1)
-    val out = GraphAnn.nswSearchFilteredOn(queries, g, emb,
-      allowed.select("vec_id"), "vec_id", "embedding", k = 5,
-      beamWidth = 8, searchRounds = 3)
-    val got = out.rows.collect().map(r => (r.getLong(0), r.getLong(1)))
-    out.release()
+    val got = g.queryFiltered(queries, allowed.select("vec_id"), k = 5,
+        beamWidth = 8, searchRounds = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
     // the contract: nothing disallowed is ever returned
     got.foreach { case (_, nid) =>
       assert(nid % 5 === 1L, s"disallowed id $nid returned") }
@@ -542,12 +547,10 @@ class VectorSpec extends SparkTestBase {
     // the gap the filtered walk exists to close: post-filtering the
     // UNFILTERED top-k starves recall (≈1 allowed row in a k=5 cut
     // under a 20% predicate)
-    val post = GraphAnn.nswSearchOn(queries, g, emb, "vec_id", "embedding",
-      k = 5, beamWidth = 8, searchRounds = 3)
-    val rPost = (post.rows.collect()
+    val post = g.query(queries, k = 5, beamWidth = 8, searchRounds = 3)
+    val rPost = (post.collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .filter(_._2 % 5 == 1L).toSet & gold).size.toDouble / gold.size
-    post.release()
     g.release()
     info(s"filtered-walk recall@5 = $rFiltered, post-filter recall = $rPost")
     assert(rFiltered > rPost,
@@ -567,9 +570,8 @@ class VectorSpec extends SparkTestBase {
     val disjoint = emb.select((col("vec_id") + 1000000L).as("vec_id"))
     val cachedBefore = spark.sparkContext.getPersistentRDDs.size
     val ex = intercept[IllegalArgumentException] {
-      GraphAnn.nswSearchFilteredOn(emb.filter(col("vec_id") < 3), g, emb,
-        disjoint, "vec_id", "embedding", k = 5, beamWidth = 8,
-        searchRounds = 2)
+      g.queryFiltered(emb.filter(col("vec_id") < 3), disjoint, k = 5,
+        beamWidth = 8, searchRounds = 2)
     }
     // the designed failure must not leak its persisted corpus frame
     // (round-13 advice): cached-RDD census back to the pre-call level
@@ -662,7 +664,10 @@ class VectorSpec extends SparkTestBase {
       .write.mode("overwrite").parquet(s"$dir/edges")
     Seq((2, 9L)).toDF("version", "n_edges")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
-    val g = NswGraph.load(spark, dir.toString)
+    // the planted graph is not built over a corpus: an empty binding
+    def load(path: String) = NswGraph.load(spark, path, emb.limit(0),
+      "vec_id", "embedding", m = 16, dim = 64)
+    val g = load(dir.toString)
     val rows = GraphAnn.nswStats(g).orderBy("out_degree").collect()
     g.release()
     assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq ===
@@ -677,7 +682,7 @@ class VectorSpec extends SparkTestBase {
       .write.mode("overwrite").parquet(s"$dir/empty/edges")
     Seq((2, 0L)).toDF("version", "n_edges")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/empty/params")
-    val ge = NswGraph.load(spark, s"$dir/empty")
+    val ge = load(s"$dir/empty")
     val ex = intercept[IllegalArgumentException] { GraphAnn.nswStats(ge) }
     ge.release()
     assert(ex.getMessage.contains("empty graph"))
@@ -711,19 +716,19 @@ class VectorSpec extends SparkTestBase {
     import graft.operators.GraphAnn
     val g = GraphAnn.nswGraphResult(emb, "vec_id", "embedding",
       m = 16, planes = 3, dim = 64, refineRounds = 1)
-    val b1 = GraphAnn.nswSearchOn(emb.filter(col("vec_id") < 5), g, emb,
-      "vec_id", "embedding", k = 5, beamWidth = 8, searchRounds = 3)
-    val b2 = GraphAnn.nswSearchOn(
-      emb.filter(col("vec_id") >= 5 && col("vec_id") < 10), g, emb,
-      "vec_id", "embedding", k = 5, beamWidth = 8, searchRounds = 3)
-    val both = (b1.rows.collect() ++ b2.rows.collect())
+    val b1 = g.query(emb.filter(col("vec_id") < 5), k = 5, beamWidth = 8,
+      searchRounds = 3)
+    val b2 = g.query(emb.filter(col("vec_id") >= 5 && col("vec_id") < 10),
+      k = 5, beamWidth = 8, searchRounds = 3)
+    val both = (b1.collect() ++ b2.collect())
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    b1.release(); b2.release()
     g.release()
-    val oneShot = GraphAnn.nswSearch(emb.filter(col("vec_id") < 10), emb,
-        "vec_id", "embedding", k = 5, m = 16, planes = 3, dim = 64,
-        refineRounds = 1, beamWidth = 8, searchRounds = 3)
+    val fresh = GraphAnn.nswGraphResult(emb, "vec_id", "embedding",
+      m = 16, planes = 3, dim = 64, refineRounds = 1)
+    val oneShot = fresh.query(emb.filter(col("vec_id") < 10), k = 5,
+        beamWidth = 8, searchRounds = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+    fresh.release()
     assert(both === oneShot,
       "batched serving from one handle differs from the one-shot search")
   }
@@ -739,19 +744,16 @@ class VectorSpec extends SparkTestBase {
     val g = GraphAnn.nswGraphResult(base, "vec_id", "embedding",
       m = 16, planes = Similarity.adaptivePlanes(400, 64), dim = 64,
       refineRounds = 1)
-    val appended = GraphAnn.nswAppend(g, base, delta, "vec_id", "embedding",
-      m = 16, dim = 64, beamWidth = 8, searchRounds = 3)
+    val appended = g.append(delta)
     g.release()
-    val servedApp = GraphAnn.nswSearchOn(queries, appended, emb, "vec_id",
-        "embedding", k = 5, beamWidth = 8, searchRounds = 3)
-    val app = servedApp.rows.collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    servedApp.release(); appended.release()
-    val rebuilt = GraphAnn.nswSearch(queries, emb, "vec_id", "embedding",
-        k = 5, m = 16, planes = Similarity.adaptivePlanes(emb.count(), 64),
-        dim = 64, refineRounds = 1, beamWidth = 8, searchRounds = 3)
+    val app = appended.query(queries, k = 5, beamWidth = 8, searchRounds = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    appended.release()
+    val full = nswBuild(emb)
+    val rebuilt = full.query(queries, k = 5, beamWidth = 8, searchRounds = 3)
       .select("qid", "nid").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
+    full.release()
     val rApp = (app & gold).size.toDouble / gold.size
     val rReb = (rebuilt & gold).size.toDouble / gold.size
     // the insert path's edges come from a bounded search + an unrefined
@@ -763,25 +765,35 @@ class VectorSpec extends SparkTestBase {
   }
 
   test("NSW maintenance: a tripped canary rebuilds and serves the rebuilt graph") {
-    import graft.operators.GraphAnn
+    import graft.operators.{AnnMaintenance, NswGraph}
     // the q234 oracle gates the pass branch; this gates the DECISION —
     // minRecallPct=100 must trip (appended recall < 1.0 on this fixture)
     // and the served rows must equal the full rebuild's serve
     val base = emb.filter(col("vec_id") < 400)
     val delta = emb.filter(col("vec_id") >= 400)
     val queries = emb.filter(col("vec_id") < 10)
-    val served = GraphAnn.appendServeWithCanary(base, delta, queries,
-      "vec_id", "embedding", k = 5, m = 16, dim = 64, beamWidth = 8,
-      searchRounds = 3, minRecallPct = 100)
-    val rows = served.collect()
+    def serve(g: NswGraph, q: org.apache.spark.sql.DataFrame) =
+      g.query(q, k = 5, beamWidth = 8, searchRounds = 3).collect()
+    def maintain(qs: org.apache.spark.sql.DataFrame) =
+      AnnMaintenance.appendServeWithCanary(base, delta, qs, "vec_id",
+        "embedding", k = 5, minRecallPct = 100)(nswBuild, serve)
+    val rows = maintain(queries).collect()
     assert(rows.nonEmpty && rows.forall(_.getBoolean(5)),
       "minRecallPct=100 did not trip the canary")
     val got = rows.map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    val rebuilt = GraphAnn.nswSearch(queries, emb, "vec_id", "embedding",
-        k = 5, m = 16, planes = Similarity.adaptivePlanes(emb.count(), 64),
-        dim = 64, refineRounds = 1, beamWidth = 8, searchRounds = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+    val full = nswBuild(emb)
+    val rebuilt = serve(full, queries)
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+    full.release()
     assert(got === rebuilt, "tripped-canary serve differs from the full rebuild")
+    // an empty query sample has no gold to judge recall by: refused,
+    // with every graph the loop built released
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val ex = intercept[IllegalArgumentException] {
+      maintain(emb.filter(col("vec_id") < 0))
+    }
+    assert(ex.getMessage.contains("empty exact-gold"), ex.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === persistedBefore)
   }
 
   test("MIPS ADC serving: the persisted artifact is metric-free — a loaded " +
