@@ -1,6 +1,7 @@
 package graft.osm
 
 import graft.functions.Cleaners
+import graft.operators.Graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,8 +17,9 @@ import org.apache.spark.sql.types._
   * whose `<` byte lies inside it, so each element is read once. Projection
   * and cleaning are codegen'd expressions, and the child lists flatten with
   * explode/posexplode (G1/G2). The whole pipeline is narrow — no shuffle —
-  * so it scales linearly with input splits. `runEtl` caches the one scan
-  * and feeds all five sinks from it.
+  * so it scales linearly with input splits. `runEtl` runs ONE Spark job:
+  * task i parses split i once, keeps its rows as RDD blocks the pass owns
+  * and writes split i's part file of all five tables (`OsmCsv.writeTables`).
   *
   * Why not Spark's built-in XML source: on Spark 4.1 its `multiLine`
   * option defaults to true, which reads each file in ONE task, and it
@@ -93,20 +95,18 @@ object OsmIngest {
     * PROBLEMCHARS rule (py:33 vs py:88 — SURVEY.md §2.3). Default false =
     * the reference's ACTUAL behavior (nothing dropped). */
   def nodeTags(raw: DataFrame, dropProblemTags: Boolean): DataFrame = {
-    val exploded0 = raw
-      .select(tc("_id", "BIGINT").as("id"), explode(col("tag")).as("t"))
-      .select(col("id"), col("t._k").as("k"), col("t._v").as("v"))
-    val exploded =
-      if (dropProblemTags) exploded0.filter(!Cleaners.hasProblemChars(col("k")))
-      else exploded0
-    exploded
-      .withColumn("key", Cleaners.keyTail(col("k")))
-      .withColumn("type", Cleaners.keyType(col("k")))
-      .withColumn("value",
-        when(col("key") === "postcode", Cleaners.nlPostcode(col("v")))
-          .when(col("k") === "phone", Cleaners.nlPhone(col("v")))
-          .otherwise(col("v")))
-      .select("id", "key", "value", "type")
+    val exploded = raw.select(tc("_id", "BIGINT").as("id"), explode(col("tag")).as("t"))
+    val (k, v) = (col("t._k"), col("t._v"))
+    val key = Cleaners.keyTail(k)
+    // one select: every DataFrame step re-analyzes the plan on the driver
+    (if (dropProblemTags) exploded.filter(!Cleaners.hasProblemChars(k)) else exploded)
+      .select(
+        col("id"),
+        key.as("key"),
+        when(key === "postcode", Cleaners.nlPostcode(v))
+          .when(k === "phone", Cleaners.nlPhone(v))
+          .otherwise(v).as("value"),
+        Cleaners.keyType(k).as("type"))
   }
 
   /** P2: way attribute projection (py:150–151). */
@@ -144,28 +144,20 @@ object OsmIngest {
     wayNodes(waysRaw).createOrReplaceTempView("way_nodes")
   }
 
-  /** The full ETL (EP1, py:206–236): one XML pass, 5 CSV sinks.
-    * Equivalent of process_map; each output is an independent narrow job. */
+  /** The full ETL (EP1, py:206–236): one XML pass, 5 CSV tables, the
+    * equivalent of process_map. ONE Spark job with one task per split:
+    * task i parses split i once into RDD-level storage this call alone
+    * owns (never a CacheManager entry) and writes split i's part file of
+    * every table from it. The five tables are published together or not
+    * at all (`OsmCsv.writeTables`); the rows are released either way. */
   def runEtl(spark: SparkSession, osmPath: String, outDir: String): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val raw = readOsm(spark, osmPath).cache()
+    val (raw, rows) = Graph.persistOwned(readOsm(spark, osmPath))
     try {
       val n = ofKind(raw, "node", nodeReadSchema)
       val w = ofKind(raw, "way", wayReadSchema)
-      // Submit all five sink jobs concurrently: the scheduler overlaps the
-      // scan with the per-table writes, and the cached scan is computed
-      // once (RDD cache locks per partition). Every sink is waited for, so
-      // none is still writing when a failure is rethrown.
-      val jobs = Seq(
-        Future(OsmCsv.write(nodes(n), s"$outDir/nodes", "nodes")),
-        Future(OsmCsv.write(nodeTags(n), s"$outDir/node_tags", "node_tags")),
-        Future(OsmCsv.write(ways(w), s"$outDir/ways", "ways")),
-        Future(OsmCsv.write(wayTags(w), s"$outDir/way_tags", "way_tags")),
-        Future(OsmCsv.write(wayNodes(w), s"$outDir/way_nodes", "way_nodes")))
-      val failures = jobs.flatMap(j => Await.ready(j, Duration.Inf).value.get.failed.toOption)
-      failures.headOption.foreach { e => failures.tail.foreach(e.addSuppressed); throw e }
-    } finally raw.unpersist()
+      OsmCsv.writeTables(spark, outDir, Seq(
+        "nodes" -> nodes(n), "node_tags" -> nodeTags(n), "ways" -> ways(w),
+        "way_tags" -> wayTags(w), "way_nodes" -> wayNodes(w)))
+    } finally rows.unpersist()
   }
 }

@@ -21,6 +21,11 @@ object ColumnBridge {
     * between a stopped session and its successor). */
   def sessionUUID(spark: SparkSession): String =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+  /** The session's Hadoop conf (`SessionState` is `private[sql]`): the
+    * SparkContext's conf plus the session's SQL settings, as Spark's own
+    * file writers start from. */
+  def newHadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
 }
 
 /** Bridge for constructing a DataFrame from a raw (already-resolved)
