@@ -48,14 +48,14 @@ object Graph {
     (InternalRowBridge.ofInternalRows(df.sparkSession, rdd, df.schema), rdd)
   }
 
-  /** Persist a frame's rows (a built index's table, an ETL pass's parsed
-    * splits) into storage the caller alone owns: an RDD-level persist of
+  /** Persist a frame's rows (a built index's table) into storage the
+    * caller alone owns: an RDD-level persist of
     * the rows, never a CacheManager entry — two builds with identical
     * plans would share one, and releasing either would uncache both.
     * Lineage is kept (unlike [[snapshot]]), so a lost block, or a lazy
     * frame read after [[release]], recomputes. Returns the flat frame over
     * the rows and the handle [[release]] frees. */
-  private[graft] def persistOwned(df: DataFrame): (DataFrame, RDD[_]) = {
+  private[operators] def persistOwned(df: DataFrame): (DataFrame, RDD[_]) = {
     import org.apache.spark.sql.graftbridge.InternalRowBridge
     val rdd = InternalRowBridge.toRdd(df).map(_.copy())
       .persist(StorageLevel.MEMORY_AND_DISK)

@@ -1,25 +1,34 @@
 package graft.osm
 
 import graft.functions.Cleaners
-import graft.operators.Graph
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.atomic.AtomicReference
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, classic}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{DataSource, FilePartition, HadoopFsRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** OSM XML → 5 normalized tables, Spark-first (SURVEY.md §2.1 S1/S2, §2.4).
   *
   * The reference stream-parses with iterparse, one pass, one element at a
-  * time (py:179–186). Here `OsmXml`, the engine's splittable OSM reader,
-  * makes the same single pass in as many tasks as Spark's file-split sizing
-  * gives (`spark.sql.files.maxPartitionBytes`/`openCostInBytes`): one row
-  * per `<node>` or `<way>` with a `kind` column, the 8 attributes as
-  * strings and the `<tag>`/`<nd>` child lists. A split owns every element
-  * whose `<` byte lies inside it, so each element is read once. Projection
-  * and cleaning are codegen'd expressions, and the child lists flatten with
-  * explode/posexplode (G1/G2). The whole pipeline is narrow — no shuffle —
-  * so it scales linearly with input splits. `runEtl` runs ONE Spark job:
-  * task i parses split i once, keeps its rows as RDD blocks the pass owns
-  * and writes split i's part file of all five tables (`OsmCsv.writeTables`).
+  * time (py:179–186), each element shaped and written as it is parsed.
+  * `runEtl` is the same loop, run in parallel splits. `OsmXml`, the
+  * engine's splittable OSM reader, makes one row per `<node>` or `<way>`
+  * with a `kind` column, the 8 attributes as strings and the `<tag>`/`<nd>`
+  * child lists. A split owns every element whose `<` byte lies inside it,
+  * so each element is read once and any split size is correct. `runEtl`
+  * sizes the splits itself (`splits`): one per core, at most
+  * `spark.sql.files.maxPartitionBytes`. It runs ONE Spark job and plans no
+  * query: task i parses split i and pushes each row through the five
+  * shapers below into split i's part file of every table
+  * (`OsmCsv.writeTables`). No row is stored. The shapers are Column code:
+  * codegen'd projections and cleaners, and explode/posexplode for the child
+  * lists (G1/G2). They are bound row operators in `runEtl` (`Shaper`) and
+  * ordinary frames everywhere else. The pipeline is narrow — no shuffle —
+  * so it scales linearly with input splits.
   *
   * Why not Spark's built-in XML source: on Spark 4.1 its `multiLine`
   * option defaults to true, which reads each file in ONE task, and it
@@ -144,20 +153,58 @@ object OsmIngest {
     wayNodes(waysRaw).createOrReplaceTempView("way_nodes")
   }
 
+  /** The splits of one `runEtl` pass over `path` (a file, a directory or a
+    * glob, as `readOsm` takes): one per core, of
+    * min(`spark.sql.files.maxPartitionBytes`, ⌈input bytes / default
+    * parallelism⌉) bytes each, packed as Spark packs a scan's splits. A
+    * compressed file is one split (`OsmXml.isSplitable`). */
+  private[graft] def splits(spark: SparkSession, path: String): Seq[FilePartition] = {
+    // the relation `readOsm` resolves, without analyzing a plan over it
+    val rel = DataSource(spark.asInstanceOf[classic.SparkSession], classOf[OsmXml].getName,
+      paths = Seq(path), userSpecifiedSchema = Some(OsmXml.schema))
+      .resolveRelation().asInstanceOf[HadoopFsRelation]
+    val files = rel.location.listFiles(Nil, Nil).flatMap(_.files)
+    val cores = spark.sparkContext.defaultParallelism
+    val size = math.max(1L, math.min(
+      JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes")),
+      (files.map(_.getLen).sum + cores - 1) / cores))
+    FilePartition.getFilePartitions(spark, files.flatMap(f => PartitionedFileUtil.splitFiles(
+      f, f.getPath, rel.fileFormat.isSplitable(spark, rel.options, f.getPath), size,
+      InternalRow.empty)), size)
+  }
+
   /** The full ETL (EP1, py:206–236): one XML pass, 5 CSV tables, the
-    * equivalent of process_map. ONE Spark job with one task per split:
-    * task i parses split i once into RDD-level storage this call alone
-    * owns (never a CacheManager entry) and writes split i's part file of
-    * every table from it. The five tables are published together or not
-    * at all (`OsmCsv.writeTables`); the rows are released either way. */
-  def runEtl(spark: SparkSession, osmPath: String, outDir: String): Unit = {
-    val (raw, rows) = Graph.persistOwned(readOsm(spark, osmPath))
-    try {
-      val n = ofKind(raw, "node", nodeReadSchema)
-      val w = ofKind(raw, "way", wayReadSchema)
-      OsmCsv.writeTables(spark, outDir, Seq(
-        "nodes" -> nodes(n), "node_tags" -> nodeTags(n), "ways" -> ways(w),
-        "way_tags" -> wayTags(w), "way_nodes" -> wayNodes(w)))
-    } finally rows.unpersist()
+    * equivalent of process_map. ONE Spark job with one task per split
+    * (`splits`): task i parses split i once and streams each element
+    * through the five shapers into split i's part file of every table. The
+    * shapers are bound from their Column code without query planning
+    * (`Shaper`), and the five tables are published together or not at all
+    * (`OsmCsv.writeTables`). */
+  def runEtl(spark: SparkSession, osmPath: String, outDir: String): Unit =
+    OsmCsv.writeTables(spark, outDir, splits(spark, osmPath), shapers(spark))
+
+  /** The five tables' shapers of the last session and SQL conf they were
+    * bound for. Binding analyzes a dozen plans before the first task can
+    * start: over the 9 MB perfbench extract on 4 vCPUs, a pass that binds
+    * starts its first task ~85 ms in, one that reuses the shapers ~30 ms
+    * in. The analysis depends on the conf: the session time zone
+    * enters the timestamp casts, ANSI mode the arithmetic. A pass in
+    * another session or under another conf binds anew. */
+  private val bound = new AtomicReference[(Any, Seq[(String, Shaper)])]((null, Nil))
+
+  private def shapers(spark: SparkSession): Seq[(String, Shaper)] = {
+    val key = (ColumnBridge.sessionUUID(spark), spark.conf.getAll)
+    val (k, cached) = bound.get
+    if (k == key) cached
+    else {
+      val none = spark.createDataFrame(java.util.List.of[Row](), OsmXml.schema)
+      val n = ofKind(none, "node", nodeReadSchema)
+      val w = ofKind(none, "way", wayReadSchema)
+      val fresh = Seq("nodes" -> nodes(n), "node_tags" -> nodeTags(n), "ways" -> ways(w),
+        "way_tags" -> wayTags(w), "way_nodes" -> wayNodes(w))
+        .map { case (t, df) => t -> Shaper(OsmCsv.ordered(df, t)) }
+      bound.set((key, fresh))
+      fresh
+    }
   }
 }

@@ -54,3 +54,13 @@ object InternalRowBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
 }
+
+/** Task output metrics for a task that writes through `OutputWriter`s
+  * itself: `OutputMetrics`' setters are `private[spark]`. */
+object TaskMetricsBridge {
+  def setOutput(ctx: org.apache.spark.TaskContext, bytes: Long, records: Long): Unit = {
+    val m = ctx.taskMetrics().outputMetrics
+    m.setBytesWritten(bytes)
+    m.setRecordsWritten(records)
+  }
+}

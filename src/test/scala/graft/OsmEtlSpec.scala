@@ -1,19 +1,26 @@
 package graft
 
-import graft.osm.{OsmCsv, OsmIngest, OsmModel}
-import java.io.File
+import graft.osm.{OsmCsv, OsmIngest, OsmModel, OsmXml, Shaper}
+import java.io.{File, IOException}
 import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.FileSystem
+import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
+import org.apache.spark.TaskContext
+import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
+import org.apache.spark.internal.io.HadoopMapReduceCommitProtocol
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** `OsmIngest.runEtl` as a whole: one job that reads the XML once in
-  * parallel splits and writes all five tables, the same bytes as a
-  * per-table `OsmCsv.write`, published all together or not at all. */
+  * parallel splits, one per core, and writes all five tables, the same
+  * bytes as a per-table `OsmCsv.write`, published all together or not at
+  * all, also when a task is retried or the job commit fails. */
 class OsmEtlSpec extends SparkTestBase {
 
   private def fixture = getClass.getResource("/osm/fixture.osm").getPath
@@ -76,7 +83,14 @@ class OsmEtlSpec extends SparkTestBase {
     // an empty file has no splits: both writers give a header-only file
     val empty = new File(dir, "empty.osm")
     assert(empty.createNewFile())
-    for (xml <- Seq(fixture, empty.toString)) {
+    // Both writers must read the same splits to write the same part files.
+    // runEtl sizes its own splits (one per core, at most maxPartitionBytes),
+    // so these settings make Spark's sizing give the fixture runEtl's 16 kB
+    // splits; the last one holds no table's row and writes no file.
+    val keys = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, 16384L))
+    try for (xml <- Seq(fixture, empty.toString)) {
       val etl = new File(dir, s"etl-${new File(xml).getName}")
       OsmIngest.runEtl(spark, xml, etl.toString)
       val n = OsmIngest.readNodesRaw(spark, xml)
@@ -90,11 +104,41 @@ class OsmEtlSpec extends SparkTestBase {
         assert(got.nonEmpty, s"$xml $table")
         assert(got === parts(one), s"$xml $table")
       }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
+  /** The jobs started while `body` runs (job id -> its stages) and the
+    * ends of every task, seen by a SparkListener. */
+  private def jobsOf(body: => Unit): (Map[Int, Seq[Int]], Seq[SparkListenerTaskEnd]) = {
+    val sc = spark.sparkContext
+    val marker = s"osm-etl-marker-${java.util.UUID.randomUUID}"
+    val markerSeen = new CountDownLatch(1)
+    val jobs = mutable.Map[Int, Seq[Int]]()
+    val ends = mutable.Buffer[SparkListenerTaskEnd]()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized { ends += e }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          markerSeen.countDown()
+        else synchronized { jobs(e.jobId) = e.stageIds }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      // one queue delivers events in order: once the marker job's start
+      // arrives, every task of `body` has been counted
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never seen")
+    } finally sc.removeSparkListener(listener)
+    listener.synchronized((jobs.toMap, ends.toSeq))
+  }
+
   test("runEtl reads the XML once, in more than one task") {
-    // ~4 MB of nodes and ways, read in 1 MB splits
+    // ~4 MB of nodes and ways: with no split setting, 4 splits on local[4]
     val dir = Files.createTempDirectory("graft-etl-once").toFile
     dir.deleteOnExit()
     val f = new java.io.File(dir, "big.osm")
@@ -114,62 +158,146 @@ class OsmEtlSpec extends SparkTestBase {
     val size = f.length()
 
     val sc = spark.sparkContext
-    val marker = s"osm-etl-marker-${java.util.UUID.randomUUID}"
-    val markerSeen = new CountDownLatch(1)
-    val inputTasks = mutable.Map[Int, Int]().withDefaultValue(0) // stage -> tasks
-    val jobStages = mutable.Map[Int, Seq[Int]]() // job -> its stages
-    val tasks = mutable.Map[Int, Int]().withDefaultValue(0) // stage -> tasks
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-        tasks(e.stageId) += 1
-        if (Option(e.taskMetrics).exists(_.inputMetrics.bytesRead > 0)) inputTasks(e.stageId) += 1
-      }
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
-          markerSeen.countDown()
-        else synchronized { jobStages(e.jobId) = e.stageIds }
-    }
     // Bytes read from the file come from Hadoop's file-system counters, not
     // the tasks' input bytes: Spark adds a cached block's size to the input
-    // bytes of every task that reads it, so the four sinks that read the
-    // cached scan would count as four more reads.
+    // bytes of every task that reads it, so a pass that re-read cached rows
+    // would not show in the input bytes.
     def fileBytesRead(): Long = FileSystem.getAllStatistics.asScala
       .filter(_.getScheme == "file").map(_.getBytesRead).sum
-    val keys = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(spark.conf.set(_, 1L << 20))
-    sc.addSparkListener(listener)
     val cm = spark.sharedState.cacheManager
     val noCache = cm.isEmpty
     val rdds = sc.getPersistentRDDs.keySet
-    val (bytesRead, splits) = try {
-      val splits = OsmIngest.readOsm(spark, f.toString).rdd.getNumPartitions
-      val before = fileBytesRead()
-      OsmIngest.runEtl(spark, f.toString, new java.io.File(dir, "out").toString)
-      val read = fileBytesRead() - before
-      // one queue delivers events in order: once the marker job's start
-      // arrives, every task of runEtl has been counted
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never seen")
-      (read, splits)
-    } finally {
-      sc.removeSparkListener(listener)
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-    listener.synchronized {
-      assert(inputTasks.values.max > 1, s"input tasks per stage: $inputTasks")
-      // one job: task i parses split i and writes split i of every table
-      assert(jobStages.size === 1, s"jobs started: $jobStages")
-      assert(jobStages.values.head.map(tasks).sum === splits, s"tasks per stage: $tasks")
-    }
+    val splits = OsmIngest.splits(spark, f.toString).length
+    val before = fileBytesRead()
+    val (jobs, ends) = jobsOf(OsmIngest.runEtl(spark, f.toString, new File(dir, "out").toString))
+    val bytesRead = fileBytesRead() - before
+    val inputTasks = ends.count(e => Option(e.taskMetrics).exists(_.inputMetrics.bytesRead > 0))
+    assert(inputTasks > 1, s"input tasks: $inputTasks")
+    // one job: task i parses split i and writes split i of every table
+    assert(jobs.size === 1, s"jobs started: $jobs")
+    val tasks = ends.count(e => jobs.values.head.contains(e.stageId))
+    assert(tasks === splits)
+    assert(tasks === 4)
     assert(bytesRead <= 1.2 * size, s"read $bytesRead bytes of a $size-byte file")
     val scan = OsmIngest.readOsm(spark, f.toString).asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
     assert(cm.lookupCachedData(scan).isEmpty, "the raw scan was cached")
     if (noCache) assert(cm.isEmpty, "runEtl added a CacheManager entry")
     assert(sc.getPersistentRDDs.keySet === rdds, "persisted blocks stayed behind")
+  }
+
+  test("runEtl's tasks report the data rows and bytes they write") {
+    val out = Files.createTempDirectory("graft-etl-metrics").toFile
+    out.deleteOnExit()
+    val (_, ends) = jobsOf(OsmIngest.runEtl(spark, fixture, out.toString))
+    val n = OsmIngest.readNodesRaw(spark, fixture)
+    val w = OsmIngest.readWaysRaw(spark, fixture)
+    val rows = Seq(OsmIngest.nodes(n), OsmIngest.nodeTags(n), OsmIngest.ways(w),
+      OsmIngest.wayTags(w), OsmIngest.wayNodes(w)).map(_.count()).sum
+    assert(ends.map(_.taskMetrics.outputMetrics.recordsWritten).sum === rows)
+    val fileBytes = OsmModel.columnOrder.keys.toSeq.map(t => parts(new File(out, t)).length.toLong).sum
+    assert(ends.map(_.taskMetrics.outputMetrics.bytesWritten).sum === fileBytes)
+  }
+
+  test("a failed job commit leaves the last good tables intact") {
+    val out = Files.createTempDirectory("graft-etl-commit").toFile
+    out.deleteOnExit()
+    OsmIngest.runEtl(spark, fixture, out.toString)
+    val good = tree(out)
+    assert(good.contains("_SUCCESS"))
+    val sc = spark.sparkContext
+    val rdds = sc.getPersistentRDDs.keySet
+    val key = "spark.sql.sources.commitProtocolClass"
+    val saved = spark.conf.getOption(key)
+    // one commit fails before it publishes anything, one after it has
+    // published every new file
+    for (protocol <- Seq(classOf[FailingCommitJob], classOf[FailingAfterCommitJob])) {
+      spark.conf.set(key, protocol.getName)
+      val e = try intercept[Exception](OsmIngest.runEtl(spark, fixture, out.toString))
+        finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(x => String.valueOf(x.getMessage).contains("injected")), e.toString)
+      assert(tree(out) === good, s"${protocol.getSimpleName} changed the published tables")
+    }
+    assert(sc.getPersistentRDDs.keySet === rdds, "persisted blocks stayed behind")
+  }
+
+  test("a retried task writes the same tables as a clean pass") {
+    val dir = Files.createTempDirectory("graft-etl-retry").toFile
+    dir.deleteOnExit()
+    val r = ChildJvm.run("graft.EtlRetryCheck", fixture, dir.toString)
+    assert(r.exitCode === 0, r.err)
+    val Line = """retry thrown=1 same=true parts=(\d+)/(\d+) temporary=false""".r
+    val got = r.out.linesIterator.collectFirst { case Line(clean, retried) => (clean, retried) }
+    assert(got.exists { case (clean, retried) => clean == retried }, r.out + r.err)
+  }
+
+  test("a shaper that is not row-at-a-time is refused") {
+    val none = spark.createDataFrame(java.util.List.of[Row](), OsmXml.schema)
+    val e = intercept[IllegalArgumentException](Shaper(OsmIngest.nodes(none).orderBy("id")))
+    assert(e.getMessage.contains("found Sort"), e.getMessage)
+  }
+}
+
+/** A commit protocol whose job commit fails before it publishes anything. */
+class FailingCommitJob(jobId: String, path: String, dynamic: Boolean)
+    extends HadoopMapReduceCommitProtocol(jobId, path, dynamic) {
+  override def commitJob(job: JobContext, commits: Seq[TaskCommitMessage]): Unit =
+    throw new IOException("injected commitJob failure")
+}
+
+/** A commit protocol whose job commit fails after it has published. */
+class FailingAfterCommitJob(jobId: String, path: String, dynamic: Boolean)
+    extends HadoopMapReduceCommitProtocol(jobId, path, dynamic) {
+  override def commitJob(job: JobContext, commits: Seq[TaskCommitMessage]): Unit = {
+    super.commitJob(job, commits)
+    throw new IOException("injected failure after commitJob")
+  }
+}
+
+/** A commit protocol that fails the first attempt of partition 1 in its
+  * task commit. */
+class FailFirstCommitTask(jobId: String, path: String, dynamic: Boolean)
+    extends HadoopMapReduceCommitProtocol(jobId, path, dynamic) {
+  override def commitTask(tac: TaskAttemptContext): TaskCommitMessage = {
+    val ctx = TaskContext.get()
+    if (ctx.partitionId() == 1 && ctx.attemptNumber() == 0) {
+      FailFirstCommitTask.thrown.incrementAndGet()
+      throw new IOException("injected commitTask failure")
+    }
+    super.commitTask(tac)
+  }
+}
+
+object FailFirstCommitTask {
+  val thrown = new AtomicInteger()
+}
+
+/** Child-JVM half of the retry test: under `local[4,2]` (one retry per
+  * task) a clean pass over `args(0)` and a pass whose partition 1 fails its
+  * first task commit, compared table by table. */
+object EtlRetryCheck {
+  private def parts(table: File): Seq[File] =
+    table.listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName).toSeq
+
+  def main(args: Array[String]): Unit = {
+    val spark = SparkSession.builder().master("local[4,2]").appName("graft-etl-retry")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .getOrCreate()
+    try {
+      val (clean, retried) = (new File(args(1), "clean"), new File(args(1), "retried"))
+      OsmIngest.runEtl(spark, args(0), clean.toString)
+      spark.conf.set("spark.sql.sources.commitProtocolClass", classOf[FailFirstCommitTask].getName)
+      OsmIngest.runEtl(spark, args(0), retried.toString)
+      val tables = OsmModel.columnOrder.keys.toSeq
+      def bytes(out: File, t: String) =
+        parts(new File(out, t)).flatMap(p => Files.readAllBytes(p.toPath).toSeq)
+      val same = tables.forall(t => bytes(clean, t) == bytes(retried, t))
+      val counts = Seq(clean, retried).map(o => tables.map(t => parts(new File(o, t)).length).sum)
+      val temporary = Files.walk(retried.toPath).iterator().asScala
+        .exists(_.getFileName.toString == "_temporary")
+      println(s"retry thrown=${FailFirstCommitTask.thrown.get} same=$same " +
+        s"parts=${counts.mkString("/")} temporary=$temporary")
+    } finally spark.stop()
   }
 }
