@@ -65,8 +65,12 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[(String, String), Resolved]()
 
   /** The parquet file or directory at `path` (a literal path, not a glob),
-    * resolved once per session — see the relation cache above. */
+    * resolved once per session — see the relation cache above. Installs
+    * graft's planner additions into `spark` first (`GraftExtensions`): a
+    * session perfbench or a caller built plans a query over a one-split
+    * table as one task (`SingleTaskPlan`), as the engine's own would. */
   private[graft] def parquet(spark: SparkSession, path: String): DataFrame = {
+    graft.plans.GraftExtensions.install(spark)
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val st = fs.getFileStatus(p)

@@ -1,11 +1,16 @@
 package graft
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. The optional
   * third argument restricts the dump (and oracle_sql.json) to the named
   * queries; an unknown name is refused, since an empty dump would
-  * compare as a silent 0 pass, 0 fail. Each query's wall time goes to
-  * stderr as `[verify] <name> <seconds>s`. */
+  * compare as a silent 0 pass, 0 fail. Each query's wall time and the
+  * Spark jobs it started (its parquet write included) go to stderr as
+  * `[verify] <name> <seconds>s <n> jobs`. */
 object Verify {
   val Usage = "Usage: graft.Verify <sfDir> <outDir> [name,name,...]"
 
@@ -30,6 +35,7 @@ object Verify {
     val spark = Session.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    val jobs = new JobCounter(spark.sparkContext)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -39,9 +45,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      val s = (System.nanoTime() - t0) / 1e9
       // one line per query, so log lines can be attributed by time
-      System.err.println(
-        f"[verify] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
+      System.err.println(f"[verify] $name $s%.2fs ${jobs.take()} jobs")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -60,5 +66,30 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+}
+
+/** Counts the Spark jobs started on `sc` (Verify's per-query counts, and
+  * the tests' `jobsStarted`). Listener events arrive asynchronously but in
+  * order, so once a marker job's start has been delivered, every job
+  * started before it has been counted. */
+private[graft] final class JobCounter(sc: SparkContext) extends SparkListener {
+  private val marker = "graft-job-counter-marker"
+  private val started = new AtomicInteger()
+  @volatile private var markerSeen = new CountDownLatch(1)
+  sc.addSparkListener(this)
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+      markerSeen.countDown()
+    else started.incrementAndGet()
+
+  /** The jobs started since the last call (the first call: since creation). */
+  def take(): Int = {
+    val seen = new CountDownLatch(1)
+    markerSeen = seen
+    sc.setJobGroup(marker, marker)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    if (!seen.await(60, TimeUnit.SECONDS)) -1 else started.getAndSet(0)
   }
 }

@@ -4,7 +4,7 @@ import java.io.IOException
 import java.text.SimpleDateFormat
 import java.util.{Date, Locale, UUID}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapred.JobID
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.lib.output.{FileOutputCommitter, FileOutputFormat}
@@ -75,14 +75,19 @@ object OsmCsv {
     * as its output metrics.
     *
     * All or nothing: one commit protocol rooted at `outDir` covers every
-    * table. Once every task has committed, the tables' published files and
-    * `_SUCCESS` move into `outDir/_superseded-<uuid>/`; the job commit
+    * table. Once every task has committed, `_SUCCESS` and then the tables'
+    * published files move into `outDir/_superseded-<jobId>/`; the job commit
     * publishes the new files, `_SUCCESS` is written, and only then are the
     * superseded files deleted. A failure at any step aborts the tasks and
     * the job, deletes any new file that reached a table and moves the
     * superseded files back, so `outDir` is left as it was, with no
     * `_temporary` behind. `_SUCCESS` is written to `outDir`, not to each
     * table directory.
+    *
+    * A process that dies inside the job commit leaves the aside directory
+    * behind, and the next pass resolves it first ([[recover]]). The aside
+    * directory is named after the committer's job id, which every new part
+    * file's name carries, so the dead pass's files can be told apart.
     *
     * The Hadoop conf travels in the task closure as its plain entries,
     * which each task turns back into a `Configuration`. Broadcasting a
@@ -101,18 +106,20 @@ object OsmCsv {
     val sinks = tables.map { case (t, shaper) =>
       (t, csv.prepareWrite(spark, job, options(pythonCsvDialect = false), shaper.schema), shaper)
     }
+    val jobId = UUID.randomUUID().toString
     val committer = FileCommitProtocol.instantiate(
       spark.conf.get("spark.sql.sources.commitProtocolClass"),
-      UUID.randomUUID().toString, outDir, dynamicPartitionOverwrite = false)
+      jobId, outDir, dynamicPartitionOverwrite = false)
     val tracker = new SimpleDateFormat("yyyyMMddHHmmss", Locale.US).format(new Date)
     val fs = new Path(outDir).getFileSystem(job.getConfiguration)
     def published() = tables.map(t => new Path(outDir, t._1)).filter(fs.exists)
       .flatMap(d => fs.listStatus(d).map(_.getPath))
+    recover(fs, new Path(outDir), tables.map(_._1))
     // Listed before the job: with either committer algorithm the new files
     // are the ones not in this list.
     val old = published()
     val success = new Path(outDir, "_SUCCESS")
-    val superseded = new Path(outDir, s"_superseded-${UUID.randomUUID()}")
+    val superseded = new Path(outDir, s"$Aside$jobId")
     val moved = mutable.ArrayBuffer[(Path, Path)]()
 
     committer.setupJob(job)
@@ -171,8 +178,10 @@ object OsmCsv {
       val scan = new FileScanRDD(spark, new OsmXml.SplitReader(_, hadoopConf(), fields),
         if (splits.isEmpty) Seq(FilePartition(0, Array.empty)) else splits, OsmXml.schema)
       val commits = spark.sparkContext.runJob(scan, writeSplit _)
-      val aside = (old.map(p => p -> new Path(new Path(superseded, p.getParent.getName), p.getName)) :+
-        (success -> new Path(superseded, success.getName))).filter(m => fs.exists(m._1))
+      // `_SUCCESS` first: while it is in `outDir`, nothing has moved aside
+      val aside = ((success -> new Path(superseded, success.getName)) +:
+        old.map(p => p -> new Path(new Path(superseded, p.getParent.getName), p.getName)))
+        .filter(m => fs.exists(m._1))
       aside.map(_._2.getParent).distinct.foreach(fs.mkdirs)
       for ((p, to) <- aside) {
         if (!fs.rename(p, to)) throw new IOException(s"cannot move $p to $to")
@@ -186,13 +195,52 @@ object OsmCsv {
         def attempt(step: => Unit): Unit = try step catch { case e: Throwable => t.addSuppressed(e) }
         attempt(committer.abortJob(job))
         attempt(published().filterNot(old.contains).foreach(fs.delete(_, true)))
-        attempt(if (moved.map { case (p, to) => fs.rename(to, p) }.forall(identity)) fs.delete(superseded, true))
+        attempt(if (moved.reverse.map { case (p, to) => fs.rename(to, p) }.forall(identity))
+          fs.delete(superseded, true))
         throw t
     }
     // the new tables are published: a failure here leaves only the old
     // files behind, under `superseded`
     fs.delete(superseded, true)
   }
+
+  /** Prefix of the directory a pass moves the superseded tables into. */
+  private val Aside = "_superseded-"
+
+  /** Resolves what a pass that died inside its job commit left in
+    * `outDir`: an aside directory `_superseded-<jobId>`, and perhaps a
+    * `_temporary` staging directory.
+    *  - No `_SUCCESS`: the pass died before its tables were complete. Its
+    *    files (those of `tables` whose names carry `jobId`) are deleted, the
+    *    superseded files and `_SUCCESS` move back, and its `_temporary` is
+    *    deleted, since the next job commit would publish the task output
+    *    left in it.
+    *  - `_SUCCESS`: the new tables were published and only the deletion of
+    *    the superseded files was left, so the aside directory is deleted.
+    * A pass moves `_SUCCESS` aside before any table file and this moves it
+    * back after every one, so a crash while files move either way leaves
+    * a state that the next pass resolves the same way. */
+  private def recover(fs: FileSystem, outDir: Path, tables: Seq[String]): Unit =
+    if (fs.exists(outDir)) {
+      val leftovers = fs.listStatus(outDir).map(_.getPath).filter(_.getName.startsWith(Aside))
+      for (aside <- leftovers) {
+        if (!fs.exists(new Path(outDir, "_SUCCESS"))) {
+          val jobId = aside.getName.stripPrefix(Aside)
+          tables.map(new Path(outDir, _)).filter(fs.exists)
+            .flatMap(d => fs.listStatus(d).map(_.getPath))
+            .filter(_.getName.contains(jobId)).foreach(fs.delete(_, false))
+          fs.delete(new Path(outDir, FileOutputCommitter.PENDING_DIR_NAME), true)
+          def moveBack(from: Path, to: Path): Unit =
+            if (fs.getFileStatus(from).isDirectory) {
+              fs.mkdirs(to)
+              fs.listStatus(from).foreach(f => moveBack(f.getPath, new Path(to, f.getPath.getName)))
+            } else if (!fs.rename(from, to)) throw new IOException(s"cannot move $from to $to")
+          fs.listStatus(aside).sortBy(_.getPath.getName == "_SUCCESS")
+            .foreach(f => moveBack(f.getPath, new Path(outDir, f.getPath.getName)))
+        }
+        fs.delete(aside, true)
+      }
+    }
 
   def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read

@@ -1,11 +1,10 @@
 package graft.osm
 
 import graft.functions.Cleaners
+import graft.plans.{GraftExtensions, SingleTaskPlan}
 import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, classic}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.PartitionedFileUtil
 import org.apache.spark.sql.execution.datasources.{DataSource, FilePartition, HadoopFsRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -71,9 +70,14 @@ object OsmIngest {
     StructField("tag", tagArray),
     StructField("nd", ArrayType(StructType(Seq(StructField("_ref", StringType)))))))
 
-  /** One scan of the whole file: every `<node>` and `<way>` (`OsmXml.schema`). */
-  def readOsm(spark: SparkSession, path: String): DataFrame =
+  /** One scan of the whole file: every `<node>` and `<way>` (`OsmXml.schema`).
+    * Installs graft's planner additions into `spark` first
+    * (`GraftExtensions`), so a Readme query over a one-split extract runs
+    * as one task (`SingleTaskPlan`) in any session. */
+  def readOsm(spark: SparkSession, path: String): DataFrame = {
+    GraftExtensions.install(spark)
     spark.read.format(classOf[OsmXml].getName).schema(OsmXml.schema).load(path)
+  }
 
   private def ofKind(raw: DataFrame, kind: String, schema: StructType): DataFrame =
     raw.filter(col("kind") === kind).select(schema.fieldNames.map(col): _*)
@@ -168,9 +172,7 @@ object OsmIngest {
     val size = math.max(1L, math.min(
       JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes")),
       (files.map(_.getLen).sum + cores - 1) / cores))
-    FilePartition.getFilePartitions(spark, files.flatMap(f => PartitionedFileUtil.splitFiles(
-      f, f.getPath, rel.fileFormat.isSplitable(spark, rel.options, f.getPath), size,
-      InternalRow.empty)), size)
+    SingleTaskPlan.filePartitions(spark, rel, files, size)
   }
 
   /** The full ETL (EP1, py:206–236): one XML pass, 5 CSV tables, the

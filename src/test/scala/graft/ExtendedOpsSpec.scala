@@ -112,15 +112,18 @@ class ExtendedOpsSpec extends SparkTestBase {
   }
 
   test("asOf plan: exactly one exchange (single shuffle by key)") {
-    val ev = Tables.t(spark, Sf, "events")
-    val df = AsOfJoin.asOf(
-      ev.filter(col("event_type") === "purchase").select("event_id", "user_id", "ts"),
-      ev.filter(col("event_type") === "click"),
-      "user_id", "user_id", "ts", "ts", Seq("event_id" -> "click_id"))
-    df.collect()
-    // AQE's toString echoes the plan twice (Final + Initial) — count only
-    // the final plan section
-    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    // the plan of a multi-split events table (one split is one task)
+    val p = multiSplit() {
+      val ev = Tables.t(spark, Sf, "events")
+      val df = AsOfJoin.asOf(
+        ev.filter(col("event_type") === "purchase").select("event_id", "user_id", "ts"),
+        ev.filter(col("event_type") === "click"),
+        "user_id", "user_id", "ts", "ts", Seq("event_id" -> "click_id"))
+      df.collect()
+      // AQE's toString echoes the plan twice (Final + Initial) — count only
+      // the final plan section
+      df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    }
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
     assert(exchanges === 1, p)
   }

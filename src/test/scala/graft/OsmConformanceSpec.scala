@@ -48,15 +48,10 @@ class OsmConformanceSpec extends SparkTestBase {
   }
 
   test("... and the same tables when the file is read in 8 kB splits") {
-    val keys = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(spark.conf.set(_, 8192L))
-    try {
+    withConf("spark.sql.files.maxPartitionBytes" -> "8192",
+        "spark.sql.files.openCostInBytes" -> "8192") {
       assert(OsmIngest.readOsm(spark, resource("fixture.osm")).rdd.getNumPartitions > 1)
       conforms()
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -87,26 +87,23 @@ class OsmEtlSpec extends SparkTestBase {
     // runEtl sizes its own splits (one per core, at most maxPartitionBytes),
     // so these settings make Spark's sizing give the fixture runEtl's 16 kB
     // splits; the last one holds no table's row and writes no file.
-    val keys = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(spark.conf.set(_, 16384L))
-    try for (xml <- Seq(fixture, empty.toString)) {
-      val etl = new File(dir, s"etl-${new File(xml).getName}")
-      OsmIngest.runEtl(spark, xml, etl.toString)
-      val n = OsmIngest.readNodesRaw(spark, xml)
-      val w = OsmIngest.readWaysRaw(spark, xml)
-      for ((table, df) <- Seq("nodes" -> OsmIngest.nodes(n), "node_tags" -> OsmIngest.nodeTags(n),
-             "ways" -> OsmIngest.ways(w), "way_tags" -> OsmIngest.wayTags(w),
-             "way_nodes" -> OsmIngest.wayNodes(w))) {
-        val one = new File(dir, s"$table-${new File(xml).getName}")
-        OsmCsv.write(df, one.toString, table)
-        val got = parts(new File(etl, table))
-        assert(got.nonEmpty, s"$xml $table")
-        assert(got === parts(one), s"$xml $table")
+    withConf("spark.sql.files.maxPartitionBytes" -> "16384",
+        "spark.sql.files.openCostInBytes" -> "16384") {
+      for (xml <- Seq(fixture, empty.toString)) {
+        val etl = new File(dir, s"etl-${new File(xml).getName}")
+        OsmIngest.runEtl(spark, xml, etl.toString)
+        val n = OsmIngest.readNodesRaw(spark, xml)
+        val w = OsmIngest.readWaysRaw(spark, xml)
+        for ((table, df) <- Seq("nodes" -> OsmIngest.nodes(n), "node_tags" -> OsmIngest.nodeTags(n),
+               "ways" -> OsmIngest.ways(w), "way_tags" -> OsmIngest.wayTags(w),
+               "way_nodes" -> OsmIngest.wayNodes(w))) {
+          val one = new File(dir, s"$table-${new File(xml).getName}")
+          OsmCsv.write(df, one.toString, table)
+          val got = parts(new File(etl, table))
+          assert(got.nonEmpty, s"$xml $table")
+          assert(got === parts(one), s"$xml $table")
+        }
       }
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -206,19 +203,79 @@ class OsmEtlSpec extends SparkTestBase {
     assert(good.contains("_SUCCESS"))
     val sc = spark.sparkContext
     val rdds = sc.getPersistentRDDs.keySet
-    val key = "spark.sql.sources.commitProtocolClass"
-    val saved = spark.conf.getOption(key)
     // one commit fails before it publishes anything, one after it has
     // published every new file
     for (protocol <- Seq(classOf[FailingCommitJob], classOf[FailingAfterCommitJob])) {
-      spark.conf.set(key, protocol.getName)
-      val e = try intercept[Exception](OsmIngest.runEtl(spark, fixture, out.toString))
-        finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      val e = withConf("spark.sql.sources.commitProtocolClass" -> protocol.getName) {
+        intercept[Exception](OsmIngest.runEtl(spark, fixture, out.toString))
+      }
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(x => String.valueOf(x.getMessage).contains("injected")), e.toString)
       assert(tree(out) === good, s"${protocol.getSimpleName} changed the published tables")
     }
     assert(sc.getPersistentRDDs.keySet === rdds, "persisted blocks stayed behind")
+  }
+
+  test("a pass after one that died while publishing restores or finishes it") {
+    val out = Files.createTempDirectory("graft-etl-crash").toFile
+    out.deleteOnExit()
+    OsmIngest.runEtl(spark, fixture, out.toString)
+    val tables = OsmModel.columnOrder.keys.toSeq
+    val goodParts = tables.map(t => parts(new File(out, t)))
+    def put(rel: String, text: String): Unit = {
+      val f = new File(out, rel)
+      f.getParentFile.mkdirs()
+      Files.writeString(f.toPath, text)
+    }
+    /** `out` as a pass with a new job id left it when it died: while it
+      * moved the old files aside (`_SUCCESS` first), inside its job commit,
+      * or after it wrote `_SUCCESS`. Returns that id. */
+    def died(when: String): String = {
+      val dead = java.util.UUID.randomUUID().toString
+      val aside = s"_superseded-$dead"
+      // a file moves with its checksum, as a Hadoop rename moves it
+      def moveAside(rel: String): Unit = {
+        val f = new File(out, rel)
+        for (from <- Seq(f, new File(f.getParentFile, s".${f.getName}.crc")) if from.exists) {
+          val to = new File(out, s"$aside/${out.toPath.relativize(from.toPath)}")
+          to.getParentFile.mkdirs()
+          Files.move(from.toPath, to.toPath)
+        }
+      }
+      val files = tree(out).keys.toSeq.filterNot(new File(_).getName.startsWith(".")).sorted
+      when match {
+        case "moving" =>
+          ("_SUCCESS" +: files.filter(_ != "_SUCCESS").take(3)).foreach(moveAside)
+        case "committing" =>
+          files.foreach(moveAside)
+          // some task output published, some still staged
+          tables.foreach(t => put(s"$t/part-00000-$dead-c000.csv", "half\r\n"))
+          put(s"_temporary/0/task_20260101000000_0001_m_000001/nodes/part-00001-$dead-c000.csv",
+            "staged\r\n")
+        case "published" =>
+          // the new tables and _SUCCESS are in place; the old files are aside
+          tables.foreach(t => put(s"$aside/$t/part-00000-stale-c000.csv", "stale\r\n"))
+      }
+      dead
+    }
+    for (when <- Seq("moving", "committing", "published")) {
+      // a pass that fails its own commit leaves the recovered tables
+      val good = tree(out)
+      died(when)
+      withConf("spark.sql.sources.commitProtocolClass" -> classOf[FailingCommitJob].getName) {
+        intercept[Exception](OsmIngest.runEtl(spark, fixture, out.toString))
+      }
+      assert(tree(out) === good, when)
+      // a pass that succeeds replaces them, and nothing of the dead pass is left
+      val dead = died(when)
+      OsmIngest.runEtl(spark, fixture, out.toString)
+      val after = tree(out)
+      assert(tables.map(t => parts(new File(out, t))) === goodParts, when)
+      assert(after.contains("_SUCCESS"))
+      assert(!after.keys.exists(k => k.contains(dead) || k.startsWith("_superseded-") ||
+        k.startsWith("_temporary")), after.keys)
+      assert(after.size === good.size, after.keys)
+    }
   }
 
   test("a retried task writes the same tables as a clean pass") {

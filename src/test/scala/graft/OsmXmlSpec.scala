@@ -75,16 +75,9 @@ class OsmXmlSpec extends SparkTestBase {
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
   /** Runs `body` with Spark's file splits at most `bytes` long. */
-  private def withSplitBytes[T](bytes: Long)(body: => T): T = {
-    val keys = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(spark.conf.set(_, bytes))
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private def withSplitBytes[T](bytes: Long)(body: => T): T =
+    withConf("spark.sql.files.maxPartitionBytes" -> bytes.toString,
+      "spark.sql.files.openCostInBytes" -> bytes.toString)(body)
 
   private def nullRow(kind: String) = Row(kind +: Seq.fill(10)(null): _*).toString
 

@@ -12,13 +12,20 @@ class PlanSpec extends SparkTestBase {
   private def q(name: String): DataFrame =
     SparkEntry.queries(name)(spark, Sf)
 
-  private def planOf(df: DataFrame): String = {
+  /** `df`'s executed plan, built and run with every table read in several
+    * splits (`multiSplit`). These gates pin the distributed shape a query
+    * keeps at scale; over the one-split sf0.001 tables `SingleTaskPlan`
+    * would plan most of them as one task instead. */
+  private def planOf(df: => DataFrame): String = multiSplit()(oneSplitPlanOf(df))
+
+  /** `df`'s executed plan over the tables' own splits. */
+  private def oneSplitPlanOf(df: DataFrame): String = {
     df.collect() // ensure AQE finalizes the plan
     df.queryExecution.executedPlan.toString
   }
 
   test("q01: filters and projection reach the parquet scan") {
-    val p = planOf(q("q01_scan_filter_project"))
+    val p = oneSplitPlanOf(q("q01_scan_filter_project"))
     assert(p.contains("PushedFilters: ["), p)
     assert(p.contains("GreaterThan(l_quantity,45.0)"), p)
     // column pruning: the 11-column table reads only the 4 projected columns
@@ -65,6 +72,31 @@ class PlanSpec extends SparkTestBase {
     val q07 = facts(q("q07_join_star"))
     assert(q07.count(_.contains("BroadcastHashJoin")) >= 2, q07)
     assert(facts(q("q09_join_anti")).exists(_.contains("LeftAnti")))
+  }
+
+  /** `name`'s executed plan over the one-split sf0.001 tables, and the
+    * jobs its collect starts. */
+  private def oneSplitRun(name: String): (String, Int) = {
+    val df = q(name)
+    val jobs = jobsStarted(df.collect())
+    (df.queryExecution.executedPlan.toString, jobs)
+  }
+
+  test("q01/q03/q12/q28/q29: over one-split tables, no exchange and one job") {
+    for (name <- Seq("q01_scan_filter_project", "q03_agg_pricing_summary",
+        "q12_window_rank", "q28_key_split", "q29_phone_norm")) {
+      val (p, jobs) = oneSplitRun(name)
+      assert(!p.contains("Exchange"), s"$name\n$p")
+      assert(jobs === 1, s"$name\n$p")
+    }
+  }
+
+  test("q07: over one-split tables, one job plus its two broadcasts") {
+    val (p, jobs) = oneSplitRun("q07_join_star")
+    assert("(?<!Broadcast)Exchange".r.findFirstIn(p).isEmpty, p)
+    val runPlan = p.split("== Initial Plan ==").head
+    assert("BroadcastExchange".r.findAllIn(runPlan).size === 2, p)
+    assert(jobs === 3, p)
   }
 
   test("q05: top-k plans as TakeOrderedAndProject, not a full sort") {
@@ -248,13 +280,13 @@ class PlanSpec extends SparkTestBase {
     // co-partitioned: exactly one exchange per side feeding the merge
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
     // a second run re-installs idempotently: the session holds the planner
-    // strategy once, and graft adds no optimizer rule to it
+    // strategy once, and graft's one optimizer rule once
     q("q91_asof_merge_join").collect()
     val exp = spark.experimental
     assert(exp.extraStrategies.count(_ == graft.plans.AsOfJoinStrategy) === 1,
       exp.extraStrategies)
-    assert(!exp.extraOptimizations.exists(_.getClass.getName.startsWith("graft.")),
-      exp.extraOptimizations)
+    assert(exp.extraOptimizations.filter(_.getClass.getName.startsWith("graft.")) ===
+      Seq(graft.plans.SingleTaskPlan), exp.extraOptimizations)
   }
 
   test("entry flagship broadcasts dims and aggregates exactly once per region") {
@@ -791,48 +823,50 @@ class PlanSpec extends SparkTestBase {
   test("q251/q257: the LOADED SQ8 handle serves from the persisted code " +
     "table — corpus side never re-encoded; the filtered variant's " +
     "allow-list semi-join sits BELOW the candidate cut") {
-    import graft.operators.Sq8Index
-    val emb = Tables.t(spark, Sf, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("graft-plan-sq8")
-    dir.toFile.deleteOnExit()
-    val built = Sq8Index.build(emb, "vec_id", "embedding", dim = 64)
-    built.save(dir.toString)
-    built.release()
-    val loaded = Sq8Index.load(spark, dir.toString, emb)
-    val served = loaded.query(emb.filter(col("vec_id") < 10), k = 5,
-      candidates = 100)
-    served.collect()
-    val p = served.queryExecution.executedPlan.toString
-    // the q198 funnel shape survives the artifact round-trip: bounded
-    // encoded queries broadcast over the corpus code stream
-    assert(p.contains("BroadcastNestedLoopJoin BuildRight"), p)
-    // the corpus side between the join and the query-side broadcast is
-    // the persisted table — the literal-bound div/clamp encode lanes
-    // (`least(greatest(`) must NOT reappear there (they'd mean the load
-    // path re-encodes the corpus per query)
-    val corpusSide = p.substring(p.indexOf("BroadcastNestedLoopJoin"))
-      .split("BroadcastExchange").head
-    assert(!corpusSide.contains("least(greatest("), p)
-    assert(corpusSide.contains("InMemoryTableScan"), p)
-    // map-side candidate cut, bounded-candidate rerank build side
-    assert("WindowGroupLimit \\[qid#\\d+L\\], \\[adist#\\d+L[\\s\\S]{0,120}100, Partial"
-      .r.findFirstIn(p).isDefined, p)
-    // filtered serving: the allow-list admission join must run BEFORE
-    // the WindowGroupLimit cut — budget spent on admissible vectors
-    val filtered = loaded.queryFiltered(emb.filter(col("vec_id") < 10),
-      emb.filter(col("label") < 5).select("vec_id"), k = 5,
-      candidates = 100)
-    filtered.collect()
-    val pf = filtered.queryExecution.executedPlan.toString
-    val semiAt = "Join [A-Za-z]*,? ?LeftSemi|LeftSemi".r
-      .findFirstMatchIn(pf).map(_.start)
-    val cutAt = "WindowGroupLimit".r.findFirstMatchIn(pf).map(_.start)
-    assert(semiAt.isDefined && cutAt.isDefined, pf)
-    // plan text prints top-down: the cut appears ABOVE (before) the
-    // semi-join that feeds it
-    assert(cutAt.get < semiAt.get,
-      s"allow-list semi-join is not below the candidate cut:\n$pf")
-    loaded.release()
+    multiSplit() {
+      import graft.operators.Sq8Index
+      val emb = Tables.t(spark, Sf, "embeddings")
+      val dir = java.nio.file.Files.createTempDirectory("graft-plan-sq8")
+      dir.toFile.deleteOnExit()
+      val built = Sq8Index.build(emb, "vec_id", "embedding", dim = 64)
+      built.save(dir.toString)
+      built.release()
+      val loaded = Sq8Index.load(spark, dir.toString, emb)
+      val served = loaded.query(emb.filter(col("vec_id") < 10), k = 5,
+        candidates = 100)
+      served.collect()
+      val p = served.queryExecution.executedPlan.toString
+      // the q198 funnel shape survives the artifact round-trip: bounded
+      // encoded queries broadcast over the corpus code stream
+      assert(p.contains("BroadcastNestedLoopJoin BuildRight"), p)
+      // the corpus side between the join and the query-side broadcast is
+      // the persisted table — the literal-bound div/clamp encode lanes
+      // (`least(greatest(`) must NOT reappear there (they'd mean the load
+      // path re-encodes the corpus per query)
+      val corpusSide = p.substring(p.indexOf("BroadcastNestedLoopJoin"))
+        .split("BroadcastExchange").head
+      assert(!corpusSide.contains("least(greatest("), p)
+      assert(corpusSide.contains("InMemoryTableScan"), p)
+      // map-side candidate cut, bounded-candidate rerank build side
+      assert("WindowGroupLimit \\[qid#\\d+L\\], \\[adist#\\d+L[\\s\\S]{0,120}100, Partial"
+        .r.findFirstIn(p).isDefined, p)
+      // filtered serving: the allow-list admission join must run BEFORE
+      // the WindowGroupLimit cut — budget spent on admissible vectors
+      val filtered = loaded.queryFiltered(emb.filter(col("vec_id") < 10),
+        emb.filter(col("label") < 5).select("vec_id"), k = 5,
+        candidates = 100)
+      filtered.collect()
+      val pf = filtered.queryExecution.executedPlan.toString
+      val semiAt = "Join [A-Za-z]*,? ?LeftSemi|LeftSemi".r
+        .findFirstMatchIn(pf).map(_.start)
+      val cutAt = "WindowGroupLimit".r.findFirstMatchIn(pf).map(_.start)
+      assert(semiAt.isDefined && cutAt.isDefined, pf)
+      // plan text prints top-down: the cut appears ABOVE (before) the
+      // semi-join that feeds it
+      assert(cutAt.get < semiAt.get,
+        s"allow-list semi-join is not below the candidate cut:\n$pf")
+      loaded.release()
+    }
   }
 
   test("semantic dedup: the pair stage rides the cid equi-join (never a " +

@@ -34,12 +34,16 @@ class ProfileSketchSpec extends SparkTestBase {
   }
 
   test("percentilesApprox production path: one two-phase agg, no per-group sort") {
-    val df = graft.operators.Profile.percentilesApprox(
-      Tables.t(spark, Sf, "documents"), "source", "n_chars", "doc_id",
-      Seq(50, 90, 99))
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
+    // the plan a multi-split corpus gets: another suite may have cached the
+    // documents table in the shared session, as one partition
+    spark.sharedState.cacheManager.clearCache()
+    val p = multiSplit() {
+      val df = graft.operators.Profile.percentilesApprox(
+        Tables.t(spark, Sf, "documents"), "source", "n_chars", "doc_id",
+        Seq(50, 90, 99))
+      df.collect()
+      df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    }
     // the production sketch must never rank a group: no Window, no Sort
     // below the aggregation — q115's exact rank formula is the oracle
     // twin, not the path that runs at 100 TB
